@@ -31,6 +31,7 @@ from pyspark.sql.types import StructType
 
 from postgres_es_cdc_spark.cdc.generate import (
     orders_cdc_events_typed, orders_cdc_value_schema)
+from postgres_es_cdc_spark.streaming.store import SnapshotStore
 
 
 def scd2_history(events: DataFrame, schema: StructType,
@@ -206,19 +207,32 @@ class Scd2Sink:
       * a key whose history ends closed (deleted) contributes no
         synthetic INSERT, so late UPDATEs stay orphan no-ops.
 
+    Commit: the history is the one frame of a SnapshotStore — each
+    batch lands a new version dir and repoints the manifest, so a
+    failed write leaves the prior history current and whole (an
+    in-place overwrite deletes it before the job runs), and a
+    committed batch id is a no-op.
+
     Scale: the per-batch fold shuffles only the micro-batch plus one
     synthetic row per LIVE key; closed history is append-only (with a
     table format it'd be a partition append, not a rewrite).
     """
 
     def __init__(self, path: str, schema: StructType, key: str = "id"):
-        self.path = path
+        self._base = path
+        self._st = SnapshotStore(path)
         self.schema = schema
         self.key = key
 
-    def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        import os
+    @property
+    def path(self) -> str:
+        """The committed history dir (``path`` itself before the first
+        commit)."""
+        return self._st.meta()[self._st.frame] or self._base
 
+    def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
+        if self._st.applied(batch_id):
+            return                      # committed replay: no-op
         spark = batch.sparkSession
         key, schema = self.key, self.schema
         cols = [f.name for f in schema.fields if f.name != key]
@@ -227,8 +241,8 @@ class Scd2Sink:
         ev = ev.withColumn("_k", F.col(f"payload.{key}"))
 
         closed = current = None
-        if os.path.exists(self.path):
-            hist = spark.read.parquet(self.path)
+        hist = self._st.state(spark)
+        if hist is not None:
             high = (hist.groupBy(key)
                         .agg(F.max(F.coalesce("valid_to", "valid_from"))
                               .alias("_hw"))
@@ -261,9 +275,7 @@ class Scd2Sink:
         new_hist = (closed.unionByName(versions)
                     if closed is not None else versions)
 
-        tmp = self.path + ".tmp"
-        new_hist.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(self.path)
+        self._st.replace(new_hist, batch_id)
 
     def writer(self):
         return self.apply_batch

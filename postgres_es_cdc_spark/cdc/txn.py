@@ -92,10 +92,12 @@ class TxnUpsertSink(UpsertSink):
 
     Per micro-batch: (pending buffer ∪ batch) splits into committed
     events (folded into state via the parent's merge) and still-pending
-    ones (written back to the buffer). A transaction spanning
-    micro-batches applies atomically in the batch where its COMMIT
-    arrives; a crash after any batch leaves the sink at the prior
-    transaction boundary — the test pins exactly that."""
+    ones (landed as the new buffer). The tables, the buffer, the
+    caller's decode ``context`` and the batch id commit in ONE
+    VersionedStore repoint, so a transaction spanning micro-batches
+    applies atomically in the batch where its COMMIT arrives, and a
+    crash at any point of a batch leaves the sink — buffer and context
+    included — at the prior transaction boundary."""
 
     PENDING = "_pending_txn"
 
@@ -105,31 +107,33 @@ class TxnUpsertSink(UpsertSink):
         super().__init__(base_dir, schemas, key, order_col)
         self.txn_col = txn_col
 
-    def _pending_path(self) -> str:
-        # Manifest-resolved, like the state tables (crash-safe swap).
-        return self.table_path(self.PENDING)
-
-    def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
+    def apply_batch(self, batch: DataFrame, batch_id: int,
+                    context: dict | None = None) -> None:
+        """``context``: what the caller must resume with after a
+        restart (WalStreamApply's relation cache and open xid),
+        committed with the batch and read back from ``meta()``."""
+        if self.applied(batch_id):
+            return                      # committed replay: no-op
         spark = batch.sparkSession
-        pending_path = self._pending_path()
+        pending_path = self.table_path(self.PENDING)
         events = batch
         if os.path.exists(pending_path):
             events = events.unionByName(spark.read.parquet(pending_path))
         ready = committed_events(events, self.txn_col)
         still_pending = pending_events(events, self.txn_col)
-        for name in self.schemas:
-            self._merge(spark, name,
-                        ready.filter(F.col("tableName") == name), batch_id)
+        frames = {name: self._merge(spark, name,
+                                    ready.filter(F.col("tableName") == name),
+                                    batch_id)
+                  for name in self.schemas}
         # Downstream forwarding hook (e.g. the ES bulk executor): runs
-        # AFTER the state merges and BEFORE the pending-buffer commit,
-        # so a crash in between replays the batch — at-least-once with
-        # the keyed idempotent request shapes.
+        # AFTER the state merges land and BEFORE the commit, so a crash
+        # in between replays the batch — at-least-once with the keyed
+        # idempotent request shapes.
         self._on_committed(ready, batch_id)
-        # New versioned buffer + atomic manifest repoint (the write reads
-        # the OLD buffer, which stays in place until the commit).
-        new_dir = self._next_dir(self.PENDING, batch_id)
-        still_pending.write.mode("overwrite").parquet(new_dir)
-        self._commit(self.PENDING, new_dir)
+        # the new buffer lands beside the OLD one, which stays current
+        # (and is read by this write) until the commit
+        frames.update(self.land({self.PENDING: still_pending}, batch_id))
+        self.commit(batch_id, {**frames, "context": context})
 
     def _on_committed(self, ready: DataFrame, batch_id: int) -> None:
         """Per-batch hook over the committed (safe-to-apply) events —

@@ -203,8 +203,9 @@ class EsForwardingTxnSink(TxnUpsertSink):
 
     Implementation: a TxnUpsertSink whose `_on_committed` hook renders
     `es_bulk_requests` over the batch's committed events and posts them
-    via `execute_es_requests`. The hook runs after the state merges and
-    before the pending-buffer commit, so a crash in between replays the
+    via `execute_es_requests`. The hook runs after the state merges land
+    and before the batch's one commit (tables, pending buffer, decode
+    context and batch id together), so a crash in between replays the
     batch — at-least-once, safe because every request shape is keyed
     and idempotent (index-by-id, putAll-by-id, delete-by-id).
 

@@ -26,8 +26,6 @@ fire-and-forget publish utils.go:84-89).
 
 from __future__ import annotations
 
-import json
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +33,7 @@ from pyspark.sql import functions as F
 
 from postgres_es_cdc_spark.sources.snapshot import SnapshotSource
 from postgres_es_cdc_spark.streaming.pipeline import UpsertSink
+from postgres_es_cdc_spark.streaming.store import VersionedStore
 
 START_OFFSET = -1  # below every real offset; snapshot rows live here too
 
@@ -42,21 +41,20 @@ START_OFFSET = -1  # below every real offset; snapshot rows live here too
 @dataclass
 class OffsetCheckpoint:
     """Durable high-water mark (the LSN stand-in), committed only after
-    a successful sink merge."""
+    a successful sink merge: a VersionedStore whose replay gate is the
+    offset itself."""
 
     path: str
 
+    def __post_init__(self):
+        self._store = VersionedStore(self.path,
+                                     {"last_batch_id": START_OFFSET})
+
     def read(self) -> int:
-        if not os.path.exists(self.path):
-            return START_OFFSET
-        with open(self.path) as f:
-            return int(json.load(f)["last_offset"])
+        return self._store.meta()["last_batch_id"]
 
     def commit(self, offset: int) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"last_offset": offset}, f)
-        os.replace(tmp, self.path)  # atomic on POSIX
+        self._store.commit(offset, {})
 
 
 class IncrementalSource:
@@ -94,6 +92,8 @@ def poll_once(spark: SparkSession, source: IncrementalSource,
                       F.count("*").alias("n")).collect()[0]
     if not stats["n"]:
         return 0
-    sink.apply_batch(batch, batch_id=last)
+    # the window's max offset is unique per window and monotone, so it
+    # serves as the sink's batch id (its replay gate)
+    sink.apply_batch(batch, batch_id=stats["mx"])
     checkpoint.commit(stats["mx"])
     return stats["n"]

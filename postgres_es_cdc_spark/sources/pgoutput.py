@@ -48,7 +48,6 @@ and decode_messages passes such an xid through when present).
 from __future__ import annotations
 
 import json
-import os
 import struct
 from typing import Iterator
 
@@ -949,41 +948,23 @@ class WalStreamApply:
         rows left null by the in-batch assignment coalesce to it, so
         they are NOT mistaken for autocommit writes.
 
-    Both are tiny (O(tables) + one int) and are PERSISTED beside the
-    sink's pending buffer after every batch, so a checkpoint restart
-    resumes mid-transaction decode correctly without replaying the
-    consumed segments."""
-
-    CONTEXT = "_wal_context.json"
+    Both are tiny (O(tables) + one int) and are committed WITH the
+    batch — in the sink's one manifest repoint, beside its tables and
+    pending buffer — so a checkpoint restart resumes mid-transaction
+    decode exactly where the committed state stands, and a batch whose
+    commit was lost replays against the context it first saw."""
 
     def __init__(self, sink):
         self.sink = sink
-        self.relcache: dict = {}
-        self.last_xid: int | None = None
-        self._load_context()
-
-    def _context_path(self) -> str:
-        return os.path.join(self.sink.base_dir, self.CONTEXT)
-
-    def _load_context(self) -> None:
-        path = self._context_path()
-        if os.path.exists(path):
-            with open(path) as f:
-                ctx = json.load(f)
-            self.relcache = {int(k): tuple(v)
-                             for k, v in ctx["relcache"].items()}
-            self.last_xid = ctx["last_xid"]
-
-    def _save_context(self) -> None:
-        os.makedirs(self.sink.base_dir, exist_ok=True)
-        tmp = self._context_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"relcache": {str(k): list(v)
-                                    for k, v in self.relcache.items()},
-                       "last_xid": self.last_xid}, f)
-        os.replace(tmp, self._context_path())
+        ctx = sink.meta().get("context") or {"relcache": {},
+                                             "last_xid": None}
+        self.relcache: dict = {int(k): tuple(v)
+                               for k, v in ctx["relcache"].items()}
+        self.last_xid: int | None = ctx["last_xid"]
 
     def apply(self, batch: DataFrame, batch_id: int) -> None:
+        if self.sink.applied(batch_id):
+            return                      # committed replay: no-op
         ev = assign_txn_ids(self._decode_in_offset_order(batch))
         if self.last_xid is not None:
             ev = ev.withColumn(
@@ -994,18 +975,19 @@ class WalStreamApply:
                          .orderBy(F.col("offset").desc())
                          .select("operationType", "txn_id").limit(1)
                          .collect())
-        self.sink.apply_batch(ev, batch_id)
+        last_xid = self.last_xid
         if last_marker:
-            if last_marker[0][0] == "BEGIN":
-                self.last_xid = int(last_marker[0][1])
-            else:
-                # the last transaction committed inside this batch — a
-                # malformed data row arriving outside a Begin/Commit
-                # bracket in a later batch must NOT be attributed to it
-                # (it would park in the pending buffer forever); with no
-                # open xid such rows keep txn_id null and surface.
-                self.last_xid = None
-        self._save_context()
+            # after a COMMIT no transaction is open — a malformed data
+            # row arriving outside a Begin/Commit bracket in a later
+            # batch must NOT be attributed to it (it would park in the
+            # pending buffer forever); with no open xid such rows keep
+            # txn_id null and surface.
+            last_xid = (int(last_marker[0][1])
+                        if last_marker[0][0] == "BEGIN" else None)
+        self.sink.apply_batch(ev, batch_id, context={
+            "relcache": {str(k): list(v) for k, v in self.relcache.items()},
+            "last_xid": last_xid})
+        self.last_xid = last_xid
 
     def _decode_in_offset_order(self, batch: DataFrame) -> DataFrame:
         ev, cache = decode_with_relation_resends(batch,

@@ -18,65 +18,13 @@ change the result (the batch==stream test pins this).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-class _SnapshotState:
-    """The single-snapshot commit discipline shared by the
-    merge-per-batch sinks (AggSink, TopKSink, HLLSink, QSketchSink):
-    state is ONE parquet dir per committed version, repointed — together
-    with the last applied batch id — by a manifest written in a single
-    os.replace.
-
-    Guarantees, identical to WatermarkAggSink/SessionSink's inline
-    protocol: (1) a crash at any point leaves the previously committed
-    snapshot current (new version dirs are invisible until the manifest
-    repoints — torn writes can't corrupt state the way an in-place
-    overwrite of the live dir could); (2) a redelivered micro-batch is
-    a no-op via the batch-id gate (foreachBatch is at-least-once, and
-    SUM-style merges are not idempotent); (3) the superseded version is
-    deleted AFTER the commit, so state occupies at most two versions
-    ever — the compaction story for this sink family is structural:
-    every batch's merge IS the compaction (state never grows with
-    history, only with |groups|)."""
-
-    def __init__(self, base: str):
-        self.base = base
-
-    def _manifest(self) -> str:
-        return self.base + "._state.json"
-
-    def meta(self) -> dict:
-        if os.path.exists(self._manifest()):
-            with open(self._manifest()) as f:
-                return json.load(f)
-        return {"current": None, "last_batch_id": -1}
-
-    def applied(self, batch_id: int) -> bool:
-        return batch_id <= self.meta()["last_batch_id"]
-
-    def read(self, spark) -> DataFrame | None:
-        cur = self.meta()["current"]
-        return spark.read.parquet(cur) if cur else None
-
-    def commit(self, df: DataFrame, batch_id: int) -> None:
-        meta = self.meta()
-        new_dir = f"{self.base}.v{batch_id}"
-        if new_dir == meta["current"]:
-            new_dir += "r"
-        df.write.mode("overwrite").parquet(new_dir)
-        tmp = self._manifest() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"current": new_dir, "last_batch_id": batch_id}, f)
-        os.replace(tmp, self._manifest())
-        old = meta["current"]
-        if old and old != new_dir and os.path.isdir(old):
-            import shutil
-            shutil.rmtree(old, ignore_errors=True)
+from postgres_es_cdc_spark.streaming.store import (SnapshotStore,
+                                                   VersionedStore, write_all)
 
 
 class AggSink:
@@ -84,17 +32,17 @@ class AggSink:
 
     Values are aggregated as exact integers (caller quantizes doubles
     first if needed) so replay-divergence can't hide in float
-    reassociation. State commits through _SnapshotState: versioned dir
-    + atomic manifest + batch-id replay gate (SUM/COUNT are not
-    idempotent — without the gate an at-least-once redelivery would
-    double-count).
+    reassociation. State is the one frame of a SnapshotStore
+    (streaming/store.py): versioned dir + atomic manifest + batch-id
+    replay gate (SUM/COUNT are not idempotent — without the gate an
+    at-least-once redelivery would double-count).
     """
 
     def __init__(self, path: str, group_col: str, value_col: str):
         self.path = path
         self.group_col = group_col
         self.value_col = value_col
-        self._st = _SnapshotState(path)
+        self._st = SnapshotStore(path)
 
     def _partial(self, df: DataFrame) -> DataFrame:
         g, v = self.group_col, self.value_col
@@ -117,13 +65,13 @@ class AggSink:
         if self._st.applied(batch_id):
             return                      # committed replay: no double count
         parts = self._partial(batch)
-        prior = self._st.read(spark)
+        prior = self._st.state(spark)
         if prior is not None:
             parts = prior.unionByName(parts)
-        self._st.commit(self._merge(parts, self.group_col), batch_id)
+        self._st.replace(self._merge(parts, self.group_col), batch_id)
 
     def state(self, spark) -> DataFrame | None:
-        return self._st.read(spark)
+        return self._st.state(spark)
 
     def writer(self):
         return self.apply_batch
@@ -182,7 +130,7 @@ WM_WINDOW_US = 86_400_000_000
 WM_DELAY_US = 7 * 86_400_000_000
 
 
-class WatermarkAggSink:
+class WatermarkAggSink(VersionedStore):
     """foreachBatch sink maintaining a WINDOWED aggregate under
     event-time WATERMARK semantics — the late/out-of-order member of
     the IVM family (AggSink: keyed totals; TopKSink: order statistics;
@@ -197,12 +145,11 @@ class WatermarkAggSink:
     associative+commutative integer algebra as AggSink, so batch
     boundaries cannot change retained-row results.
 
-    Durability: state commits through the versioned-manifest protocol
-    (streaming/pipeline.py UpsertSink) — agg dir, watermark, applied
-    batch id, and late total repoint in ONE os.replace, so a crash
-    before commit leaves the prior state current and a checkpoint
-    replay of the same batch id is a no-op (exactly-once on top of
-    foreachBatch's at-least-once).
+    Durability: the sink is a VersionedStore (streaming/store.py) —
+    agg frame, watermark, applied batch id, and late total repoint in
+    ONE commit, so a crash before it leaves the prior state current and
+    a checkpoint replay of the same batch id is a no-op (exactly-once
+    on top of foreachBatch's at-least-once).
 
     Scale shape: per batch one map-side partial row per (window, group)
     + a |windows·groups|-row merge; the watermark gate is a scan-side
@@ -214,6 +161,9 @@ class WatermarkAggSink:
     def __init__(self, base_dir: str, group_col: str, ts_col: str,
                  value_col: str, window_us: int = WM_WINDOW_US,
                  delay_us: int = WM_DELAY_US):
+        super().__init__(os.path.join(base_dir, "_wm_manifest.json"),
+                         {"agg": None, "watermark_us": None,
+                          "last_batch_id": -1, "n_late_total": 0})
         self.base_dir = base_dir
         self.group_col = group_col
         self.ts_col = ts_col
@@ -221,36 +171,14 @@ class WatermarkAggSink:
         self.window_us = window_us
         self.delay_us = delay_us
 
-    # -- manifest (watermark + batch id + agg dir commit in one replace)
-    def _manifest_path(self) -> str:
-        return os.path.join(self.base_dir, "_wm_manifest.json")
-
-    def meta(self) -> dict:
-        import json
-        p = self._manifest_path()
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"current": None, "watermark_us": None,
-                "last_batch_id": -1, "n_late_total": 0}
-
-    def _commit(self, meta: dict) -> None:
-        import json
-        os.makedirs(self.base_dir, exist_ok=True)
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._manifest_path())
-
     def state(self, spark) -> DataFrame | None:
-        cur = self.meta()["current"]
-        return spark.read.parquet(cur) if cur else None
+        return self.read(spark, "agg")
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
+        if self.applied(batch_id):
+            return                      # committed replay: no-op
         spark = batch.sparkSession
         meta = self.meta()
-        if batch_id <= meta["last_batch_id"]:
-            return                      # committed replay: no-op
         wm = meta["watermark_us"]
         ts = F.col(self.ts_col)
 
@@ -275,22 +203,15 @@ class WatermarkAggSink:
             F.sum("sum_v").alias("sum_v"), F.sum("n_v").alias("n_v"),
             F.min("min_v").alias("min_v"), F.max("max_v").alias("max_v"))
 
-        new_dir = os.path.join(self.base_dir, f"agg.v{batch_id}")
-        if new_dir == meta["current"]:
-            new_dir += "r"
-        merged.write.mode("overwrite").parquet(new_dir)
         new_wm = wm
         if stats["mx"] is not None:
             cand = int(stats["mx"]) - self.delay_us
             new_wm = cand if wm is None else max(wm, cand)
-        old_dir = meta["current"]
-        self._commit({"current": new_dir, "watermark_us": new_wm,
-                      "last_batch_id": batch_id,
-                      "n_late_total": meta["n_late_total"]
-                      + int(stats["n_late"] or 0)})
-        if old_dir and old_dir != new_dir and os.path.isdir(old_dir):
-            import shutil
-            shutil.rmtree(old_dir, ignore_errors=True)
+        self.commit(batch_id, {
+            **self.land({"agg": merged}, batch_id),
+            "watermark_us": new_wm,
+            "n_late_total": meta["n_late_total"]
+            + int(stats["n_late"] or 0)})
 
     def writer(self):
         return self.apply_batch
@@ -429,7 +350,7 @@ class TopKSink:
         self.order_col = order_col
         self.tie_col = tie_col
         self.k = k
-        self._st = _SnapshotState(path)
+        self._st = SnapshotStore(path)
 
     def _topk(self, df: DataFrame) -> DataFrame:
         # The semilattice is over SETS keyed by (group, tie): a replayed
@@ -448,13 +369,13 @@ class TopKSink:
         if self._st.applied(batch_id):
             return          # merge is idempotent, but skipping is free
         parts = self._topk(batch)
-        prior = self._st.read(spark)
+        prior = self._st.state(spark)
         if prior is not None:
             parts = prior.unionByName(parts)
-        self._st.commit(self._topk(parts), batch_id)
+        self._st.replace(self._topk(parts), batch_id)
 
     def state(self, spark) -> DataFrame | None:
-        return self._st.read(spark)
+        return self._st.state(spark)
 
     def writer(self):
         return self.apply_batch
@@ -469,7 +390,7 @@ def WindowSpec_topk(group_col: str, order_col: str, tie_col: str):
 SESSION_GAP_US = 1_800_000_000  # 30-minute inactivity gap
 
 
-class SessionSink:
+class SessionSink(VersionedStore):
     """foreachBatch sink maintaining per-key GAP-MERGED SESSIONS — the
     session-window member of the IVM family (AggSink: totals; TopKSink:
     order statistics; WatermarkAggSink: tumbling event-time windows;
@@ -482,10 +403,9 @@ class SessionSink:
     arriving between two existing sessions correctly FUSES them (their
     counts add). Event counts ride the intervals as summed weights.
 
-    Durability and replay: the same versioned-manifest commit as
-    WatermarkAggSink — state dir + applied batch id repoint in one
-    os.replace, so a crash keeps the prior state and a committed
-    batch's replay is a no-op (counts are not idempotent under
+    Durability and replay: the sink is a VersionedStore — state frame
+    + applied batch id repoint in one commit, so a crash keeps the
+    prior state and a committed batch's replay is a no-op (counts are not idempotent under
     re-union once points are collapsed, so exactly-once comes from the
     batch-id gate, not from the algebra).
 
@@ -496,33 +416,15 @@ class SessionSink:
 
     def __init__(self, base_dir: str, key_col: str, ts_col: str,
                  gap_us: int = SESSION_GAP_US):
+        super().__init__(os.path.join(base_dir, "_session_manifest.json"),
+                         {"sess": None, "last_batch_id": -1})
         self.base_dir = base_dir
         self.key_col = key_col
         self.ts_col = ts_col
         self.gap_us = gap_us
 
-    def _manifest_path(self) -> str:
-        return os.path.join(self.base_dir, "_session_manifest.json")
-
-    def meta(self) -> dict:
-        import json
-        p = self._manifest_path()
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"current": None, "last_batch_id": -1}
-
-    def _commit(self, meta: dict) -> None:
-        import json
-        os.makedirs(self.base_dir, exist_ok=True)
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._manifest_path())
-
     def state(self, spark) -> DataFrame | None:
-        cur = self.meta()["current"]
-        return spark.read.parquet(cur) if cur else None
+        return self.read(spark, "sess")
 
     def _sessionize(self, iv: DataFrame) -> DataFrame:
         """Gap-merge an interval frame (key, start_us, end_us, n):
@@ -546,10 +448,9 @@ class SessionSink:
                   .drop("_sid"))
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        meta = self.meta()
-        if batch_id <= meta["last_batch_id"]:
+        if self.applied(batch_id):
             return                      # committed replay: no-op
+        spark = batch.sparkSession
         pts = batch.select(
             self.key_col,
             F.col(self.ts_col).alias("start_us"),
@@ -560,15 +461,7 @@ class SessionSink:
         if prior is not None:
             parts = prior.unionByName(parts)
         merged = self._sessionize(parts)
-        new_dir = os.path.join(self.base_dir, f"sess.v{batch_id}")
-        if new_dir == meta["current"]:
-            new_dir += "r"
-        merged.write.mode("overwrite").parquet(new_dir)
-        old_dir = meta["current"]
-        self._commit({"current": new_dir, "last_batch_id": batch_id})
-        if old_dir and old_dir != new_dir and os.path.isdir(old_dir):
-            import shutil
-            shutil.rmtree(old_dir, ignore_errors=True)
+        self.commit(batch_id, self.land({"sess": merged}, batch_id))
 
     def writer(self):
         return self.apply_batch
@@ -670,7 +563,7 @@ WHERE rank <= 3
 """
 
 
-class JoinSink:
+class JoinSink(VersionedStore):
     """foreachBatch sink maintaining an inner equi-JOIN view
     incrementally — the two-input member of the IVM family (AggSink:
     keyed totals; TopKSink: order statistics; WatermarkAggSink: windowed
@@ -696,8 +589,9 @@ class JoinSink:
     splits it here.
 
     Durability: all three state stores (left, right, view) are
-    APPEND-ONLY delta logs — per batch we write one new parquet dir per
-    store and repoint the manifest in ONE os.replace. A crash before
+    APPEND-ONLY delta logs of the sink's VersionedStore
+    (streaming/store.py) — per batch we write one new parquet dir per
+    store and commit them together with the batch id. A crash before
     commit leaves orphan dirs the manifest never references (harmless);
     a checkpoint replay of a committed batch id is a no-op. No state dir
     is ever rewritten, so per-batch cost is O(|delta| + matched output)
@@ -713,10 +607,9 @@ class JoinSink:
     any log exceeds N entries — the same call Delta's OPTIMIZE/
     checkpoint makes. The fold is a pure bag-union rewrite (every store
     is an append-only bag, so snapshot == union of entries, no merge
-    semantics to get wrong), committed by the SAME single-os.replace
-    manifest repoint; superseded dirs are TOMBSTONED in the manifest,
-    never deleted in the commit path — a crash at any point leaves
-    either the old log or the complete snapshot current, and vacuum()
+    semantics to get wrong), committed by one manifest repoint with the
+    superseded dirs TOMBSTONED — a crash at any point leaves either the
+    old log or the complete snapshot current, and the store's vacuum()
     reclaims tombstones as a separate, restartable step.
 
     Scale shape: both delta joins key on the join column, and the
@@ -753,6 +646,9 @@ class JoinSink:
         # compact_after: fold each delta log to one snapshot dir when it
         # exceeds this many entries (None = never; consumer may still
         # call compact() explicitly).
+        super().__init__(os.path.join(base_dir, "_join_manifest.json"),
+                         {"left": [], "right": [], "view": [],
+                          "last_batch_id": -1})
         self.base_dir = base_dir
         self.key_col = key_col
         self.left_cols = list(left_cols or [])
@@ -762,31 +658,6 @@ class JoinSink:
         self.right_tag = right_tag
         self.n_buckets = n_buckets
         self.compact_after = compact_after
-
-    def _manifest_path(self) -> str:
-        return os.path.join(self.base_dir, "_join_manifest.json")
-
-    def meta(self) -> dict:
-        import json
-        p = self._manifest_path()
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"left": [], "right": [], "view": [], "last_batch_id": -1}
-
-    def _commit(self, meta: dict) -> None:
-        import json
-        os.makedirs(self.base_dir, exist_ok=True)
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._manifest_path())
-
-    @staticmethod
-    def _read_log(spark, dirs: list) -> DataFrame | None:
-        if not dirs:
-            return None
-        return spark.read.parquet(*dirs)
 
     def state_view(self, spark) -> DataFrame | None:
         return self._read_log(spark, self.meta()["view"])
@@ -834,10 +705,10 @@ class JoinSink:
                      .parquet(*paths))
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
+        if self.applied(batch_id):
+            return                      # committed replay: no-op
         spark = batch.sparkSession
         meta = self.meta()
-        if batch_id <= meta["last_batch_id"]:
-            return                      # committed replay: no-op
         bkt = self.n_buckets > 1
         side = F.col(self.side_col)
         d_left = batch.filter(side == self.left_tag).select(
@@ -848,40 +719,17 @@ class JoinSink:
             d_left = d_left.withColumn("_b", self._bucket())
             d_right = d_right.withColumn("_b", self._bucket())
 
-        def _write(df: DataFrame, store: str, bucketed: bool):
-            new_dir = os.path.join(self.base_dir, f"{store}.b{batch_id}")
-            if bucketed:
-                # repartition BY _b first: otherwise every write task
-                # splits its rows across all buckets and an entry lands
-                # tasks x buckets small files (file-count overhead the
-                # whole-history probe pays forever); this way each
-                # bucket is exactly one file per entry.
-                (df.repartition(self.n_buckets, F.col("_b"))
-                   .write.mode("overwrite").partitionBy("_b")
-                   .parquet(new_dir))
-            else:
-                df.write.mode("overwrite").parquet(new_dir)
-            return new_dir
-
         # Land the delta logs FIRST, then derive each entry's bucket
         # list from the partition directory names and re-read the
         # deltas from their own files — zero extra Spark jobs for the
         # bookkeeping (no collects, no checkpoints). The two delta
-        # writes are independent jobs, so they run CONCURRENTLY from a
-        # tiny thread pool (guide §2.6: actions are only sequential
-        # because the driver calls them sequentially; the second job's
-        # tasks back-fill the first's tail) — protocol unchanged, both
-        # dirs land before the single manifest commit below. On a
-        # remote FS the listdir becomes one FileSystem.listStatus.
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fl = pool.submit(_write, d_left, "left", bkt)
-            fr = pool.submit(_write, d_right, "right", bkt)
-            ldir, rdir = fl.result(), fr.result()
-
-        def _buckets_of(d: str) -> list:
-            return sorted(int(f.split("=", 1)[1]) for f in os.listdir(d)
-                          if f.startswith("_b="))
+        # writes are independent jobs, so write_all runs them
+        # concurrently; both dirs land before the one commit below. On
+        # a remote FS the listdir becomes one FileSystem.listStatus.
+        ldir, rdir, vdir = (os.path.join(self.base_dir, f"{s}.b{batch_id}")
+                            for s in ("left", "right", "view"))
+        write_all({ldir: self._writer(d_left, bkt),
+                   rdir: self._writer(d_right, bkt)})
 
         # The delta-join legs re-read the just-written delta FILES
         # (both layouts): the view write's plan then scans two tiny
@@ -890,7 +738,7 @@ class JoinSink:
         # removed (guide §2.3, shuffle/scan fewer bytes). Same rows by
         # construction (the files are exactly the deltas).
         if bkt:
-            lb, rb = _buckets_of(ldir), _buckets_of(rdir)
+            lb, rb = self._buckets_of(ldir), self._buckets_of(rdir)
             dl = (spark.read.option("recursiveFileLookup", "true")
                        .parquet(ldir) if lb
                   else d_left.drop("_b"))
@@ -916,20 +764,28 @@ class JoinSink:
         if old_l is not None:
             d_view = d_view.unionByName(old_l.join(dr, k))
 
-        new_meta = dict(meta)
-        new_meta.update({
+        write_all({vdir: d_view.write})
+        new_meta = self.commit(batch_id, {
             "left": meta["left"] + [
                 {"dir": ldir, "buckets": lb} if bkt else ldir],
             "right": meta["right"] + [
                 {"dir": rdir, "buckets": rb} if bkt else rdir],
-            "view": meta["view"] + [_write(d_view, "view", False)],
-            "last_batch_id": batch_id,
-        })
-        self._commit(new_meta)
-        if self.compact_after is not None and max(
+            "view": meta["view"] + [vdir]})
+        if new_meta is not None and self.compact_after is not None and max(
                 len(new_meta[s]) for s in ("left", "right", "view")
         ) > self.compact_after:
             self.compact(spark)
+
+    def _writer(self, df: DataFrame, bucketed: bool):
+        if bucketed:
+            # repartition BY _b first: otherwise every write task
+            # splits its rows across all buckets and an entry lands
+            # tasks x buckets small files (file-count overhead the
+            # whole-history probe pays forever); this way each bucket
+            # is exactly one file per entry.
+            return (df.repartition(self.n_buckets, F.col("_b"))
+                      .write.partitionBy("_b"))
+        return df.write
 
     @staticmethod
     def _entry_dir(e) -> str:
@@ -945,8 +801,8 @@ class JoinSink:
 
         Crash safety: snapshot dirs land first under a generation name
         the manifest doesn't reference; the manifest then repoints all
-        three stores AND tombstones the superseded dirs in one
-        os.replace. A crash before the repoint leaves the old log
+        three stores AND tombstones the superseded dirs in one commit.
+        A crash before the repoint leaves the old log
         current (orphan snapshot dirs are invisible and overwritten by
         the next attempt); after it, the snapshot is current and the old
         dirs await vacuum(). last_batch_id is carried through, so the
@@ -958,18 +814,12 @@ class JoinSink:
                 s: len(meta[s]) for s in stores}}
         gen = meta.get("compact_gen", 0) + 1
         bkt = self.n_buckets > 1
-        new_meta = dict(meta)
-        new_meta["compact_gen"] = gen
-        dead = []
-
-        def _fold(store: str):
-            """Fold one store to a snapshot dir; returns the new entry
-            list (or None for an empty store). Independent per store,
-            so the three folds run concurrently (guide §2.6) — the
-            manifest repoints all of them in the ONE commit below."""
+        snaps: dict = {}          # store -> (cdir, bucketed) | None
+        writers: dict = {}
+        for store in stores:
             entries = meta[store]
             if not entries:
-                return None
+                continue
             bucketed = bkt and store != "view"
             parts = []
             for e in entries:
@@ -981,50 +831,36 @@ class JoinSink:
                 elif e["buckets"]:    # empty deltas have no files to read
                     # one root per read: partition discovery restores _b
                     parts.append(spark.read.parquet(e["dir"]))
-            cdir = os.path.join(self.base_dir, f"{store}.c{gen}")
             if not parts:
-                return []
+                snaps[store] = None
+                continue
             snap = parts[0]
             for p in parts[1:]:
                 snap = snap.unionByName(p)
-            if bucketed:
-                (snap.repartition(self.n_buckets, F.col("_b"))
-                     .write.mode("overwrite").partitionBy("_b")
-                     .parquet(cdir))
-                buckets = sorted(
-                    int(f.split("=", 1)[1]) for f in os.listdir(cdir)
-                    if f.startswith("_b="))
-                return [{"dir": cdir, "buckets": buckets}]
-            snap.write.mode("overwrite").parquet(cdir)
-            return [cdir]
-
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=len(stores)) as pool:
-            folded = dict(zip(stores, pool.map(_fold, stores)))
-        for store in stores:
-            if folded[store] is None:
-                continue
-            new_meta[store] = folded[store]
+            cdir = os.path.join(self.base_dir, f"{store}.c{gen}")
+            snaps[store] = (cdir, bucketed)
+            writers[cdir] = self._writer(snap, bucketed)
+        # the per-store folds are independent, so they run concurrently;
+        # the manifest repoints all of them in the ONE commit below
+        write_all(writers)
+        new = {"compact_gen": gen}
+        dead = []
+        for store, snap in snaps.items():
+            if snap is None:
+                new[store] = []
+            else:
+                cdir, bucketed = snap
+                new[store] = [{"dir": cdir, "buckets": self._buckets_of(cdir)}
+                              if bucketed else cdir]
             dead.extend(self._entry_dir(e) for e in meta[store])
-        new_meta["tombstones"] = meta.get("tombstones", []) + dead
-        self._commit(new_meta)
+        new["tombstones"] = meta.get("tombstones", []) + dead
+        self._locked_commit(lambda cur: {**cur, **new})
         return {"compacted": True, "gen": gen, "folded": len(dead)}
 
-    def vacuum(self) -> int:
-        """Delete tombstoned dirs and clear the tombstone list. Separate
-        from the compaction commit so a crash can never orphan LIVE data
-        — worst case re-vacuum re-deletes already-gone dirs (rmtree
-        ignore_errors makes that a no-op)."""
-        import shutil
-        meta = self.meta()
-        dead = meta.get("tombstones", [])
-        for d in dead:
-            shutil.rmtree(d, ignore_errors=True)
-        if dead:
-            meta = dict(meta)
-            meta["tombstones"] = []
-            self._commit(meta)
-        return len(dead)
+    @staticmethod
+    def _buckets_of(d: str) -> list:
+        return sorted(int(f.split("=", 1)[1]) for f in os.listdir(d)
+                      if f.startswith("_b="))
 
     def writer(self):
         return self.apply_batch
@@ -1176,7 +1012,7 @@ class HLLSink:
         self.path = path
         self.group_col = group_col
         self.key_col = key_col
-        self._st = _SnapshotState(path)
+        self._st = SnapshotStore(path)
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         from postgres_es_cdc_spark.operators.analytics import hll_registers
@@ -1185,21 +1021,21 @@ class HLLSink:
         if self._st.applied(batch_id):
             return          # max-merge is idempotent; skipping is free
         regs = hll_registers(batch, self.group_col, self.key_col)
-        prior = self._st.read(spark)
+        prior = self._st.state(spark)
         if prior is not None:
             regs = prior.unionByName(regs)
-        self._st.commit(regs.groupBy(self.group_col, "bucket").agg(
+        self._st.replace(regs.groupBy(self.group_col, "bucket").agg(
             F.max("m").alias("m")), batch_id)
 
     def state(self, spark) -> DataFrame | None:
-        return self._st.read(spark)
+        return self._st.state(spark)
 
     def estimate(self, spark) -> DataFrame:
         from postgres_es_cdc_spark.operators.analytics import (
             hll_estimate_from_registers)
 
         return hll_estimate_from_registers(
-            self._st.read(spark), self.group_col)
+            self._st.state(spark), self.group_col)
 
     def writer(self):
         return self.apply_batch
@@ -1238,7 +1074,7 @@ class QSketchSink:
     count registers keyed (group, bucket). Counts merge by SUM: an
     associative+commutative fold, so batch boundaries provably cannot
     change the registers — but unlike the HLL's max-merge SUM is NOT
-    idempotent, so replay protection is explicit: the _SnapshotState
+    idempotent, so replay protection is explicit: the SnapshotStore
     manifest commits the last-applied batch id atomically WITH the
     state repoint, making a redelivered micro-batch a no-op (the
     AggSink-family discipline).
@@ -1251,7 +1087,7 @@ class QSketchSink:
         self.path = path
         self.group_col = group_col
         self.value_col = value_col
-        self._st = _SnapshotState(path)
+        self._st = SnapshotStore(path)
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         from postgres_es_cdc_spark.operators.analytics import (
@@ -1261,14 +1097,14 @@ class QSketchSink:
             return  # replayed batch: counts must not double
         spark = batch.sparkSession
         regs = qsketch_registers(batch, self.group_col, self.value_col)
-        prior = self._st.read(spark)
+        prior = self._st.state(spark)
         if prior is not None:
             regs = prior.unionByName(regs)
-        self._st.commit(regs.groupBy(self.group_col, "bucket").agg(
+        self._st.replace(regs.groupBy(self.group_col, "bucket").agg(
             F.sum("cnt").alias("cnt")), batch_id)
 
     def registers(self, spark) -> DataFrame:
-        return self._st.read(spark)
+        return self._st.state(spark)
 
     def writer(self):
         return self.apply_batch

@@ -31,6 +31,7 @@ from pyspark.sql.types import StructType
 
 from postgres_es_cdc_spark.cdc.apply import apply_changes
 from postgres_es_cdc_spark.cdc.envelope import EVENT_SCHEMA, parse_envelope
+from postgres_es_cdc_spark.streaming.store import VersionedStore
 
 
 def kafka_event_stream(spark: SparkSession, bootstrap_servers: str,
@@ -82,7 +83,7 @@ def file_event_stream(spark: SparkSession, path: str,
     return reader.load(path)
 
 
-class UpsertSink:
+class UpsertSink(VersionedStore):
     """foreachBatch sink that maintains latest-state-per-key per table in
     parquet directories — the engine's stand-in for one ES index per
     table (utils.go:104-108), with MERGE semantics instead of per-event
@@ -90,10 +91,17 @@ class UpsertSink:
 
     Merge strategy: fold the incoming micro-batch with ``apply_changes``
     -> combine with existing state via the same per-column
-    last-writer-wins rules -> atomically overwrite. (With a Delta/Iceberg
+    last-writer-wins rules -> write a new version. (With a Delta/Iceberg
     sink this becomes MERGE INTO; plain parquet keeps the dependency
     surface of this repo minimal while the fold logic — the part under
     test — is identical.)
+
+    Commit: each table is a frame of the sink's ``VersionedStore``.
+    Overwriting the state dir in place has a torn window — Spark's
+    overwrite deletes before it rewrites, so a crash mid-write loses
+    BOTH the old and new state — so every merge lands a fresh version
+    dir and one manifest repoint makes all tables current together
+    with the batch id, which gates redelivered batches.
 
     Versioning: each state row carries ``_cdc_version`` — the max offset
     that contributed to it. Prior state enters the next micro-batch's
@@ -113,51 +121,23 @@ class UpsertSink:
 
     def __init__(self, base_dir: str, schemas: dict[str, StructType],
                  key: str = "id", order_col: str = "offset"):
+        super().__init__(os.path.join(base_dir, "_manifest.json"),
+                         {"last_batch_id": -1})
         self.base_dir = base_dir
         self.schemas = schemas
         self.key = key
         self.order_col = order_col
 
-    # -- crash-safe commit protocol (the poor man's table format) -------
-    # Overwriting the state dir in place has a torn window: Spark's
-    # overwrite deletes before it rewrites, so a crash mid-write loses
-    # BOTH the old and new state. Instead every merge writes a fresh
-    # versioned directory and then atomically repoints a manifest file
-    # (os.replace — the same commit step Delta/Iceberg make on their
-    # log). A crash before the repoint leaves the old state current; a
-    # checkpoint-replayed batch rewrites the same version dir and
-    # repoints idempotently.
-
-    def _manifest(self, name: str) -> str:
-        return os.path.join(self.base_dir, f"{name}._manifest.json")
-
     def table_path(self, name: str) -> str:
         """The CURRENT committed state directory for a table (resolves
         the manifest; falls back to the legacy flat path)."""
-        import json as _json
-
-        m = self._manifest(name)
-        if os.path.exists(m):
-            with open(m) as f:
-                return _json.load(f)["current"]
-        return os.path.join(self.base_dir, name)
-
-    def _commit(self, name: str, new_dir: str) -> None:
-        import json as _json
-
-        old = self.table_path(name) if os.path.exists(self._manifest(name)) else None
-        tmp = self._manifest(name) + ".tmp"
-        os.makedirs(self.base_dir, exist_ok=True)
-        with open(tmp, "w") as f:
-            _json.dump({"current": new_dir}, f)
-        os.replace(tmp, self._manifest(name))
-        if old and old != new_dir and os.path.isdir(old):
-            import shutil
-
-            shutil.rmtree(old, ignore_errors=True)  # best-effort GC
+        return self.meta().get(name) or os.path.join(self.base_dir, name)
 
     def _merge(self, spark: SparkSession, name: str, batch: DataFrame,
-               batch_id: int = 0) -> None:
+               batch_id: int = 0) -> str:
+        """Fold ``batch`` into the table's committed state and land the
+        result as the table's version dir for ``batch_id``; returns the
+        dir, which becomes current at the sink's commit."""
         schema = self.schemas[name]
         path = self.table_path(name)
         # Represent existing state as synthetic INSERT events at offset -1:
@@ -177,24 +157,17 @@ class UpsertSink:
             events = events.unionByName(prior_ev)
         state = apply_changes(events, schema, self.key, self.order_col,
                               version_col=self.VERSION_COL)
-        new_dir = self._next_dir(name, batch_id)
-        state.write.mode("overwrite").parquet(new_dir)
-        self._commit(name, new_dir)
-
-    def _next_dir(self, name: str, batch_id: int) -> str:
-        """Target dir for this merge — never the dir currently being
-        read (a replayed batch_id after a committed crash would
-        otherwise overwrite its own input mid-read)."""
-        new_dir = os.path.join(self.base_dir, f"{name}.v{batch_id}")
-        if new_dir == self.table_path(name):
-            new_dir += "r"
-        return new_dir
+        return self.land({name: state}, batch_id)[name]
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
+        if self.applied(batch_id):
+            return                      # committed replay: no-op
         spark = batch.sparkSession
-        for name in self.schemas:
-            table_events = batch.filter(F.col("tableName") == name)
-            self._merge(spark, name, table_events, batch_id)
+        self.commit(batch_id, {
+            name: self._merge(spark, name,
+                              batch.filter(F.col("tableName") == name),
+                              batch_id)
+            for name in self.schemas})
 
     def writer(self) -> Callable[[DataFrame, int], None]:
         return self.apply_batch

@@ -1,0 +1,39 @@
+"""Every versioned sink commits through streaming/store.py: no other
+module of the package may call os.replace (the manifest repoint), so a
+hand-rolled copy of the commit protocol cannot come back unnoticed."""
+
+from __future__ import annotations
+
+import ast
+import os
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
+    __file__))), "postgres_es_cdc_spark")
+STORE = os.path.join(PKG, "streaming", "store.py")
+
+
+def _replace_calls(path: str) -> list:
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    hits = []
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Attribute) and node.attr == "replace"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os"):
+            hits.append(node.lineno)
+        if (isinstance(node, ast.ImportFrom) and node.module == "os"
+                and any(a.name == "replace" for a in node.names)):
+            hits.append(node.lineno)
+    return hits
+
+
+def test_only_the_store_calls_os_replace():
+    offenders = []
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            path = os.path.join(root, name)
+            if name.endswith(".py") and path != STORE:
+                offenders += [f"{os.path.relpath(path, PKG)}:{line}"
+                              for line in _replace_calls(path)]
+    assert offenders == [], offenders
+    assert _replace_calls(STORE), "the store itself must commit"

@@ -182,3 +182,101 @@ def test_fake_es_store_semantics():
     s.apply("POST", "/t/_delete_by_query",
             '{"query": {"match": {"id": "1"}}}')
     assert s.indices["t"] == {}
+
+
+def test_wal_to_es_crash_at_commit_recovers_to_batch_boundary(
+        spark, tmp_path):
+    """One WAL batch commits both tables, the pending buffer and the
+    decode context (relation cache + open xid) together. A crash at the
+    commit that repoints the pending buffer of batch 2 must leave ALL of
+    them at batch 1; a fresh WalStreamApply replaying batch 2 then
+    converges to the crash-free run, in ES and in parquet."""
+    from postgres_es_cdc_spark.cdc.txn import TxnUpsertSink
+    from postgres_es_cdc_spark.sinks.es_fake import EsStore, serve_store
+    from postgres_es_cdc_spark.sinks.es_rest import EsForwardingTxnSink
+    from postgres_es_cdc_spark.sources.pgoutput import WalStreamApply
+
+    oid_u = OID + 1
+    batches = [
+        # txn 1 commits; txn 2 stays open (its row parks as pending)
+        [encode_relation(OID, "t", COLS),
+         encode_begin(xid=1),
+         encode_insert(OID, [1, "a", 5]),
+         encode_commit(),
+         encode_begin(xid=2),
+         encode_insert(OID, [2, "b", 6])],
+        # txn 2 commits; table u is first seen; txn 4 stays open
+        [encode_update(OID, [2, UNCHANGED, 60]),
+         encode_commit(),
+         encode_relation(oid_u, "u", COLS),
+         encode_begin(xid=3),
+         encode_insert(oid_u, [7, "x", 1]),
+         encode_update(OID, [1, UNCHANGED, 50]),
+         encode_commit(),
+         encode_begin(xid=4),
+         encode_insert(OID, [3, "c", 7])],
+    ]
+    dfs = [spark.createDataFrame(
+        [(idx * 100 + i, bytearray(m)) for i, m in enumerate(msgs)],
+        "offset long, data binary") for idx, msgs in enumerate(batches)]
+    schema = _parse_datatype_string("id long, name string, qty long")
+    frames = ("t", "u", TxnUpsertSink.PENDING)
+
+    def rows(sink, name):
+        path = sink.table_path(name)
+        if not os.path.exists(path):
+            return None
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    clean_store, crash_store = EsStore(), EsStore()
+    clean_url, clean_stop = serve_store(clean_store)
+    crash_url, crash_stop = serve_store(crash_store)
+    try:
+        clean = EsForwardingTxnSink(str(tmp_path / "clean"),
+                                    {"t": schema, "u": schema},
+                                    es_url=clean_url)
+        apply = WalStreamApply(clean)
+        for i, df in enumerate(dfs):
+            apply.apply(df, i)
+
+        sink = EsForwardingTxnSink(str(tmp_path / "crash"),
+                                   {"t": schema, "u": schema},
+                                   es_url=crash_url)
+        WalStreamApply(sink).apply(dfs[0], 0)
+        paths1 = {n: sink.table_path(n) for n in frames}
+        rows1 = {n: rows(sink, n) for n in frames}
+        real = os.replace
+
+        def crashy(src, dst):
+            with open(src) as f:
+                if TxnUpsertSink.PENDING in f.read():
+                    raise OSError("crash at the pending-buffer commit")
+            return real(src, dst)
+
+        os.replace = crashy
+        try:
+            try:
+                WalStreamApply(sink).apply(dfs[1], 1)
+                raise AssertionError("expected injected crash")
+            except OSError:
+                pass
+        finally:
+            os.replace = real
+        # every piece of the batch still reads as batch 1
+        assert {n: sink.table_path(n) for n in frames} == paths1
+        assert {n: rows(sink, n) for n in frames} == rows1
+        restarted = WalStreamApply(sink)
+        assert restarted.relcache == {OID: ("t", COLS)}
+        assert restarted.last_xid == 2
+
+        restarted.apply(dfs[1], 1)        # the replayed batch
+        assert crash_store.indices == clean_store.indices
+        assert {n: rows(sink, n) for n in frames} \
+            == {n: rows(clean, n) for n in frames}
+        assert clean_store.indices == {
+            "t": {"1": {"id": "1", "name": "a", "qty": "50"},
+                  "2": {"id": "2", "name": "b", "qty": "60"}},
+            "u": {"7": {"id": "7", "name": "x", "qty": "1"}}}
+    finally:
+        clean_stop()
+        crash_stop()

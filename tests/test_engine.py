@@ -6,7 +6,6 @@ from __future__ import annotations
 import pytest
 
 from postgres_es_cdc_spark.engine import MODE_CONSUMER, MODE_PRODUCER, AppConfig, run
-from postgres_es_cdc_spark.sinks.elasticsearch import es_available, es_options
 
 
 def test_config_requires_mode():
@@ -45,15 +44,6 @@ def test_producer_mode_requires_events(spark):
         "PG_CONNECTION_URL": "postgres://x"})
     with pytest.raises(ValueError, match="event DataFrame"):
         run(spark, cfg, {})
-
-
-def test_es_sink_absent_in_container(spark):
-    # Connector JAR isn't shipped here — the adapter must say so clearly.
-    assert es_available(spark) is False
-    opts = es_options("https://es:9200", "u", "p")
-    assert opts["es.mapping.id"] == "id"
-    assert opts["es.write.operation"] == "upsert"
-    assert opts["es.net.http.auth.user"] == "u"
 
 
 def test_sql_window_portable_same_text_both_engines(spark, sf_dir, duck):

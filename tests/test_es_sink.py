@@ -1,48 +1,7 @@
-"""ES sink adapter: the option surface must stay stable without the
-connector JAR (it is absent in this container by design — es_available
-gates the real write)."""
+"""ES REST request rendering and the bulk executor against a loopback
+fake ES."""
 
 from __future__ import annotations
-
-import pytest
-
-from postgres_es_cdc_spark.sinks.elasticsearch import (
-    ES_FORMAT, es_available, es_options, write_state_to_es)
-
-
-def test_es_options_round_trip():
-    opts = es_options("https://es.internal:9243", "elastic", "pw",
-                      key_col="order_id")
-    assert opts["es.nodes"] == "es.internal"
-    assert opts["es.port"] == "9243"
-    # keyed upsert — the idempotency fix for the reference's
-    # autogenerated-_id duplicates (es.go:95-98)
-    assert opts["es.mapping.id"] == "order_id"
-    assert opts["es.write.operation"] == "upsert"
-    assert opts["es.net.http.auth.user"] == "elastic"
-    assert opts["es.net.http.auth.pass"] == "pw"
-    # dev-mode TLS posture mirrors consumer.go InsecureSkipVerify
-    assert opts["es.net.ssl.cert.allow.self.signed"] == "true"
-
-
-def test_es_options_defaults():
-    opts = es_options("http://localhost")
-    assert opts["es.nodes"] == "localhost"
-    assert opts["es.port"] == "9200"
-    assert "es.net.http.auth.user" not in opts
-    assert opts["es.mapping.id"] == "id"
-
-
-def test_write_without_connector_raises_clearly(spark, sf_dir):
-    from postgres_es_cdc_spark.catalog import table
-
-    if es_available(spark):  # pragma: no cover - JAR present in some envs
-        pytest.skip("connector present; covered by integration env")
-    state = table(spark, sf_dir, "region")
-    with pytest.raises(RuntimeError, match="connector not on classpath"):
-        write_state_to_es(state, "region", "http://localhost:9200")
-    assert ES_FORMAT == "org.elasticsearch.spark.sql"
-
 
 def test_es_consumer_requests_golden_bodies(spark):
     """The rendered REST plan matches the reference's request shapes

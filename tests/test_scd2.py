@@ -198,3 +198,42 @@ def test_scd2_sink_late_orphan_update_after_delete(spark, tmp_path):
         (1, "a", 2, 1, 2, False, "INSERT"),
         (1, "z", 0, 4, None, True, "INSERT"),
     ])
+
+
+def test_scd2_sink_failed_history_write_keeps_prior_history(
+        spark, tmp_path, monkeypatch):
+    """A task failure in the job that writes the new history must leave
+    the committed history readable in full. An in-place overwrite fails
+    this: Spark deletes the output dir before the job's tasks run."""
+    import pytest
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    from postgres_es_cdc_spark.cdc.scd2 import Scd2Sink
+
+    base = str(tmp_path / "hist")
+    sink = Scd2Sink(base, _parse_datatype_string(SCHEMA))
+    sink.apply_batch(_envelope(spark, _B1), 0)
+    before = _hist_rows(spark, sink.path)
+
+    @F.udf(LongType())
+    def boom(x):
+        raise RuntimeError("injected task failure")
+
+    real = DataFrameWriter.parquet
+
+    def failing(writer, path, *args, **kwargs):
+        # the write that puts new history under the sink's path fails
+        # inside its tasks, after Spark has prepared the output dir
+        # (a ".tmp" staging copy is not the history itself)
+        if path.startswith(base) and not path.endswith(".tmp"):
+            df = writer._df
+            writer = df.withColumn("id", boom("id")).write.mode("overwrite")
+        return real(writer, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(Exception, match="injected task failure"):
+        sink.apply_batch(_envelope(spark, _B2), 1)
+    monkeypatch.undo()
+    assert _hist_rows(spark, sink.path) == before
