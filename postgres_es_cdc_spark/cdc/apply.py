@@ -11,14 +11,18 @@ applied one HTTP call per event in arrival order (utils.go:92-117).
 
 Spark-first formulation (batch; the streaming frontend reuses it via
 ``foreachBatch``): ONE aggregation pass — no window, no UDFs, no
-per-event loop, no driver-side state. Per key:
+per-event loop, no driver-side state — over ONE input shape, the typed
+change rows of ``envelope.typed_events``. ``apply_changes`` parses the
+JSON envelope into that shape and calls ``apply_changes_typed``, the
+one fold; sinks feed their committed state back in the same shape
+(``envelope.state_as_inserts``). Per key:
 
   1. reset        = max-offset non-UPDATE event (as struct(offset, op)):
                     INSERT replaces the document wholesale under keyed
                     upsert semantics — fixing the reference's
                     duplicate-on-replay bug es.go:95-98; DELETE empties it.
   2. per column   = max-offset event whose payload *contains* the key
-                    (presence map — see envelope.py), as
+                    (``payload_fields`` — see envelope.py), as
                     struct(offset, value).
   3. final value  = that candidate's value IF its offset is at/after the
                     reset offset, else NULL — which simultaneously
@@ -44,7 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from postgres_es_cdc_spark.cdc.envelope import OP_INSERT, OP_UPDATE
+from postgres_es_cdc_spark.cdc.envelope import (
+    OP_INSERT, OP_UPDATE, typed_events)
 
 
 def latest_events(events: DataFrame, key: str = "id",
@@ -73,13 +78,51 @@ def latest_events(events: DataFrame, key: str = "id",
     )
 
 
-def _fold(ev: DataFrame, value_cols: list[str], key: str,
-          presence, value, version_col: str | None) -> DataFrame:
-    """The shared fold core over pre-normalized events.
+def apply_changes(events: DataFrame, value_schema: StructType,
+                  key: str = "id", order_col: str = "offset",
+                  version_col: str | None = None) -> DataFrame:
+    """Fold a single table's event stream into its final state.
 
-    ``ev`` must carry ``_off`` (long), ``_op``, and the extracted key
-    column; ``presence(c)``/``value(c)`` abstract over the payload
-    representation (JSON-decoded map vs native typed struct)."""
+    ``events``: flat envelope rows (offset, operationType, payload[, ...])
+    with a JSON-string payload — the wire format (utils.go:74).
+    Returns one row per surviving key with the columns of ``value_schema``;
+    if ``version_col`` is given, adds the max contributing offset per row
+    (the row's materialized version — what an incremental sink stores so
+    the next micro-batch folds against correctly-ordered prior state).
+    Corrupt payloads are skipped (utils.go:99-102) — dead_letters()
+    exposes them.
+    """
+    return apply_changes_typed(
+        typed_events(events, value_schema, order_col), value_schema,
+        key, order_col, version_col=version_col)
+
+
+def apply_changes_typed(events: DataFrame, value_schema: StructType,
+                        key: str = "id", order_col: str = "offset",
+                        fields_col: str = "payload_fields",
+                        version_col: str | None = None) -> DataFrame:
+    """The fold over the typed change shape (``typed_events``) — every
+    other entry point ends here.
+
+    ``events``: (offset, operationType, payload struct<value_schema>,
+    payload_fields array<string>). The fields array carries pgoutput's
+    key-presence information (producer.go:183-195: a column absent from
+    the tuple means "unchanged", a present-but-null column means "set
+    null" — the struct alone cannot distinguish the two, es.go:56).
+    Events that never leave the engine (in-pipeline change feeds,
+    Debezium-style parquet/Avro landed with a typed schema, committed
+    state) come in this shape directly, with no JSON anywhere.
+    """
+    value_cols = [f.name for f in value_schema.fields]
+    if key not in value_cols:
+        raise ValueError(f"key column {key!r} missing from value schema")
+    ev = events.select(
+        F.col(order_col).cast("long").alias("_off"),
+        F.col("operationType").alias("_op"),
+        F.col("payload")[key].alias(key),
+        F.col("payload").alias("_p"),
+        F.col(fields_col).alias("_f"),
+    ).filter(F.col(key).isNotNull())
     # Reset marker: max-offset non-UPDATE event. (struct max compares
     # offset first; on an exact offset tie — a replayed event meeting an
     # incremental sink's stored state — 'INSERT' > 'DELETE' resolves to
@@ -92,8 +135,9 @@ def _fold(ev: DataFrame, value_cols: list[str], key: str,
     # Per-column latest-carrier candidate (offset, value).
     per_col = [
         F.max(
-            F.when(presence(c),
-                   F.struct(F.col("_off").alias("o"), value(c).alias("v")))
+            F.when(F.array_contains("_f", c),
+                   F.struct(F.col("_off").alias("o"),
+                            F.col("_p")[c].alias("v")))
         ).alias(f"_m_{c}")
         for c in value_cols if c != key
     ]
@@ -117,79 +161,6 @@ def _fold(ev: DataFrame, value_cols: list[str], key: str,
     if version_col is not None:
         out.append(F.col(version_col))
     return live.select(*out)
-
-
-def apply_changes(events: DataFrame, value_schema: StructType,
-                  key: str = "id", order_col: str = "offset",
-                  version_col: str | None = None) -> DataFrame:
-    """Fold a single table's event stream into its final state.
-
-    ``events``: flat envelope rows (offset, operationType, payload[, ...])
-    with a JSON-string payload — the wire format (utils.go:74).
-    Returns one row per surviving key with the columns of ``value_schema``;
-    if ``version_col`` is given, adds the max contributing offset per row
-    (the row's materialized version — what an incremental sink stores so
-    the next micro-batch folds against correctly-ordered prior state).
-    """
-    value_cols = [f.name for f in value_schema.fields]
-    if key not in value_cols:
-        raise ValueError(f"key column {key!r} missing from value schema")
-    types = {f.name: f.dataType.simpleString() for f in value_schema.fields}
-
-    # Single JSON parse: the presence map doubles as the value source —
-    # typed values are casts of the map entries (payload rows are flat,
-    # producer.go:129-133, so string->type casts are lossless). This
-    # halves the JSON decode cost vs a second from_json to the struct.
-    ev = events.withColumn("_present", F.from_json("payload", "map<string,string>"))
-    # Corrupt payloads: skip (utils.go:99-102) — dead_letters() exposes them.
-    ev = ev.filter(F.col("_present").isNotNull())
-    ev = ev.select(
-        F.col(order_col).cast("long").alias("_off"),
-        F.col("operationType").alias("_op"),
-        F.col("_present")[key].cast(types[key]).alias(key),
-        "_present",
-    ).filter(F.col(key).isNotNull())
-    return _fold(
-        ev, value_cols, key,
-        presence=lambda c: F.map_contains_key("_present", c),
-        value=lambda c: F.col("_present")[c].cast(types[c]),
-        version_col=version_col)
-
-
-def apply_changes_typed(events: DataFrame, value_schema: StructType,
-                        key: str = "id", order_col: str = "offset",
-                        fields_col: str = "payload_fields",
-                        version_col: str | None = None) -> DataFrame:
-    """``apply_changes`` over a NATIVE typed payload — the zero-serde
-    fast path for events that never leave the engine (in-pipeline change
-    feeds, Debezium-style parquet/Avro landed with a typed schema).
-
-    ``events``: (offset, operationType, payload struct<value_schema>,
-    payload_fields array<string>). The fields array carries pgoutput's
-    key-presence information (producer.go:183-195: a column absent from
-    the tuple means "unchanged", a present-but-null column means "set
-    null" — the struct alone cannot distinguish the two, es.go:56).
-
-    Identical fold, identical semantics, no to_json/from_json anywhere:
-    the JSON frontend pays one string parse per event (the dominant cost
-    of the fold at bench scale); this one reads columnar struct fields
-    directly out of the scan.
-    """
-    value_cols = [f.name for f in value_schema.fields]
-    if key not in value_cols:
-        raise ValueError(f"key column {key!r} missing from value schema")
-    ev = events.select(
-        F.col(order_col).cast("long").alias("_off"),
-        F.col("operationType").alias("_op"),
-        F.col("payload")[key].alias(key),
-        F.col("payload").alias("_p"),
-        F.col(fields_col).alias("_f"),
-    ).filter(F.col(key).isNotNull())
-    return _fold(
-        ev, value_cols, key,
-        presence=lambda c: F.array_contains(F.col("_f"), c),
-        value=lambda c: F.col("_p")[c],
-        version_col=version_col)
 
 
 def apply_changes_with_truncate(events: DataFrame, value_schema: StructType,

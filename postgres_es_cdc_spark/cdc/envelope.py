@@ -7,18 +7,22 @@ utils.go:31/49). The single-partition Kafka offset / WAL LSN
 (producer.go:171) becomes an explicit ``offset`` long column — the total
 order key.
 
-Spark-first decode: ``from_json`` twice —
-  * once with the target table's StructType for typed values, and
-  * once as ``map<string,string>`` for *key presence*, because the
-    reference distinguishes "column absent from payload" (unchanged —
-    the pgoutput 'u' TOAST marker is skipped, producer.go:185-194, and
-    ES ``putAll`` leaves absent fields alone, es.go:56) from "column
-    explicitly null" (set to null, producer.go:186-187). ``from_json`` to
-    a struct collapses both to null; the map keeps the key.
+One typed change shape: ``typed_events`` parses each payload ONCE, as
+``map<string,string>``, and is the only code that turns a payload into
+typed values. Every field is a cast of its map entry (payload rows are
+flat, producer.go:129-133, and the pgoutput decoder sends every value as
+text), and ``payload_fields`` is the map's key set. The key set keeps
+the reference's distinction between "column absent from payload"
+(unchanged — the pgoutput 'u' TOAST marker is skipped,
+producer.go:185-194, and ES ``putAll`` leaves absent fields alone,
+es.go:56) and "column explicitly null" (set to null,
+producer.go:186-187), which the struct alone collapses.
+``state_as_inserts`` is the same shape for committed state re-entering
+the fold, so stored values never pass back through JSON.
 
 Corrupt payloads (unmarshal failure is skipped in the reference,
-utils.go:99-102) decode to a null map and are routed to a dead-letter
-DataFrame instead of killing the stream.
+utils.go:99-102) decode to a null map: ``typed_events`` drops them and
+``dead_letters`` exposes them instead of killing the stream.
 """
 
 from __future__ import annotations
@@ -53,25 +57,39 @@ def parse_envelope(raw: DataFrame, value_col: str = "value",
     )
 
 
-def decode_events(events: DataFrame, value_schema: StructType) -> DataFrame:
-    """Attach typed values + presence map to a flat envelope DataFrame.
+def typed_events(events: DataFrame, value_schema: StructType,
+                 order_col: str = "offset") -> DataFrame:
+    """Flat envelope rows -> the typed change shape the fold consumes:
+    (``order_col``, operationType, payload struct<value_schema>,
+    payload_fields array<string>). Unparseable payloads are dropped."""
+    m = F.from_json("payload", "map<string,string>")
+    return (events.withColumn("_m", m)
+                  .filter(F.col("_m").isNotNull())
+                  .select(order_col, "operationType",
+                          F.struct(*[F.col("_m")[f.name].cast(f.dataType)
+                                     .alias(f.name)
+                                     for f in value_schema.fields])
+                           .alias("payload"),
+                          F.map_keys("_m").alias("payload_fields")))
 
-    Adds ``_v`` (struct of ``value_schema``) and ``_present``
-    (map<string,string>; key present <=> key present in the JSON payload,
-    even when its value is JSON null).
-    """
-    return events.withColumn(
-        "_v", F.from_json("payload", value_schema)
-    ).withColumn(
-        "_present", F.from_json("payload", "map<string,string>")
-    )
+
+def state_as_inserts(state: DataFrame, value_schema: StructType,
+                     version_col: str, order_col: str = "offset") -> DataFrame:
+    """Committed state re-entering the fold: each row as a full-row
+    INSERT at its version ``version_col``, every field present (so a
+    stored null stays an explicit null), typed values untouched."""
+    names = value_schema.fieldNames()
+    return state.select(
+        F.col(version_col).alias(order_col),
+        F.lit(OP_INSERT).alias("operationType"),
+        F.struct(*names).alias("payload"),
+        F.array(*[F.lit(c) for c in names]).alias("payload_fields"))
 
 
 def dead_letters(events: DataFrame) -> DataFrame:
     """Events whose payload failed to parse (reference: skipped with a log,
     utils.go:99-102). Kept queryable instead of dropped."""
-    parsed = events.withColumn("_present", F.from_json("payload", "map<string,string>"))
-    return parsed.filter(F.col("_present").isNull()).drop("_present")
+    return events.filter(~is_valid(F.col("payload")))
 
 
 def is_valid(col_payload: Column) -> Column:

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from postgres_es_cdc_spark.cdc.envelope import state_as_inserts, typed_events
 from postgres_es_cdc_spark.cdc.generate import (
     orders_cdc_events_typed, orders_cdc_value_schema)
 from postgres_es_cdc_spark.streaming.store import SnapshotStore
@@ -37,8 +38,9 @@ from postgres_es_cdc_spark.streaming.store import SnapshotStore
 def scd2_history(events: DataFrame, schema: StructType,
                  key: str = "id") -> DataFrame:
     """Fold a typed CDC event stream (offset, operationType,
-    payload struct, payload_fields presence array — the zero-serde
-    shape of ``apply_changes_typed``) into SCD2 version history.
+    payload struct, payload_fields presence array — the shape of
+    ``apply_changes_typed``; ``envelope.typed_events`` decodes a JSON
+    envelope into it) into SCD2 version history.
     """
     cols = [f.name for f in schema.fields if f.name != key]
     op = F.col("operationType")
@@ -171,22 +173,6 @@ WHERE op <> 'DELETE'
 """
 
 
-def scd2_typed_from_envelope(events: DataFrame,
-                             schema: StructType) -> DataFrame:
-    """JSON envelope (offset, operationType, payload string) -> the
-    typed feed ``scd2_history`` consumes. Presence comes from the JSON
-    keys (key-null stays distinct from key-absent,
-    producer.go:186-187); unparseable payloads are excluded exactly as
-    the reference skips them (utils.go:99-102)."""
-    from postgres_es_cdc_spark.cdc.envelope import decode_events
-
-    ev = decode_events(events, schema)
-    return (ev.filter(F.col("_present").isNotNull())
-              .select("offset", "operationType",
-                      F.col("_v").alias("payload"),
-                      F.map_keys("_present").alias("payload_fields")))
-
-
 class Scd2Sink:
     """foreachBatch sink maintaining the full SCD2 version history in a
     parquet directory — the audit-trail twin of ``UpsertSink`` (which
@@ -194,9 +180,11 @@ class Scd2Sink:
 
     Incremental fold per micro-batch:
       * closed versions (valid_to set) are immutable — carried through;
-      * each CURRENT version re-enters the fold as a synthetic
-        full-row INSERT at its own valid_from (all fields present, so
-        merged nulls stay explicit); new events stack on top, closing /
+      * each CURRENT version re-enters the fold as a typed full-row
+        INSERT at its own valid_from (``envelope.state_as_inserts``, the
+        helper ``UpsertSink`` shares: all fields present, so merged
+        nulls stay explicit); new events — decoded once by
+        ``envelope.typed_events`` — stack on top, closing /
         resetting it as scd2_history dictates; the original version_op
         is restored afterward;
       * replay safety: batch events at or below a key's high-water
@@ -235,10 +223,8 @@ class Scd2Sink:
             return                      # committed replay: no-op
         spark = batch.sparkSession
         key, schema = self.key, self.schema
-        cols = [f.name for f in schema.fields if f.name != key]
-        all_fields = [f.name for f in schema.fields]
-        ev = scd2_typed_from_envelope(batch, schema)
-        ev = ev.withColumn("_k", F.col(f"payload.{key}"))
+        ev = typed_events(batch, schema).withColumn(
+            "_k", F.col(f"payload.{key}"))
 
         closed = current = None
         hist = self._st.state(spark)
@@ -253,13 +239,7 @@ class Scd2Sink:
                     .drop("_hw"))
             closed = hist.filter(F.col("valid_to").isNotNull())
             current = hist.filter(F.col("valid_to").isNull())
-            synth = current.select(
-                F.col("valid_from").alias("offset"),
-                F.lit("INSERT").alias("operationType"),
-                F.struct(F.col(key).alias(key),
-                         *[F.col(c) for c in cols]).alias("payload"),
-                F.array(*[F.lit(f) for f in all_fields])
-                 .alias("payload_fields"))
+            synth = state_as_inserts(current, schema, "valid_from")
             fold_in = synth.unionByName(ev.drop("_k"))
         else:
             fold_in = ev.drop("_k")

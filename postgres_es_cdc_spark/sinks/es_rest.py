@@ -98,11 +98,15 @@ def es_bulk_requests(events: DataFrame, key: str = "id",
       DELETE -> {"delete": {"_index": t, "_id": k}} (action line only)
 
     Chunking: row_number per (tableName) in offset order, `max_actions`
-    actions per body — per-key ordering is preserved because chunk
-    order follows offset order within the index. Scale shape: pure
-    JVM expressions (from_json/to_json/concat) + one window in the
-    same tableName partitioning the downstream executor group needs;
-    output is |events|/max_actions request rows."""
+    actions per body. The output is hash-partitioned by tableName, so
+    every chunk of one index sits in ONE partition and
+    `execute_es_requests` posts them from one task in first_offset
+    order — per-key ordering holds however many chunks an index has
+    (chunks of one index spread over partitions would post
+    concurrently, and an UPDATE could reach ES before its INSERT).
+    Scale shape: pure JVM expressions (from_json/to_json/concat), one
+    window, and a final shuffle of the |events|/max_actions request
+    rows."""
     from pyspark.sql import Window
 
     p = F.from_json("payload", "map<string,string>")
@@ -150,7 +154,8 @@ def es_bulk_requests(events: DataFrame, key: str = "id",
                            F.concat(F.col("body"), F.lit("\n"))
                             .alias("body"),
                            F.lit("POST").alias("method"),
-                           F.lit("/_bulk").alias("path")))
+                           F.lit("/_bulk").alias("path"))
+                   .repartition("tableName"))
 
 
 def execute_es_requests(requests: DataFrame, base_url: str,
@@ -160,10 +165,11 @@ def execute_es_requests(requests: DataFrame, base_url: str,
     request frames above: per-event plans carry `offset`, bulk plans
     carry `first_offset`; either orders the posts. Stdlib-only (urllib)
     so it works wherever the
-    executors run. Rows post per partition in offset order (repartition
-    by the doc key upstream if strict per-key ordering across
-    partitions is required — the same single-writer assumption as the
-    reference's one-partition topic, utils.go:49). Non-2xx responses
+    executors run. Rows post per partition in offset order; partitions
+    post concurrently, so strict per-key ordering needs each key's
+    requests in one partition — `es_bulk_requests` partitions by index
+    (the same single-writer assumption as the reference's one-partition
+    topic, utils.go:49). Non-2xx responses
     raise, failing the Spark task (at-least-once with the keyed
     idempotent request shapes above).
 

@@ -29,8 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from postgres_es_cdc_spark.cdc.apply import apply_changes
-from postgres_es_cdc_spark.cdc.envelope import EVENT_SCHEMA, parse_envelope
+from postgres_es_cdc_spark.cdc.apply import apply_changes_typed
+from postgres_es_cdc_spark.cdc.envelope import (
+    EVENT_SCHEMA, parse_envelope, state_as_inserts, typed_events)
 from postgres_es_cdc_spark.streaming.store import VersionedStore
 
 
@@ -89,9 +90,12 @@ class UpsertSink(VersionedStore):
     table (utils.go:104-108), with MERGE semantics instead of per-event
     HTTP calls.
 
-    Merge strategy: fold the incoming micro-batch with ``apply_changes``
-    -> combine with existing state via the same per-column
-    last-writer-wins rules -> write a new version. (With a Delta/Iceberg
+    Merge strategy: decode the micro-batch once (``typed_events``),
+    union the committed state as typed full-row INSERTs
+    (``state_as_inserts``), fold both with ``apply_changes_typed`` —
+    the same per-column last-writer-wins rules — and write a new
+    version. State stays typed rows end to end, so a row no batch
+    touches reads back bit-identical. (With a Delta/Iceberg
     sink this becomes MERGE INTO; plain parquet keeps the dependency
     surface of this repo minimal while the fold logic — the part under
     test — is identical.)
@@ -140,23 +144,18 @@ class UpsertSink(VersionedStore):
         dir, which becomes current at the sink's commit."""
         schema = self.schemas[name]
         path = self.table_path(name)
-        # Represent existing state as synthetic INSERT events at offset -1:
-        # batch events (all offsets >= 0) then override per column/key by
-        # exactly the apply_changes rules. DELETEs in the batch drop
-        # existing keys; sparse UPDATEs merge onto existing rows.
-        events = batch.select(self.order_col, "operationType", "tableName", "payload")
+        # Committed state re-enters the fold as typed full-row INSERTs at
+        # each row's version: batch events at higher offsets then
+        # override per column/key by exactly the apply_changes rules.
+        # DELETEs in the batch drop existing keys; sparse UPDATEs merge
+        # onto existing rows; stored values never pass through JSON.
+        events = typed_events(batch, schema, self.order_col)
         if os.path.exists(path):
-            prior = spark.read.parquet(path)
-            prior_ev = prior.select(
-                F.col(self.VERSION_COL).alias(self.order_col),
-                F.lit("INSERT").alias("operationType"),
-                F.lit(name).alias("tableName"),
-                F.to_json(F.struct(*[F.col(f.name) for f in schema.fields]),
-                          {"ignoreNullFields": "false"}).alias("payload"),
-            )
-            events = events.unionByName(prior_ev)
-        state = apply_changes(events, schema, self.key, self.order_col,
-                              version_col=self.VERSION_COL)
+            events = events.unionByName(state_as_inserts(
+                spark.read.parquet(path), schema, self.VERSION_COL,
+                self.order_col))
+        state = apply_changes_typed(events, schema, self.key, self.order_col,
+                                    version_col=self.VERSION_COL)
         return self.land({name: state}, batch_id)[name]
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:

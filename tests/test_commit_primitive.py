@@ -1,6 +1,7 @@
 """Every versioned sink commits through streaming/store.py: no other
-module of the package may call os.replace (the manifest repoint), so a
-hand-rolled copy of the commit protocol cannot come back unnoticed."""
+module of the package may call os.replace (the manifest repoint) or
+os.rename (a commit-by-rename swap), so a hand-rolled copy of the
+commit protocol cannot come back unnoticed."""
 
 from __future__ import annotations
 
@@ -12,17 +13,18 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 STORE = os.path.join(PKG, "streaming", "store.py")
 
 
-def _replace_calls(path: str) -> list:
+def _calls(path: str, names=("replace", "rename", "renames")) -> list:
+    """Lines of ``path`` that reach ``os.<name>`` for any of ``names``."""
     with open(path) as f:
         tree = ast.parse(f.read(), path)
     hits = []
     for node in ast.walk(tree):
-        if (isinstance(node, ast.Attribute) and node.attr == "replace"
+        if (isinstance(node, ast.Attribute) and node.attr in names
                 and isinstance(node.value, ast.Name)
                 and node.value.id == "os"):
             hits.append(node.lineno)
         if (isinstance(node, ast.ImportFrom) and node.module == "os"
-                and any(a.name == "replace" for a in node.names)):
+                and any(a.name in names for a in node.names)):
             hits.append(node.lineno)
     return hits
 
@@ -34,6 +36,6 @@ def test_only_the_store_calls_os_replace():
             path = os.path.join(root, name)
             if name.endswith(".py") and path != STORE:
                 offenders += [f"{os.path.relpath(path, PKG)}:{line}"
-                              for line in _replace_calls(path)]
+                              for line in _calls(path)]
     assert offenders == [], offenders
-    assert _replace_calls(STORE), "the store itself must commit"
+    assert _calls(STORE, ("replace",)), "the store itself must commit"

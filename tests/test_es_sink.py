@@ -218,3 +218,48 @@ def test_execute_es_requests_bulk_loopback(spark):
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+def test_es_forwarding_posts_each_index_from_one_task(spark, tmp_path,
+                                                      monkeypatch):
+    """Per-key order in ES needs every chunk of one index posted by ONE
+    task (sorted by first_offset there): chunks of one index spread over
+    partitions post concurrently, and an UPDATE can overtake its INSERT.
+    The guarantee must not rest on the planner happening to reuse an
+    upstream partitioning, so the grouping keys are all required."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import _parse_datatype_string
+
+    from postgres_es_cdc_spark.sinks import es_rest
+
+    rows = [(t * 100 + i, "INSERT", name, f'{{"id":"{i}","v":"x"}}', None)
+            for t, name in enumerate(("a", "b", "c", "d"))
+            for i in range(1, 7)]
+    batch = spark.createDataFrame(
+        rows, "offset long, operationType string, tableName string, "
+              "payload string, txn_id long")
+    schema = _parse_datatype_string("id long, v string")
+    sink = es_rest.EsForwardingTxnSink(
+        str(tmp_path / "state"), {n: schema for n in "abcd"},
+        es_url="http://127.0.0.1:9", max_actions=1)
+
+    posted = {}
+
+    def capture(reqs, base_url, timeout=10.0):
+        parts = reqs.select("tableName", F.spark_partition_id().alias("p"))
+        for r in parts.collect():
+            posted.setdefault(r.tableName, set()).add(r.p)
+
+    monkeypatch.setattr(es_rest, "execute_es_requests", capture)
+    confs = {"spark.sql.adaptive.coalescePartitions.enabled": "false",
+             "spark.sql.requireAllClusterKeysForDistribution": "true"}
+    old = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        sink.apply_batch(batch, 0)
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert set(posted) == set("abcd")
+    assert all(len(p) == 1 for p in posted.values()), posted

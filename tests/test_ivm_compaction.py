@@ -1,5 +1,5 @@
-"""Tests for the incremental-aggregate sink (streaming/ivm.py) and
-small-file compaction (sources/compaction.py)."""
+"""Tests for the incremental-aggregate and join sinks
+(streaming/ivm.py), including the join sink's log compaction."""
 
 from __future__ import annotations
 
@@ -9,8 +9,6 @@ import os
 
 from pyspark.sql import functions as F
 
-from postgres_es_cdc_spark.sources.compaction import (
-    compact_parquet_dir, plan_compaction)
 from postgres_es_cdc_spark.streaming.ivm import AggSink
 
 
@@ -63,31 +61,6 @@ def test_agg_sink_stream_matches_batch(spark, tmp_path):
     want = {r.k: (r.s, r.n, r.mn, r.mx) for r in want_df.collect()}
     assert got == want
 
-
-def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
-    path = str(tmp_path / "t")
-    df = spark.range(0, 10000).select(
-        F.col("id"), (F.col("id") % 7).alias("g"))
-    df.repartition(40).write.mode("overwrite").parquet(path)
-    before = plan_compaction(path, target_bytes=10**9)
-    assert before["n_files"] == 40
-
-    result = compact_parquet_dir(spark, path, target_bytes=10**9)
-    assert result["compacted"]
-    after = plan_compaction(path, target_bytes=10**9)
-    assert after["n_files"] == 1
-
-    got = spark.read.parquet(path)
-    assert got.count() == 10000
-    assert got.agg(F.sum("id")).first()[0] == sum(range(10000))
-
-
-def test_compaction_noop_when_already_compact(spark, tmp_path):
-    path = str(tmp_path / "t")
-    spark.range(0, 100).coalesce(1).write.mode("overwrite").parquet(path)
-    result = compact_parquet_dir(spark, path, target_bytes=10**9)
-    assert not result["compacted"]
-    assert spark.read.parquet(path).count() == 100
 
 def test_agg_sink_replay_is_noop_and_torn_write_invisible(spark, tmp_path):
     """SUM/COUNT are not idempotent: a redelivered micro-batch must be

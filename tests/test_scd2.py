@@ -142,8 +142,9 @@ def _hist_rows(spark, path):
 def test_scd2_sink_incremental_equals_batch(spark, tmp_path):
     """History after two micro-batches == one batch fold over all
     events."""
-    from postgres_es_cdc_spark.cdc.scd2 import (
-        Scd2Sink, scd2_history, scd2_typed_from_envelope)
+    from postgres_es_cdc_spark.cdc.envelope import (
+        typed_events as scd2_typed_from_envelope)
+    from postgres_es_cdc_spark.cdc.scd2 import Scd2Sink, scd2_history
 
     schema = _parse_datatype_string(SCHEMA)
     sink = Scd2Sink(str(tmp_path / "hist"), schema)
