@@ -10,18 +10,14 @@ that torn state permanently. Here transactions are first-class:
   * events may carry a ``txn_id`` column (null = autocommit, applied
     unconditionally — the reference's only mode);
   * ``COMMIT`` marker events declare a transaction durable;
-  * ``committed_events`` keeps only data events whose transaction has
-    committed — the batch building block;
+  * ``tag_committed`` marks each data event committed or not in one
+    pass; ``committed_events`` keeps the committed ones — the batch
+    building block;
   * ``TxnUpsertSink`` applies a stream at transaction granularity: data
     events of transactions without a COMMIT yet are parked in a pending
     buffer instead of the sink, so after ANY micro-batch boundary (or a
     crash between batches) the materialized state sits exactly at the
     last committed transaction boundary — never inside a transaction.
-
-Scale shape: the commit set is one short row per transaction; the
-filter is a semi/anti join on ``txn_id`` that AQE turns into a
-broadcast join whenever the per-batch transaction count is small (the
-normal case — transactions per micro-batch << rows per micro-batch).
 """
 
 from __future__ import annotations
@@ -37,6 +33,7 @@ from postgres_es_cdc_spark.streaming.pipeline import UpsertSink
 OP_BEGIN = "BEGIN"    # producer.go:163 (dropped there, honored here)
 OP_COMMIT = "COMMIT"  # producer.go:164
 _MARKER_OPS = (OP_BEGIN, OP_COMMIT)
+COMMITTED = "_committed"  # tag_committed's flag column
 
 # Envelope extension: EVENT_SCHEMA + a nullable transaction id.
 TXN_EVENT_SCHEMA = (
@@ -51,25 +48,30 @@ def commit_ids(events: DataFrame, txn_col: str = "txn_id") -> DataFrame:
                   .select(txn_col).distinct())
 
 
+def tag_committed(events: DataFrame, txn_col: str = "txn_id") -> DataFrame:
+    """The data events of ``events`` (BEGIN/COMMIT markers carry no
+    payload and are dropped), each with a boolean ``COMMITTED`` column:
+    true for autocommit (null txn) and for members of a transaction
+    whose COMMIT is in ``events``; false for the ones that must wait
+    (their COMMIT may arrive in a later micro-batch). One left join to
+    the commit ids — a short list, one row per transaction."""
+    data = events.filter(~F.col("operationType").isin(*_MARKER_OPS))
+    commits = commit_ids(events, txn_col).withColumn("_commit", F.lit(True))
+    return (data.join(commits, on=txn_col, how="left")
+                .select(*events.columns,
+                        (F.col(txn_col).isNull()
+                         | F.col("_commit").isNotNull()).alias(COMMITTED)))
+
+
 def committed_events(events: DataFrame,
                      txn_col: str = "txn_id") -> DataFrame:
     """Data events safe to apply: autocommit (null txn) plus members of
-    committed transactions. BEGIN/COMMIT markers themselves are dropped
-    (they carry no payload)."""
-    data = events.filter(~F.col("operationType").isin(*_MARKER_OPS))
-    committed = data.join(commit_ids(events, txn_col),
-                          on=txn_col, how="left_semi")
-    autocommit = data.filter(F.col(txn_col).isNull())
-    return autocommit.unionByName(committed)
+    committed transactions."""
+    return _committed(tag_committed(events, txn_col), True)
 
 
-def pending_events(events: DataFrame, txn_col: str = "txn_id") -> DataFrame:
-    """Data events that must wait: members of transactions with no
-    COMMIT yet. (Their COMMIT may arrive in a later micro-batch.)"""
-    data = events.filter(~F.col("operationType").isin(*_MARKER_OPS))
-    return (data.filter(F.col(txn_col).isNotNull())
-                .join(commit_ids(events, txn_col),
-                      on=txn_col, how="left_anti"))
+def _committed(tagged: DataFrame, committed: bool) -> DataFrame:
+    return tagged.filter(F.col(COMMITTED) == committed).drop(COMMITTED)
 
 
 def apply_changes_transactional(events: DataFrame,
@@ -90,9 +92,12 @@ def apply_changes_transactional(events: DataFrame,
 class TxnUpsertSink(UpsertSink):
     """UpsertSink that never materializes a partial transaction.
 
-    Per micro-batch: (pending buffer ∪ batch) splits into committed
-    events (folded into state via the parent's merge) and still-pending
-    ones (landed as the new buffer). The tables, the buffer, the
+    Per micro-batch: (pending buffer ∪ batch) is tagged committed or
+    pending and materialized ONCE; the committed rows fold into state
+    via the parent's merge and feed ``_on_committed``, the pending ones
+    land as the new buffer — every consumer reads that one
+    materialization, so the batch is decoded and split once, however
+    many tables and hooks read it. The tables, the buffer, the
     caller's decode ``context`` and the batch id commit in ONE
     VersionedStore repoint, so a transaction spanning micro-batches
     applies atomically in the batch where its COMMIT arrives, and a
@@ -119,8 +124,8 @@ class TxnUpsertSink(UpsertSink):
         events = batch
         if os.path.exists(pending_path):
             events = events.unionByName(spark.read.parquet(pending_path))
-        ready = committed_events(events, self.txn_col)
-        still_pending = pending_events(events, self.txn_col)
+        tagged = tag_committed(events, self.txn_col).localCheckpoint()
+        ready = _committed(tagged, True)
         frames = {name: self._merge(spark, name,
                                     ready.filter(F.col("tableName") == name),
                                     batch_id)
@@ -132,7 +137,8 @@ class TxnUpsertSink(UpsertSink):
         self._on_committed(ready, batch_id)
         # the new buffer lands beside the OLD one, which stays current
         # (and is read by this write) until the commit
-        frames.update(self.land({self.PENDING: still_pending}, batch_id))
+        frames.update(self.land({self.PENDING: _committed(tagged, False)},
+                                batch_id))
         self.commit(batch_id, {**frames, "context": context})
 
     def _on_committed(self, ready: DataFrame, batch_id: int) -> None:

@@ -1,6 +1,7 @@
 """In-process Elasticsearch stand-in: a loopback HTTP server that
 APPLIES the engine's rendered request plans — per-event
-(`es_consumer_requests`) and `_bulk` NDJSON (`es_bulk_requests`) — to
+(`es_consumer_requests`) and `_bulk` NDJSON (`es_bulk_actions`, posted
+by `post_bulk`) — to
 an in-memory document store with the observable semantics of the real
 endpoints the reference drives (es.go:47-144):
 
@@ -33,8 +34,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 class EsStore:
     """index -> {doc_id -> {field -> value}} with ES-shaped mutations.
 
-    Thread-safe (the bulk executor posts from executor threads); every
-    mutation holds the store lock."""
+    Thread-safe (the server handles each request on its own thread);
+    every mutation holds the store lock."""
 
     def __init__(self) -> None:
         self.indices: dict[str, dict[str, dict]] = {}
@@ -123,7 +124,7 @@ def serve_store(store: EsStore):
             try:
                 store.apply(self.command, self.path, body)
                 out, code = b'{"errors":false}', 200
-            except Exception as e:  # surface as a 4xx -> task failure
+            except Exception as e:  # surface as a 4xx -> batch failure
                 out, code = json.dumps({"error": str(e)}).encode(), 400
             self.send_response(code)
             self.send_header("Content-Type", "application/json")

@@ -18,13 +18,16 @@ Reference parity, per operation:
   DELETE  -> `POST /{index}/_delete_by_query` with the same `match`
              (es.go:112-144).
 
-Everything is JVM-side (`from_json` + `to_json` on nested structs) —
-no Python in the per-event path; at scale this is a scan-shaped pass
-whose output feeds a bulk executor, replacing the reference's one
-blocking round-trip per event (its stated throughput bound, SURVEY §6).
+Rendering is JVM-side (`from_json` + `to_json` on nested structs) —
+no Python in the per-event path. Execution is one driver loop per plan
+that posts in offset order, so per-key order needs no partitioning
+invariant; `_bulk` amortizes the reference's one blocking round-trip
+per event (its stated throughput bound, SURVEY §6).
 """
 
 from __future__ import annotations
+
+import urllib.request
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,29 +35,33 @@ from pyspark.sql import functions as F
 PUTALL_SCRIPT = "ctx._source.putAll(params.data)"  # es.go:56
 
 
+def _keyed(events: DataFrame, key: str) -> DataFrame:
+    """INSERT/UPDATE/DELETE rows with the payload parsed (`_p`) and the
+    key extracted (`_k`). Rows whose payload fails to parse or lacks
+    the key are dropped, mirroring the consumer's skip-and-log
+    (utils.go:99-102) — dead_letters() exposes them upstream."""
+    return (events
+            .filter(F.col("operationType").isin("INSERT", "UPDATE", "DELETE"))
+            .withColumn("_p", F.from_json("payload", "map<string,string>"))
+            .withColumn("_k", F.col("_p")[key])
+            .filter(F.col("_k").isNotNull()))
+
+
+def _putall_script():
+    return F.struct(
+        F.lit(PUTALL_SCRIPT).alias("source"),
+        F.lit("painless").alias("lang"),
+        F.struct(F.col("_p").alias("data")).alias("params"),
+    ).alias("script")
+
+
 def es_consumer_requests(events: DataFrame, key: str = "id") -> DataFrame:
     """Envelope rows (offset, operationType, tableName, payload JSON)
-    -> ordered REST requests (offset, method, path, body). Rows whose
-    payload fails to parse or lacks the key are dropped, mirroring the
-    consumer's skip-and-log (utils.go:99-102) — dead_letters() exposes
-    them upstream."""
-    p = F.from_json("payload", "map<string,string>")
-    ev = (events
-          .withColumn("_p", p)
-          .filter(F.col("_p").isNotNull())
-          .withColumn("_k", F.col("_p")[key])
-          .filter(F.col("_k").isNotNull()))
-
+    -> REST requests (offset, method, path, body), one per event;
+    unparseable and keyless rows are dropped (`_keyed`)."""
     match_q = F.struct(
         F.struct(F.col("_k").alias(key)).alias("match")).alias("query")
-    update_body = F.to_json(F.struct(
-        F.struct(
-            F.lit(PUTALL_SCRIPT).alias("source"),
-            F.lit("painless").alias("lang"),
-            F.struct(F.col("_p").alias("data")).alias("params"),
-        ).alias("script"),
-        match_q,
-    ))
+    update_body = F.to_json(F.struct(_putall_script(), match_q))
     delete_body = F.to_json(F.struct(match_q))
     insert_body = F.to_json(F.col("_p"))
 
@@ -72,23 +79,23 @@ def es_consumer_requests(events: DataFrame, key: str = "id") -> DataFrame:
     body = (F.when(F.col("operationType") == "INSERT", insert_body)
              .when(F.col("operationType") == "UPDATE", update_body)
              .otherwise(delete_body))
-    return (ev.filter(F.col("operationType")
-                       .isin("INSERT", "UPDATE", "DELETE"))
-              .select("offset", method.alias("method"), path.alias("path"),
-                      body.alias("body")))
+    return _keyed(events, key).select(
+        "offset", method.alias("method"), path.alias("path"),
+        body.alias("body"))
 
 
 BULK_MAX_ACTIONS = 500
 
 
-def es_bulk_requests(events: DataFrame, key: str = "id",
-                     max_actions: int = BULK_MAX_ACTIONS) -> DataFrame:
-    """Envelope rows -> Elasticsearch `_bulk` NDJSON request bodies —
-    the amortized form of es_consumer_requests and THE fix for the
-    reference's stated throughput bound (one blocking HTTP round-trip
-    per event, es.go:100/77/135): N actions ride one request.
+def es_bulk_actions(events: DataFrame, key: str = "id") -> DataFrame:
+    """Envelope rows -> one Elasticsearch `_bulk` NDJSON action per
+    change, (tableName, offset, action): the amortized form of
+    es_consumer_requests and THE fix for the reference's stated
+    throughput bound (one blocking HTTP round-trip per event,
+    es.go:100/77/135) — `bulk_bodies` packs N actions per request.
 
-    Per action, byte-parity with the per-event plan is preserved:
+    Per action, byte-parity with the per-event plan is preserved
+    (an action's lines are joined by one newline, with none trailing):
       INSERT -> {"index": {"_index": t, "_id": k}} + the document
                 (keyed, so replays stay idempotent — unlike es.go:95-98)
       UPDATE -> {"update": {"_index": t, "_id": k}} + {"script":
@@ -97,27 +104,7 @@ def es_bulk_requests(events: DataFrame, key: str = "id",
                 on the key resolves to exactly this document)
       DELETE -> {"delete": {"_index": t, "_id": k}} (action line only)
 
-    Chunking: row_number per (tableName) in offset order, `max_actions`
-    actions per body. The output is hash-partitioned by tableName, so
-    every chunk of one index sits in ONE partition and
-    `execute_es_requests` posts them from one task in first_offset
-    order — per-key ordering holds however many chunks an index has
-    (chunks of one index spread over partitions would post
-    concurrently, and an UPDATE could reach ES before its INSERT).
-    Scale shape: pure JVM expressions (from_json/to_json/concat), one
-    window, and a final shuffle of the |events|/max_actions request
-    rows."""
-    from pyspark.sql import Window
-
-    p = F.from_json("payload", "map<string,string>")
-    ev = (events
-          .withColumn("_p", p)
-          .filter(F.col("_p").isNotNull())
-          .withColumn("_k", F.col("_p")[key])
-          .filter(F.col("_k").isNotNull())
-          .filter(F.col("operationType")
-                   .isin("INSERT", "UPDATE", "DELETE")))
-
+    A projection: no shuffle, no window."""
     meta = F.struct(F.col("tableName").alias("_index"),
                     F.col("_k").alias("_id"))
     action = (F.when(F.col("operationType") == "INSERT",
@@ -125,76 +112,73 @@ def es_bulk_requests(events: DataFrame, key: str = "id",
                .when(F.col("operationType") == "UPDATE",
                      F.to_json(F.struct(meta.alias("update"))))
                .otherwise(F.to_json(F.struct(meta.alias("delete")))))
-    update_line = F.to_json(F.struct(F.struct(
-        F.lit(PUTALL_SCRIPT).alias("source"),
-        F.lit("painless").alias("lang"),
-        F.struct(F.col("_p").alias("data")).alias("params"),
-    ).alias("script")))
     doc_line = (F.when(F.col("operationType") == "INSERT",
                        F.to_json(F.col("_p")))
-                 .when(F.col("operationType") == "UPDATE", update_line))
-    lines = F.concat_ws("\n", action, doc_line)  # skips null doc_line
+                 .when(F.col("operationType") == "UPDATE",
+                       F.to_json(F.struct(_putall_script()))))
+    return _keyed(events, key).select(       # concat_ws skips a null doc
+        "tableName", "offset",
+        F.concat_ws("\n", action, doc_line).alias("action"))
 
-    w = Window.partitionBy("tableName").orderBy("offset")
-    chunked = (ev.select("tableName", "offset", lines.alias("_l"))
-                 .withColumn("_rn", F.row_number().over(w))
-                 .withColumn("chunk_id",
-                             F.expr(f"(_rn - 1) div {max_actions}")
-                              .cast("long")))
-    return (chunked.groupBy("tableName", "chunk_id")
-                   .agg(F.count(F.lit(1)).alias("n_actions"),
-                        F.min("offset").alias("first_offset"),
-                        F.concat_ws(
-                            "\n",
-                            F.array_sort(F.collect_list(
-                                F.struct("offset", "_l"))).getField("_l"))
-                        .alias("body"))
-                   .select("tableName", "chunk_id", "n_actions",
-                           "first_offset",
-                           F.concat(F.col("body"), F.lit("\n"))
-                            .alias("body"),
-                           F.lit("POST").alias("method"),
-                           F.lit("/_bulk").alias("path"))
-                   .repartition("tableName"))
+
+def bulk_bodies(actions, max_actions: int = BULK_MAX_ACTIONS):
+    """(index, action) pairs in offset order -> (index, `_bulk` body)
+    in post order. Actions accumulate per index; an index's body is
+    emitted as soon as it holds `max_actions` actions, and the partial
+    bodies follow in order of each index's first action. Every body
+    ends with the newline the `_bulk` API requires. Per-key order holds
+    because each index's bodies come out in offset order."""
+    pending: dict[str, list[str]] = {}
+    for index, action in actions:
+        lines = pending.setdefault(index, [])
+        lines.append(action)
+        if len(lines) == max_actions:
+            yield index, "\n".join(lines) + "\n"
+            lines.clear()
+    for index, lines in pending.items():
+        if lines:
+            yield index, "\n".join(lines) + "\n"
+
+
+def _post(base_url: str, method: str, path: str, body: str,
+          timeout: float) -> None:
+    """One request; non-2xx raises (urllib raises on 4xx/5xx itself)."""
+    req = urllib.request.Request(
+        base_url.rstrip("/") + path, data=body.encode("utf-8"),
+        method=method, headers={"Content-Type": "application/json"})
+    with urllib.request.urlopen(req, timeout=timeout) as resp:
+        if resp.status >= 300:
+            raise RuntimeError(f"ES request failed: {resp.status} {path}")
+
+
+def post_bulk(actions: DataFrame, base_url: str,
+              max_actions: int = BULK_MAX_ACTIONS,
+              timeout: float = 10.0) -> None:
+    """EXECUTE `es_bulk_actions` output: stream the actions to the
+    driver in offset order and POST `/_bulk` bodies as `bulk_bodies`
+    emits them. `toLocalIterator` fetches one partition at a time, so
+    driver memory is bounded by one partition plus up to `max_actions`
+    pending lines per index, not by the batch size."""
+    rows = actions.orderBy("offset").toLocalIterator()
+    for _, body in bulk_bodies(((r["tableName"], r["action"]) for r in rows),
+                               max_actions):
+        _post(base_url, "POST", "/_bulk", body, timeout)
 
 
 def execute_es_requests(requests: DataFrame, base_url: str,
                         timeout: float = 10.0) -> None:
-    """EXECUTE a rendered REST plan against a live
-    Elasticsearch-compatible endpoint — the runnable form of BOTH
-    request frames above: per-event plans carry `offset`, bulk plans
-    carry `first_offset`; either orders the posts. Stdlib-only (urllib)
-    so it works wherever the
-    executors run. Rows post per partition in offset order; partitions
-    post concurrently, so strict per-key ordering needs each key's
-    requests in one partition — `es_bulk_requests` partitions by index
-    (the same single-writer assumption as the reference's one-partition
-    topic, utils.go:49). Non-2xx responses
-    raise, failing the Spark task (at-least-once with the keyed
+    """EXECUTE a rendered per-event plan (`es_consumer_requests`)
+    against a live Elasticsearch-compatible endpoint: the driver
+    streams the requests in offset order (one partition at a time, as
+    in `post_bulk`) and posts each, stdlib-only (urllib). Non-2xx
+    responses raise, failing the batch (at-least-once with the keyed
     idempotent request shapes above).
 
     In-sandbox the loopback round-trip test drives this against a fake
     recording server (tests/test_es_sink.py) — the closable slice of
     the live-wire gap: byte-exact bodies leaving over a real socket."""
-    def run_partition(rows):
-        import urllib.request
-
-        def order_key(row):
-            d = row.asDict()
-            return d["offset"] if "offset" in d else d["first_offset"]
-
-        for r in sorted(rows, key=order_key):
-            req = urllib.request.Request(
-                base_url.rstrip("/") + r["path"],
-                data=r["body"].encode("utf-8"),
-                method=r["method"],
-                headers={"Content-Type": "application/json"})
-            with urllib.request.urlopen(req, timeout=timeout) as resp:
-                if resp.status >= 300:
-                    raise RuntimeError(
-                        f"ES request failed: {resp.status} {r['path']}")
-
-    requests.foreachPartition(run_partition)
+    for r in requests.orderBy("offset").toLocalIterator():
+        _post(base_url, r["method"], r["path"], r["body"], timeout)
 
 
 from postgres_es_cdc_spark.cdc.txn import TxnUpsertSink  # noqa: E402
@@ -208,12 +192,16 @@ class EsForwardingTxnSink(TxnUpsertSink):
     + es.go:47-144 bodies, minus the one-blocking-RTT-per-event bound).
 
     Implementation: a TxnUpsertSink whose `_on_committed` hook renders
-    `es_bulk_requests` over the batch's committed events and posts them
-    via `execute_es_requests`. The hook runs after the state merges land
-    and before the batch's one commit (tables, pending buffer, decode
-    context and batch id together), so a crash in between replays the
-    batch — at-least-once, safe because every request shape is keyed
-    and idempotent (index-by-id, putAll-by-id, delete-by-id).
+    `es_bulk_actions` over the batch's committed events (already
+    materialized by the sink) and posts them via `post_bulk`. The
+    driver is the one ES writer per batch, as in the reference's one
+    sequential consumer: a distributed poster could use at most one
+    task per index anyway, because per-key order forbids more. The hook
+    runs after the state merges land and before the batch's one commit
+    (tables, pending buffer, decode context and batch id together), so
+    a crash in between replays the batch — at-least-once, safe because
+    every request shape is keyed and idempotent (index-by-id,
+    putAll-by-id, delete-by-id).
 
     Only committed transactions ever reach ES — the torn-state window
     the reference leaves open (producer.go:163-164 discards the
@@ -228,6 +216,5 @@ class EsForwardingTxnSink(TxnUpsertSink):
         self.max_actions = max_actions
 
     def _on_committed(self, ready, batch_id):
-        reqs = es_bulk_requests(ready, key=self.key,
-                                max_actions=self.max_actions)
-        execute_es_requests(reqs, self.es_url)
+        post_bulk(es_bulk_actions(ready, key=self.key), self.es_url,
+                  self.max_actions)

@@ -617,13 +617,14 @@ def assign_txn_ids(events: DataFrame,
 
 def decode_wal_stream(messages: DataFrame, data_col: str = "data",
                       offset_col: str = "offset") -> DataFrame:
-    """Full frontend: relation pass + decode pass + txn assignment.
+    """Full frontend: decode in WAL order (each row against the
+    Relation version current at its offset) + txn assignment.
     The result feeds cdc.txn.committed_events / apply_changes directly —
     i.e. producer.go:110-195 and its Begin/Commit drop (producer.go:
     163-164) replaced by a decode that KEEPS transaction atomicity."""
-    cache = relation_cache(messages, data_col)
-    return assign_txn_ids(
-        decode_messages(messages, cache, data_col, offset_col))
+    wal = messages.select(F.col(offset_col).alias("offset"),
+                          F.col(data_col).alias("data"))
+    return assign_txn_ids(decode_with_relation_resends(wal, {})[0])
 
 
 # ---------------------------------------------------------------------------

@@ -50,15 +50,13 @@ def test_es_consumer_requests_golden_bodies(spark):
     assert json.loads(dele.body) == {"query": {"match": {"id": "7"}}}
 
 
-def test_es_bulk_requests_ndjson_golden(spark):
+def test_es_bulk_actions_ndjson_golden(spark):
     """_bulk bodies: N actions per request, NDJSON action/doc line
     pairs, same painless putAll script as the per-event plan, per-key
     order preserved via offset-ordered chunking, trailing newline (the
     _bulk API requires it)."""
-    import json
-
     from postgres_es_cdc_spark.sinks.es_rest import (
-        PUTALL_SCRIPT, es_bulk_requests)
+        bulk_bodies, es_bulk_actions)
 
     events = spark.createDataFrame(
         [
@@ -71,35 +69,27 @@ def test_es_bulk_requests_ndjson_golden(spark):
         ],
         "offset long, operationType string, tableName string, payload string",
     )
-    out = {(r.tableName, r.chunk_id): r
-           for r in es_bulk_requests(events, max_actions=2).collect()}
-    assert set(out) == {("users", 0), ("users", 1), ("orders", 0)}
-    assert all(r.method == "POST" and r.path == "/_bulk"
-               for r in out.values())
-
-    u0 = out[("users", 0)]
-    assert u0.n_actions == 2 and u0.first_offset == 1
-    assert u0.body.endswith("\n")
-    lines = u0.body.rstrip("\n").split("\n")
-    assert len(lines) == 4
-    assert json.loads(lines[0]) == {"index": {"_index": "users",
-                                              "_id": "7"}}
-    assert json.loads(lines[1]) == {"id": "7", "name": "ada"}
-    assert json.loads(lines[2]) == {"update": {"_index": "users",
-                                               "_id": "7"}}
-    script = json.loads(lines[3])["script"]
-    assert script["source"] == PUTALL_SCRIPT
-    assert script["params"]["data"] == {"id": "7", "email": "a@b.c"}
-
-    u1 = out[("users", 1)]
-    lines = u1.body.rstrip("\n").split("\n")
-    assert u1.n_actions == 1 and len(lines) == 1
-    assert json.loads(lines[0]) == {"delete": {"_index": "users",
-                                               "_id": "7"}}
-
-    o0 = out[("orders", 0)]
-    assert json.loads(o0.body.split("\n")[0]) == {
-        "index": {"_index": "orders", "_id": "1"}}
+    actions = sorted(es_bulk_actions(events).collect(),
+                     key=lambda r: r.offset)
+    assert [(r.tableName, r.offset) for r in actions] == [
+        ("users", 1), ("users", 2), ("users", 3), ("orders", 6)]
+    bodies = list(bulk_bodies(((r.tableName, r.action) for r in actions),
+                              max_actions=2))
+    # a full chunk posts as soon as it fills; remainders follow in
+    # order of each index's first action; every body ends in a newline
+    assert bodies == [
+        ("users",
+         '{"index":{"_index":"users","_id":"7"}}\n'
+         '{"id":"7","name":"ada"}\n'
+         '{"update":{"_index":"users","_id":"7"}}\n'
+         '{"script":{"source":"ctx._source.putAll(params.data)",'
+         '"lang":"painless","params":{"data":{"id":"7",'
+         '"email":"a@b.c"}}}}\n'),
+        ("users", '{"delete":{"_index":"users","_id":"7"}}\n'),
+        ("orders",
+         '{"index":{"_index":"orders","_id":"1"}}\n'
+         '{"id":"1","total":"9.50"}\n'),
+    ]
 
 
 def test_execute_es_requests_loopback_round_trip(spark):
@@ -161,17 +151,11 @@ def test_execute_es_requests_loopback_round_trip(spark):
         srv.shutdown()
         srv.server_close()
 
-def test_execute_es_requests_bulk_loopback(spark):
-    """The BULK plan executed over a real socket: es_bulk_requests
-    output (first_offset, no offset column) must drive
-    execute_es_requests — the documented composition that amortizes the
-    reference's one-RTT-per-event bound — and deliver the golden NDJSON
-    bodies in first_offset order."""
+def _recording_es():
+    """Loopback fake ES that records (method, path, body) in arrival
+    order. Returns (base_url, received, shutdown)."""
     import threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-    from postgres_es_cdc_spark.sinks.es_rest import (
-        es_bulk_requests, execute_es_requests)
 
     received = []
     lock = threading.Lock()
@@ -195,8 +179,23 @@ def test_execute_es_requests_bulk_loopback(spark):
             pass
 
     srv = ThreadingHTTPServer(("127.0.0.1", 0), FakeES)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+
+    def shutdown():
+        srv.shutdown()
+        srv.server_close()
+
+    return f"http://127.0.0.1:{srv.server_port}", received, shutdown
+
+
+def test_post_bulk_loopback(spark):
+    """The BULK plan executed over a real socket: es_bulk_actions
+    output must drive post_bulk — the composition that amortizes the
+    reference's one-RTT-per-event bound — and deliver the golden NDJSON
+    bodies, max_actions per body, in chunk order."""
+    from postgres_es_cdc_spark.sinks.es_rest import es_bulk_actions, post_bulk
+
+    url, received, shutdown = _recording_es()
     try:
         events = spark.createDataFrame(
             [
@@ -207,59 +206,63 @@ def test_execute_es_requests_bulk_loopback(spark):
             ],
             "offset long, operationType string, tableName string, "
             "payload string",
-        )
-        plan = es_bulk_requests(events, max_actions=2).coalesce(1)
-        want = [(r.method, r.path, r.body)
-                for r in plan.orderBy("first_offset").collect()]
-        assert len(want) == 2 and all(p == "/_bulk" for _, p, _ in want)
-        execute_es_requests(plan, f"http://127.0.0.1:{srv.server_port}")
-        assert received == want
-        assert all(body.endswith("\n") for _, _, body in received)
+        ).repartition(3)
+        post_bulk(es_bulk_actions(events), url, max_actions=2)
+        assert received == [
+            ("POST", "/_bulk",
+             '{"index":{"_index":"users","_id":"7"}}\n'
+             '{"id":"7","name":"ada"}\n'
+             '{"update":{"_index":"users","_id":"7"}}\n'
+             '{"script":{"source":"ctx._source.putAll(params.data)",'
+             '"lang":"painless","params":{"data":{"id":"7",'
+             '"email":"a@b.c"}}}}\n'),
+            ("POST", "/_bulk",
+             '{"delete":{"_index":"users","_id":"7"}}\n'
+             '{"index":{"_index":"users","_id":"8"}}\n'
+             '{"id":"8","name":"bob"}\n'),
+        ]
     finally:
-        srv.shutdown()
-        srv.server_close()
+        shutdown()
 
 
-def test_es_forwarding_posts_each_index_from_one_task(spark, tmp_path,
-                                                      monkeypatch):
-    """Per-key order in ES needs every chunk of one index posted by ONE
-    task (sorted by first_offset there): chunks of one index spread over
-    partitions post concurrently, and an UPDATE can overtake its INSERT.
-    The guarantee must not rest on the planner happening to reuse an
-    upstream partitioning, so the grouping keys are all required."""
-    from pyspark.sql import functions as F
+def test_es_forwarding_posts_in_offset_order(spark, tmp_path):
+    """Per-key order in ES: every index's actions reach the wire in
+    offset order, whatever the batch's partitioning. With max_actions=1
+    each action is its own request, so four indices with interleaved
+    offsets are checked request by request, per index (order across
+    indices is not part of the contract)."""
+    import json
+
     from pyspark.sql.types import _parse_datatype_string
 
     from postgres_es_cdc_spark.sinks import es_rest
 
-    rows = [(t * 100 + i, "INSERT", name, f'{{"id":"{i}","v":"x"}}', None)
-            for t, name in enumerate(("a", "b", "c", "d"))
-            for i in range(1, 7)]
+    rows = [(i * 4 + t, "INSERT", name, f'{{"id":"{i}","v":"x"}}', None)
+            for i in range(1, 7)
+            for t, name in enumerate(("a", "b", "c", "d"))]
+    # rows arrive newest first, so the batch's own row order is the
+    # reverse of the offset order the wire must show
     batch = spark.createDataFrame(
-        rows, "offset long, operationType string, tableName string, "
-              "payload string, txn_id long")
+        rows[::-1], "offset long, operationType string, tableName string, "
+                    "payload string, txn_id long").repartition(4, "tableName")
     schema = _parse_datatype_string("id long, v string")
-    sink = es_rest.EsForwardingTxnSink(
-        str(tmp_path / "state"), {n: schema for n in "abcd"},
-        es_url="http://127.0.0.1:9", max_actions=1)
-
-    posted = {}
-
-    def capture(reqs, base_url, timeout=10.0):
-        parts = reqs.select("tableName", F.spark_partition_id().alias("p"))
-        for r in parts.collect():
-            posted.setdefault(r.tableName, set()).add(r.p)
-
-    monkeypatch.setattr(es_rest, "execute_es_requests", capture)
-    confs = {"spark.sql.adaptive.coalescePartitions.enabled": "false",
-             "spark.sql.requireAllClusterKeysForDistribution": "true"}
-    old = {k: spark.conf.get(k) for k in confs}
+    url, received, shutdown = _recording_es()
+    # no partition coalescing: a plan that posts from several tasks
+    # must not be hidden by the planner folding them into one
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(conf)
     try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+        spark.conf.set(conf, "false")
+        sink = es_rest.EsForwardingTxnSink(
+            str(tmp_path / "state"), {n: schema for n in "abcd"},
+            es_url=url, max_actions=1)
         sink.apply_batch(batch, 0)
     finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
-    assert set(posted) == set("abcd")
-    assert all(len(p) == 1 for p in posted.values()), posted
+        spark.conf.set(conf, old)
+        shutdown()
+    got = {}
+    for method, path, body in received:
+        assert (method, path) == ("POST", "/_bulk")
+        meta = json.loads(body.split("\n")[0])["index"]
+        got.setdefault(meta["_index"], []).append(meta["_id"])
+    assert got == {name: [str(i) for i in range(1, 7)] for name in "abcd"}

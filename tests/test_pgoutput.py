@@ -187,7 +187,8 @@ def test_mid_batch_relation_resend_uses_prior_schema(spark, tmp_path):
     """Rows preceding a Relation re-send in the SAME batch must decode
     against the prior column list (sequential WAL semantics), not the
     batch-final one (ADVICE r2: WalStreamApply folded all Relations
-    before decoding any data row)."""
+    before decoding any data row) — through WalStreamApply and through
+    decode_wal_stream alike."""
     from pyspark.sql.types import _parse_datatype_string
 
     from postgres_es_cdc_spark.cdc.txn import TxnUpsertSink
@@ -217,6 +218,20 @@ def test_mid_batch_relation_resend_uses_prior_schema(spark, tmp_path):
     assert payloads[6] == '{"id":"2","name":"b","qty2":"6"}'
     # and the carried cache ends at the newest version
     assert apply.relcache[OID] == ("t", ["id", "name", "qty2"])
+
+    # the stateless frontend, decode_wal_stream, keeps the same
+    # sequential semantics: a re-send that swaps column order must not
+    # re-label the rows before it
+    msgs = [
+        encode_relation(OID, "t", ["id", "a", "b"]),
+        encode_insert(OID, [1, "x", "y"]),
+        encode_relation(OID, "t", ["id", "b", "a"]),
+        encode_insert(OID, [2, "z", "w"]),
+    ]
+    payloads = {r.offset: r.payload
+                for r in decode_wal_stream(_wal_df(spark, msgs)).collect()}
+    assert payloads == {1: '{"id":"1","a":"x","b":"y"}',
+                        3: '{"id":"2","b":"z","a":"w"}'}
 
 
 def test_commit_clears_open_xid(spark, tmp_path):

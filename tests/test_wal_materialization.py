@@ -1,0 +1,65 @@
+"""One materialization per WAL batch: every consumer of a batch's
+committed rows reads the sink's one tagged change set, never the lazy
+decode (MapInArrow) or the committed/pending split (Join) again."""
+
+from __future__ import annotations
+
+from pyspark.sql.types import _parse_datatype_string
+
+from postgres_es_cdc_spark.sources.pgoutput import (
+    UNCHANGED, encode_begin, encode_commit, encode_insert, encode_relation,
+    encode_update)
+
+OID = 16384
+COLS = ["id", "name", "qty"]
+
+
+def test_wal_batch_consumers_read_one_materialization(spark, tmp_path,
+                                                      monkeypatch):
+    from postgres_es_cdc_spark.sinks.es_fake import EsStore, serve_store
+    from postgres_es_cdc_spark.sinks.es_rest import EsForwardingTxnSink
+    from postgres_es_cdc_spark.sources.pgoutput import WalStreamApply
+    from postgres_es_cdc_spark.streaming.pipeline import UpsertSink
+
+    seen = []
+
+    def capture(cls, attr, frame_arg):
+        orig = getattr(cls, attr)
+
+        def wrapper(*args, **kwargs):
+            seen.append((attr, args[frame_arg]))
+            return orig(*args, **kwargs)
+
+        monkeypatch.setattr(cls, attr, wrapper)
+
+    capture(UpsertSink, "_merge", 3)          # self, spark, name, batch
+    capture(EsForwardingTxnSink, "_on_committed", 1)  # self, ready
+
+    msgs = [encode_relation(OID, "t", COLS),
+            encode_begin(xid=1),
+            encode_insert(OID, [1, "a", 5]),
+            encode_insert(OID, [2, "b", 6]),
+            encode_commit(),
+            encode_begin(xid=2),
+            encode_update(OID, [1, UNCHANGED, 50])]   # stays pending
+    wal = spark.createDataFrame(
+        [(i, bytearray(m)) for i, m in enumerate(msgs)],
+        "offset long, data binary")
+    schema = _parse_datatype_string("id long, name string, qty long")
+    store = EsStore()
+    url, shutdown = serve_store(store)
+    try:
+        sink = EsForwardingTxnSink(str(tmp_path / "state"),
+                                   {"t": schema, "u": schema}, es_url=url)
+        WalStreamApply(sink).apply(wal, 0)
+    finally:
+        shutdown()
+
+    assert sorted(a for a, _ in seen) == ["_merge", "_merge",
+                                          "_on_committed"]
+    for attr, frame in seen:
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        assert "MapInArrow" not in plan, (attr, plan)
+        assert "Join" not in plan, (attr, plan)
+    assert store.indices["t"] == {"1": {"id": "1", "name": "a", "qty": "5"},
+                                  "2": {"id": "2", "name": "b", "qty": "6"}}
