@@ -123,7 +123,8 @@ class TxnUpsertSink(UpsertSink):
         pending_path = self.table_path(self.PENDING)
         events = batch
         if os.path.exists(pending_path):
-            events = events.unionByName(spark.read.parquet(pending_path))
+            events = events.unionByName(
+                spark.read.schema(batch.schema).parquet(pending_path))
         tagged = tag_committed(events, self.txn_col).localCheckpoint()
         ready = _committed(tagged, True)
         frames = {name: self._merge(spark, name,

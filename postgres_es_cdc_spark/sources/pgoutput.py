@@ -17,18 +17,21 @@ tuple encoding — exactly what the reference consumes via pglogrepl):
                 'n' (SQL null) | 'u' (unchanged TOAST) |
                 't' len:int32 utf8-bytes
 
-Distributed decode is TWO passes, because a partition of the WAL need
-not contain the Relation message its data messages reference (the
-reference can cache relations inline only because it reads one
-sequential stream, producer.go:68,121-122):
+Distributed decode is one small collect plus one decode pass, because
+a partition of the WAL need not contain the Relation message its data
+messages reference, nor the Begin that names their transaction (the
+reference can cache relations and see Begin/Commit inline only because
+it reads one sequential stream, producer.go:68,121-122,163-164):
 
-  pass 1 — filter to 'R' messages (first byte), decode driver-side.
-           Relation messages are vocabulary-sized (one per table per
-           connection), so this collect is O(tables), like
-           apply.observed_payload_columns.
-  pass 2 — broadcast the relation cache; Arrow-batched mapInPandas
-           parses every data message into the engine's envelope
-           (operationType/tableName/payload JSON + txn markers).
+  control plane — filter to the 'R'/'B'/'C' messages (first byte) and
+           collect them with their offsets. They are O(tables +
+           transactions) per batch, so the driver walks them in WAL
+           order: each relation version's offset range, the sorted
+           (Begin offset -> xid) list and the xid still open at the end.
+  data plane — one Arrow-batched mapInArrow parses every message into
+           the engine's envelope (operationType/tableName/payload JSON +
+           txn_id). Each row picks its relation version and its txn_id
+           by numpy.searchsorted of its offset over the driver's lists.
 
 Semantics parity with the reference's column decode (producer.go:183-195):
   'n' -> explicit JSON null ("set null"), 'u' (unchanged TOAST) ->
@@ -37,21 +40,20 @@ Semantics parity with the reference's column decode (producer.go:183-195):
   text, cast later by the declared table schema (producer.go:176-181's
   text decode; unknown types stay raw strings like its OID fallback).
 
-Transaction ids: protocol v1 carries the xid only on Begin, so
-assigning txns to data rows is inherently sequential in WAL order —
-``assign_txn_ids`` does it with a running last-Begin window (the same
-single-stream assumption the reference lives on; protocol v2's
-streaming mode adds per-message xids precisely so this can parallelize,
-and decode_messages passes such an xid through when present).
+Transaction ids: protocol v1 carries the xid only on Begin, so a data
+row's txn is the last Begin before it in WAL order. The control plane
+turns that sequential rule into a lookup in the sorted Begin list, so
+the decode runs in as many partitions as the batch has.
+``assign_txn_ids`` keeps the rule as a running last-Begin window: the
+sequential reference the stamped output is checked against.
 """
 
 from __future__ import annotations
 
 import json
 import struct
-from typing import Iterator
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -172,7 +174,9 @@ def decode_relation(data: bytes) -> tuple[int, str, list[str]]:
 
 
 def relation_cache(messages: DataFrame, data_col: str = "data") -> dict:
-    """Pass 1: decode every Relation message driver-side.
+    """Decode every Relation message driver-side, for a batch with one
+    version per relation (``decode_with_relation_resends`` handles
+    re-sends).
 
     The filter runs distributed (first-byte predicate on the binary
     column); only the vocabulary-sized 'R' subset is collected."""
@@ -424,9 +428,13 @@ def _assemble_json(buf, cols, kind2d, vs2d, vl2d):
         ng, pa.py_buffer(offsets.tobytes()), pa.py_buffer(out.tobytes()))
 
 
-def _decode_batch_arrow(rb, relcache: dict):
+def _decode_batch_arrow(rb, relcache: dict, control=None):
     """One Arrow record batch of (offset, data) wire messages ->
-    envelope RecordBatch, fully vectorized (module comment above)."""
+    envelope RecordBatch, fully vectorized (module comment above).
+    With a ``WalControl`` each row decodes against the relation version
+    current at its offset and gets its transaction's xid; without one,
+    every row decodes against ``relcache`` and only Begin rows carry an
+    xid."""
     global _ESC_TAB
     import numpy as np
     import pyarrow as pa
@@ -436,6 +444,11 @@ def _decode_batch_arrow(rb, relcache: dict):
         raise TypeError("null wire message")
     offs_np = offs_col.to_numpy(zero_copy_only=False).astype(
         np.int64, copy=False)
+    versions = control.versions if control is not None else []
+    caches = [relcache] + [c for _, c in versions]
+    # version 0 is ``relcache``; version i starts after the i-th Relation
+    ver = np.searchsorted(np.array([o for o, _ in versions], np.int64),
+                          offs_np)
     buf, starts, ends = _bin_view(data_arr)
     if n and int((ends - starts).min()) <= 0:
         raise IndexError("empty wire message")
@@ -487,9 +500,10 @@ def _decode_batch_arrow(rb, relcache: dict):
             e = np.zeros_like(vs2d)
             e[tmask] = cs[(vs2d + vl2d)[tmask]] - cs[vs2d[tmask]]
             esc_any = (e > 0).any(axis=1)
-        uo, inv = np.unique(oid, return_inverse=True)
-        for gi, o in enumerate(uo.tolist()):
-            name, cols = relcache[o]
+        # one group per (relation version, oid); oids are uint32
+        uo, inv = np.unique((ver[iud] << 32) | oid, return_inverse=True)
+        for gi, vo in enumerate(uo.tolist()):
+            name, cols = caches[vo >> 32][vo & 0xFFFFFFFF]
             gcode = code_of(name)
             g = np.flatnonzero(inv == gi)
             name_code_iud[g] = gcode
@@ -506,8 +520,6 @@ def _decode_batch_arrow(rb, relcache: dict):
                 pos_chunks.append(np.array([r], np.int64))
 
     # --- B / C / T markers ---
-    b_rows = np.flatnonzero(m_b)
-    xids = _be32(buf, starts[b_rows] + 17) if b_rows.size else None
     t_rows = np.flatnonzero(m_t)
     t_codes: list = []                          # name code per T out-row
     for r in t_rows.tolist():
@@ -516,7 +528,7 @@ def _decode_batch_arrow(rb, relcache: dict):
         counts[r] = nrels
         for i in range(nrels):
             o = int(_be32(buf, np.array([st + 6 + 4 * i]))[0])
-            t_codes.append(code_of(relcache[o][0]))
+            t_codes.append(code_of(caches[ver[r]][o][0]))
 
     # --- merge in original row order (runs expand in place) ---
     total = int(counts.sum())
@@ -560,32 +572,54 @@ def _decode_batch_arrow(rb, relcache: dict):
         pay_out = merged.take(pa.array(pay_idx))
     else:
         pay_out = pa.nulls(total, pa.utf8())
-    txn_np = np.zeros(total, np.int64)
-    txn_mask = np.ones(total, bool)             # True = null
-    if b_rows.size:
-        txn_np[run_start[b_rows]] = xids
+    if control is not None:
+        # a row's txn is the last Begin at or before it; rows before the
+        # batch's first Begin belong to the carried open one (slot 0)
+        b_offs = np.array([o for o, _ in control.begins], np.int64)
+        xids = pa.array([control.open_xid] + [x for _, x in control.begins],
+                        pa.int64())
+        txn_out = xids.take(pa.array(
+            np.searchsorted(b_offs, offset_out, side="right")))
+    else:
+        b_rows = np.flatnonzero(m_b)
+        txn_np = np.zeros(total, np.int64)
+        txn_mask = np.ones(total, bool)         # True = null
+        txn_np[run_start[b_rows]] = _be32(buf, starts[b_rows] + 17)
         txn_mask[run_start[b_rows]] = False
-    txn_out = pa.array(txn_np, mask=txn_mask)
+        txn_out = pa.array(txn_np, mask=txn_mask)
     return pa.RecordBatch.from_arrays(
         [pa.array(offset_out), ops_out, names_out, pay_out, txn_out],
         names=["offset", "operationType", "tableName", "payload",
                "txn_id"])
 
 
+class WalControl(NamedTuple):
+    """A WAL batch's control plane, read from its 'R'/'B'/'C' messages
+    in offset order (``decode_with_relation_resends``)."""
+    versions: list    # (Relation offset, relation cache from it on)
+    begins: list      # (Begin offset, xid), ascending
+    open_xid: int | None  # txn open before the batch's first Begin
+
+
 def decode_messages(messages: DataFrame, relcache: dict,
                     data_col: str = "data",
-                    offset_col: str = "offset") -> DataFrame:
-    """Pass 2: binary pgoutput messages -> envelope rows
+                    offset_col: str = "offset",
+                    control: WalControl | None = None) -> DataFrame:
+    """Binary pgoutput messages -> envelope rows
     (offset, operationType, tableName, payload, txn_id).
 
     mapInArrow (r14; was mapInPandas with a per-row Python loop):
     format parsing is byte fiddling no built-in expression covers, but
     it IS vectorizable — every fixed-width field is a numpy gather over
     the Arrow binary buffer and the payload JSON is one fancy-gather
-    assembly (_decode_batch_arrow). The relation cache rides the
-    closure (broadcast by task serialization — it is O(tables) small).
-    Data rows carry txn_id null under protocol v1 (use assign_txn_ids);
-    Begin markers carry their xid.
+    assembly (_decode_batch_arrow). The relation cache and ``control``
+    ride the closure (broadcast by task serialization — they are
+    O(relations + transactions) small).
+
+    With ``control``, every row decodes against the relation version
+    current at its offset and carries its transaction's xid. Without
+    it, every row decodes against ``relcache``, and only Begin markers
+    carry their xid (``assign_txn_ids`` fills the rest).
     """
     schema = ("offset long, operationType string, tableName string, "
               "payload string, txn_id long")
@@ -593,7 +627,7 @@ def decode_messages(messages: DataFrame, relcache: dict,
     def parse(batches):
         for rb in batches:
             if rb.num_rows:
-                out = _decode_batch_arrow(rb, relcache)
+                out = _decode_batch_arrow(rb, relcache, control)
                 if out is not None:
                     yield out
 
@@ -604,11 +638,12 @@ def decode_messages(messages: DataFrame, relcache: dict,
 def assign_txn_ids(events: DataFrame,
                    order_col: str = "offset") -> DataFrame:
     """Propagate each Begin's xid to every following row up to the next
-    Begin (WAL order). Protocol v1 ties this to the global stream order,
-    so the window is intentionally unpartitioned — the same sequential
-    constraint the reference's consumer lives under (utils.go:49 single
-    partition); with v2 per-message xids decode_messages already fills
-    txn_id and this pass is skipped."""
+    Begin (WAL order): the sequential reference for the txn_id that
+    ``decode_with_relation_resends`` stamps, and the identity on its
+    output. Protocol v1 ties this to the global stream order, so the
+    window is unpartitioned and puts the whole input in one partition —
+    the constraint the reference's consumer lives under (utils.go:49
+    single partition). The engine path does not call it."""
     w = (Window.orderBy(order_col)
                .rowsBetween(Window.unboundedPreceding, 0))
     return events.withColumn(
@@ -617,14 +652,14 @@ def assign_txn_ids(events: DataFrame,
 
 def decode_wal_stream(messages: DataFrame, data_col: str = "data",
                       offset_col: str = "offset") -> DataFrame:
-    """Full frontend: decode in WAL order (each row against the
-    Relation version current at its offset) + txn assignment.
+    """Full frontend: decode in WAL order, each row against the
+    Relation version current at its offset and stamped with its txn_id.
     The result feeds cdc.txn.committed_events / apply_changes directly —
     i.e. producer.go:110-195 and its Begin/Commit drop (producer.go:
     163-164) replaced by a decode that KEEPS transaction atomicity."""
     wal = messages.select(F.col(offset_col).alias("offset"),
                           F.col(data_col).alias("data"))
-    return assign_txn_ids(decode_with_relation_resends(wal, {})[0])
+    return decode_with_relation_resends(wal, {})[0]
 
 
 # ---------------------------------------------------------------------------
@@ -806,10 +841,10 @@ def _encode_batch_arrow(rb, oid: int, field_kinds: list):
 def cdc_pgoutput_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: the synthesized typed event stream serialized to
     byte-exact pgoutput wire messages (plus a Relation message), decoded
-    back through the two-pass frontend, and folded to final state. The
-    oracle is the independent expected-state projection — so a single
-    flipped bit anywhere in writer, parser, TOAST/null handling, or
-    relation routing breaks the hash."""
+    back through relation_cache + decode_messages, and folded to final
+    state. The oracle is the independent expected-state projection — so
+    a single flipped bit anywhere in writer, parser, TOAST/null handling,
+    or relation routing breaks the hash."""
     from postgres_es_cdc_spark.cdc.apply import apply_changes
     from postgres_es_cdc_spark.cdc.generate import (
         orders_cdc_events_typed, orders_cdc_value_schema)
@@ -837,15 +872,16 @@ def cdc_schema_evolution_fold(spark: SparkSession,
     INSERTs under it; a v2 Relation re-send for the SAME oid ADDS
     'priority'; post-evolution UPDATEs set priority for id % 3 == 0.
 
-    decode_with_relation_resends splits the batch at each Relation
-    offset, so pre-evolution rows decode with 3-column tuples and
-    post-evolution rows with 4 — WAL-reader semantics. Folding with the
-    EVOLVED schema surfaces the added column as NULL for never-updated
-    rows: exactly the putAll key-absent contract (es.go:47-86) applied
-    to DDL drift, with no backfill rewrite of old events.
+    decode_with_relation_resends decodes each row against the Relation
+    version current at its offset, so pre-evolution rows decode with
+    3-column tuples and post-evolution rows with 4 — WAL-reader
+    semantics. Folding with the EVOLVED schema surfaces the added column
+    as NULL for never-updated rows: exactly the putAll key-absent
+    contract (es.go:47-86) applied to DDL drift, with no backfill
+    rewrite of old events.
 
-    Scale shape: the relation pass collects only the 2 'R' rows; decode
-    is the same Arrow-batched span scan as the streaming path; the fold
+    Scale shape: the control collect returns only the 2 'R' rows; decode
+    is the same one Arrow-batched pass as the streaming path; the fold
     is one partial-aggregable per-key reduction."""
     from pyspark.sql.types import _parse_datatype_string
 
@@ -883,10 +919,10 @@ def cdc_schema_evolution_fold(spark: SparkSession,
             [(off, bytearray(encode_relation(oid, "orders_evo", cols)))],
             "offset long, data binary")
 
-    # Checkpointed: the span decode reads the wire frame once per span
-    # (plus the relation collect), and each read would re-run BOTH
-    # encode mapInPandas passes — materialize the bytes once, as the
-    # streaming path's segment files do.
+    # Checkpointed: the control collect and the decode each read the
+    # wire frame, and each read would re-run BOTH encode mapInArrow
+    # passes — materialize the bytes once, as the streaming path's
+    # segment files do.
     wire = (rel(-2, ["id", "custkey", "status"])
             .unionByName(encode_typed_events(v1_ev, oid, v1_schema))
             .unionByName(rel(evo_off - 5,
@@ -902,58 +938,67 @@ def cdc_schema_evolution_fold(spark: SparkSession,
 # ---------------------------------------------------------------------------
 
 
-def decode_with_relation_resends(batch: DataFrame,
-                                 relcache: dict) -> tuple:
-    """Decode honoring WAL order across Relation (re-)sends: data rows
-    preceding a mid-batch Relation message decode against the PRIOR
-    schema version, exactly as a sequential reader (producer.go caches
-    as it reads) would. The batch is split at each Relation offset and
-    each span decodes with the cache as of that point; Relation
-    messages are vocabulary-count rare, so this is 1 span in the steady
-    state. Returns (events, updated_cache). Shared by WalStreamApply's
-    per-micro-batch path and cdc_schema_evolution_fold."""
-    rel_rows = sorted(
-        ((r[0], bytes(r[1])) for r in
-         batch.filter(F.expr("substring(data, 1, 1) = X'52'"))
-              .select("offset", "data").collect()),
-        key=lambda t: t[0])
-    if not rel_rows:
-        return decode_messages(batch, dict(relcache)), dict(relcache)
-    cache = dict(relcache)
-    spans: list[DataFrame] = []
-    lo: int | None = None
-    for off, data in rel_rows:
-        cond = (F.col("offset") < off) if lo is None else (
-            (F.col("offset") > lo) & (F.col("offset") < off))
-        spans.append(decode_messages(batch.filter(cond), dict(cache)))
-        oid, name, cols = decode_relation(data)
-        cache[oid] = (name, cols)
-        lo = off
-    spans.append(
-        decode_messages(batch.filter(F.col("offset") > lo), dict(cache)))
-    ev = spans[0]
-    for s in spans[1:]:
-        ev = ev.unionByName(s)
-    return ev, cache
+def decode_with_relation_resends(batch: DataFrame, relcache: dict, *,
+                                 last_xid: int | None = None) -> tuple:
+    """Decode a WAL batch as a sequential reader would (producer.go
+    caches Relations as it reads): each data row against the Relation
+    version current at its offset, so rows before a mid-batch re-send
+    keep the prior schema, and each row stamped with the xid of the
+    last Begin before it — or ``last_xid``, the transaction left open
+    by the previous batch, for rows before the batch's first Begin.
+
+    Eager: the control plane runs here, as ONE collect of the batch's
+    'R'/'B'/'C' messages; the data plane is the one lazy mapInArrow of
+    ``decode_messages``. Driver state is O(relations + transactions per
+    trigger), bounded by the source's maxFilesPerTrigger; in exchange
+    the decode is not forced into one partition by a last-Begin window.
+
+    Returns (events, context): context is {"relcache", "last_xid"}, the
+    relation cache and open xid the next batch resumes from (after a
+    COMMIT no transaction is open). Shared by WalStreamApply's
+    per-micro-batch path, decode_wal_stream and
+    cdc_schema_evolution_fold."""
+    control = sorted(
+        (r[0], bytes(r[1])) for r in
+        batch.filter(F.expr("substring(data, 1, 1) IN (X'52', X'42', X'43')"))
+             .select("offset", "data").collect())      # 'R', 'B', 'C'
+    versions: list = []
+    begins: list = []
+    cache, open_xid = dict(relcache), last_xid
+    for off, data in control:
+        if data[:1] == b"R":
+            oid, name, cols = decode_relation(data)
+            cache = {**cache, oid: (name, cols)}
+            versions.append((off, cache))
+        elif data[:1] == b"B":
+            (open_xid,) = struct.unpack_from(">I", data, 17)
+            begins.append((off, open_xid))
+        else:
+            open_xid = None
+    ev = decode_messages(batch, dict(relcache),
+                         control=WalControl(versions, begins, last_xid))
+    return ev, {"relcache": cache, "last_xid": open_xid}
 
 
 class WalStreamApply:
     """foreachBatch glue composing the codec with the transactional sink:
-    per micro-batch decode + txn assignment, with the two pieces of
-    cross-batch context a segmented WAL needs carried driver-side:
+    per micro-batch decode, with the two pieces of cross-batch context a
+    segmented WAL needs carried driver-side:
 
       * the relation cache (a table's Relation message may precede its
         rows by many segments) — updated from each batch's 'R' subset;
       * the open transaction's xid (a txn can span segment boundaries;
         protocol v1 rows before the batch's first Begin belong to it) —
-        rows left null by the in-batch assignment coalesce to it, so
-        they are NOT mistaken for autocommit writes.
+        the decode stamps it on those rows, so they are NOT mistaken for
+        autocommit writes.
 
     Both are tiny (O(tables) + one int) and are committed WITH the
     batch — in the sink's one manifest repoint, beside its tables and
     pending buffer — so a checkpoint restart resumes mid-transaction
     decode exactly where the committed state stands, and a batch whose
-    commit was lost replays against the context it first saw."""
+    commit was lost replays against the context it first saw. A batch
+    costs one driver collect (its control messages) and one decode
+    pass, which the sink materializes once."""
 
     def __init__(self, sink):
         self.sink = sink
@@ -966,34 +1011,18 @@ class WalStreamApply:
     def apply(self, batch: DataFrame, batch_id: int) -> None:
         if self.sink.applied(batch_id):
             return                      # committed replay: no-op
-        ev = assign_txn_ids(self._decode_in_offset_order(batch))
-        if self.last_xid is not None:
-            ev = ev.withColumn(
-                "txn_id", F.coalesce("txn_id", F.lit(self.last_xid)))
-        # tableName null on markers: keep them for the sink's commit scan
-        last_marker = (ev.filter(F.col("operationType")
-                                  .isin("BEGIN", "COMMIT"))
-                         .orderBy(F.col("offset").desc())
-                         .select("operationType", "txn_id").limit(1)
-                         .collect())
-        last_xid = self.last_xid
-        if last_marker:
-            # after a COMMIT no transaction is open — a malformed data
-            # row arriving outside a Begin/Commit bracket in a later
-            # batch must NOT be attributed to it (it would park in the
-            # pending buffer forever); with no open xid such rows keep
-            # txn_id null and surface.
-            last_xid = (int(last_marker[0][1])
-                        if last_marker[0][0] == "BEGIN" else None)
+        ev = self._decode_in_offset_order(batch)
         self.sink.apply_batch(ev, batch_id, context={
             "relcache": {str(k): list(v) for k, v in self.relcache.items()},
-            "last_xid": last_xid})
-        self.last_xid = last_xid
+            "last_xid": self.last_xid})
 
     def _decode_in_offset_order(self, batch: DataFrame) -> DataFrame:
-        ev, cache = decode_with_relation_resends(batch,
-                                                 dict(self.relcache))
-        self.relcache = cache
+        """Decode ``batch`` from the carried context and advance it to
+        the batch's end (the relation cache and open xid the next batch
+        starts from)."""
+        ev, ctx = decode_with_relation_resends(batch, self.relcache,
+                                               last_xid=self.last_xid)
+        self.relcache, self.last_xid = ctx["relcache"], ctx["last_xid"]
         return ev
 
     def writer(self):

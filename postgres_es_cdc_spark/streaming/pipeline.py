@@ -151,9 +151,12 @@ class UpsertSink(VersionedStore):
         # onto existing rows; stored values never pass through JSON.
         events = typed_events(batch, schema, self.order_col)
         if os.path.exists(path):
+            # read with the declared schema: no inference job, and a
+            # column added since the state was written reads as null
+            stored = StructType([*schema]).add(self.VERSION_COL, "long")
             events = events.unionByName(state_as_inserts(
-                spark.read.parquet(path), schema, self.VERSION_COL,
-                self.order_col))
+                spark.read.schema(stored).parquet(path), schema,
+                self.VERSION_COL, self.order_col))
         state = apply_changes_typed(events, schema, self.key, self.order_col,
                                     version_col=self.VERSION_COL)
         return self.land({name: state}, batch_id)[name]

@@ -264,6 +264,46 @@ def test_commit_clears_open_xid(spark, tmp_path):
     assert row.txn_id is None
 
 
+def test_segment_cut_decode_equals_sequential_reference(spark):
+    """Cutting a WAL anywhere and decoding both halves, the second from
+    the context the first returns, gives the same rows as decoding it
+    whole and assigning txn ids with the sequential last-Begin window —
+    across a Relation re-send inside a transaction, a TRUNCATE and a
+    transaction still open at the end."""
+    from postgres_es_cdc_spark.sources.pgoutput import (
+        assign_txn_ids, decode_with_relation_resends)
+
+    msgs = [
+        encode_relation(OID, "t", COLS),
+        encode_begin(xid=10),
+        encode_insert(OID, [1, "a", 5]),
+        encode_relation(OID, "t", ["id", "name", "qty2"]),   # re-send
+        encode_insert(OID, [2, "b", 6]),
+        encode_commit(),
+        encode_begin(xid=11),
+        encode_truncate([OID]),
+        encode_insert(OID, [3, "c", 7]),
+        encode_commit(),
+        encode_begin(xid=12),
+        encode_insert(OID, [4, "d", 8]),
+        encode_update(OID, [4, UNCHANGED, 80]),              # left open
+    ]
+
+    def rows(ev):
+        return sorted((tuple(r) for r in ev.collect()), key=lambda t: t[0])
+
+    whole = _wal_df(spark, msgs)
+    want = rows(assign_txn_ids(decode_with_relation_resends(whole, {})[0]))
+    assert [t[4] for t in want] == [10] * 4 + [11] * 4 + [12] * 3
+    for cut in range(1, len(msgs)):
+        head = whole.filter(F.col("offset") < cut)
+        tail = whole.filter(F.col("offset") >= cut)
+        ev1, ctx = decode_with_relation_resends(head, {})
+        ev2, _ = decode_with_relation_resends(
+            tail, ctx["relcache"], last_xid=ctx["last_xid"])
+        assert rows(ev1.unionByName(ev2)) == want, cut
+
+
 def test_wal_stream_pipeline_txn_atomic_across_segments(spark, tmp_path):
     """The whole loop as one stream: segmented WAL files -> decode ->
     transaction-atomic sink. Txn 8 spans a segment boundary and its

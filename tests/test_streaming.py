@@ -88,6 +88,29 @@ def test_incremental_batches_converge(spark, tmp_path):
     assert again == rows
 
 
+def test_upsert_sink_reopened_with_added_column(spark, tmp_path):
+    """A sink reopened with a widened schema (Postgres ADD COLUMN)
+    merges into state written before the column existed: the stored
+    rows read back with the new column null."""
+    from pyspark.sql import Row
+    from postgres_es_cdc_spark.cdc.envelope import EVENT_SCHEMA
+    from pyspark.sql.types import _parse_datatype_string
+
+    v1 = _parse_datatype_string("id long, name string")
+    v2 = _parse_datatype_string("id long, name string, prio string")
+    UpsertSink(str(tmp_path / "state"), {"t": v1}).apply_batch(
+        spark.createDataFrame([
+            Row(offset=1, operationType="INSERT", tableName="t",
+                payload='{"id":1,"name":"a"}')], EVENT_SCHEMA), 0)
+    sink = UpsertSink(str(tmp_path / "state"), {"t": v2})
+    sink.apply_batch(spark.createDataFrame([
+        Row(offset=2, operationType="INSERT", tableName="t",
+            payload='{"id":2,"name":"b","prio":"HIGH"}')], EVENT_SCHEMA), 1)
+    rows = {r.id: (r.name, r.prio)
+            for r in spark.read.parquet(sink.table_path("t")).collect()}
+    assert rows == {1: ("a", None), 2: ("b", "HIGH")}
+
+
 def test_windowed_aggregate_stream_matches_batch(spark, tmp_path):
     """Tumbling-window streaming agg == the equivalent batch groupBy."""
     rows = [(i, f"2024-01-01 00:{i % 30:02d}:{(7 * i) % 60:02d}",

@@ -1,6 +1,8 @@
 """One materialization per WAL batch: every consumer of a batch's
 committed rows reads the sink's one tagged change set, never the lazy
-decode (MapInArrow) or the committed/pending split (Join) again."""
+decode (MapInArrow) or the committed/pending split (Join) again; and the
+decode the sink receives is one pass — no per-span Union, no
+single-partition Window for the transaction ids."""
 
 from __future__ import annotations
 
@@ -16,6 +18,7 @@ COLS = ["id", "name", "qty"]
 
 def test_wal_batch_consumers_read_one_materialization(spark, tmp_path,
                                                       monkeypatch):
+    from postgres_es_cdc_spark.cdc.txn import TxnUpsertSink
     from postgres_es_cdc_spark.sinks.es_fake import EsStore, serve_store
     from postgres_es_cdc_spark.sinks.es_rest import EsForwardingTxnSink
     from postgres_es_cdc_spark.sources.pgoutput import WalStreamApply
@@ -34,6 +37,7 @@ def test_wal_batch_consumers_read_one_materialization(spark, tmp_path,
 
     capture(UpsertSink, "_merge", 3)          # self, spark, name, batch
     capture(EsForwardingTxnSink, "_on_committed", 1)  # self, ready
+    capture(TxnUpsertSink, "apply_batch", 1)   # self, batch
 
     msgs = [encode_relation(OID, "t", COLS),
             encode_begin(xid=1),
@@ -56,10 +60,14 @@ def test_wal_batch_consumers_read_one_materialization(spark, tmp_path,
         shutdown()
 
     assert sorted(a for a, _ in seen) == ["_merge", "_merge",
-                                          "_on_committed"]
+                                          "_on_committed", "apply_batch"]
     for attr, frame in seen:
         plan = frame._jdf.queryExecution().optimizedPlan().toString()
-        assert "MapInArrow" not in plan, (attr, plan)
-        assert "Join" not in plan, (attr, plan)
+        if attr == "apply_batch":
+            assert "Window" not in plan, plan
+            assert "Union" not in plan, plan
+        else:
+            assert "MapInArrow" not in plan, (attr, plan)
+            assert "Join" not in plan, (attr, plan)
     assert store.indices["t"] == {"1": {"id": "1", "name": "a", "qty": "5"},
                                   "2": {"id": "2", "name": "b", "qty": "6"}}

@@ -9,8 +9,9 @@ Pipeline under test (all real engine code, no shortcuts):
                segment parquet files (the stand-in for the replication
                socket the sandbox cannot open).
   2. STREAM  — Structured Streaming file source over the segments ->
-               WalStreamApply (two-pass wire decode, relation-cache +
-               open-xid context, txn assignment) -> TxnUpsertSink
+               WalStreamApply (one control-message collect + one wire
+               decode pass that stamps relation version and txn_id,
+               relation-cache + open-xid context) -> TxnUpsertSink
                (transaction-atomic upsert fold with versioned-manifest
                commits) with a durable checkpoint.
 

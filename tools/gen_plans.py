@@ -194,10 +194,10 @@ PICKS = {
         "supplier-keyed pair join was rejected at 518s/sf1: every "
         "supplier has deg ~590, so sum deg^2 has no rare keys to cap.)",
     "cdc_schema_evolution_fold":
-        "Relation pass collects only the 2 'R' rows; span decode is "
-        "the same Arrow-batched mapInPandas as the streaming path; the "
-        "fold is one partial-aggregable per-key reduction over the "
-        "evolved schema.",
+        "The control collect returns only the 2 'R' rows; the decode "
+        "is the same one Arrow-batched mapInArrow pass as the streaming "
+        "path; the fold is one partial-aggregable per-key reduction "
+        "over the evolved schema.",
     "docs_bpe_pair_stats":
         "Word-count MapReduce compacts the corpus to its vocabulary "
         "first; the char-pair explode is vocab-sized; final ranking is "
