@@ -544,19 +544,6 @@ GROUP BY 1
 
 
 _ATTACH_PUSHDOWN_MAX = 10_000
-
-# Hash-bucketed reps-store layout (r14 — tools/bucketed_reps.py
-# graduated): MAJOR index folds write the reps snapshot partitionBy
-# this bucket of rep, so a k-candidate attach enumerates <= k bucket
-# DIRECTORIES instead of footer-walking every snapshot file —
-# independent of candidate spread, unlike range layout. The expression
-# is the writer/reader contract: both sides must hash identically.
-REP_BUCKETS = 64
-
-
-def _rep_bucket_expr():
-    return F.pmod(F.xxhash64(F.col("rep")),
-                  F.lit(REP_BUCKETS)).cast("int")
 """Guard on _probe_embedding_store's candidate-rep pushdown: when a
 probe's verified-candidate rep set is at most this many ids, the
 vector-attach joins filter the reps log with an isin() that reaches the
@@ -2898,8 +2885,7 @@ def _probe_embedding_store(store: tuple, bmem: DataFrame,
                            threshold: float, n_bands: int = 8,
                            bits: int = 8,
                            store_bands: DataFrame | None = None,
-                           pushdown: bool = True,
-                           store_reps_loader=None) -> DataFrame:
+                           pushdown: bool = True) -> DataFrame:
     """Probe kernel shared by the one-shot query and the multibatch
     fold: verified near-dup member pairs for a collapsed batch frame
     (id, q, rep) against a (members, reps) store.
@@ -2984,30 +2970,12 @@ def _probe_embedding_store(store: tuple, bmem: DataFrame,
     # emb_incremental_near_dup_pairs at sf0.1).
     attach_reps = all_reps
     if pushdown:
-        cand_reps = (rep_pairs.select(F.explode(F.array("pa", "pb"))
-                                       .alias("rep")).distinct()
-                              .select("rep",
-                                      _rep_bucket_expr().alias("_bk")))
-        rows = cand_reps.limit(_ATTACH_PUSHDOWN_MAX + 1).collect()
-        cand_ids = [r.rep for r in rows]
+        cand_ids = [r.rep for r in
+                    rep_pairs.select(F.explode(F.array("pa", "pb"))
+                                      .alias("rep")).distinct()
+                             .limit(_ATTACH_PUSHDOWN_MAX + 1).collect()]
         if len(cand_ids) <= _ATTACH_PUSHDOWN_MAX:
-            if store_reps_loader is not None:
-                # r14 bucketed-layout pruning: re-enumerate the STORE
-                # scan restricted to the candidate ids' bucket
-                # directories (computed by Spark above — same hash
-                # expression the fold writer uses), then apply the
-                # exact isin on top. Bucket pruning is a SUPERSET
-                # restriction, so rows are identical to the unpruned
-                # filter; flat (pre-bucketing) dirs are read whole and
-                # the isin still reaches their parquet scans.
-                pruned = store_reps_loader(
-                    sorted({r._bk for r in rows}))
-                base = (pruned.select("rep", "q")
-                        if pruned is not None else store_reps)
-                attach_reps = (base.unionByName(batch_reps)
-                                   .filter(F.col("rep").isin(cand_ids)))
-            else:
-                attach_reps = all_reps.filter(F.col("rep").isin(cand_ids))
+            attach_reps = all_reps.filter(F.col("rep").isin(cand_ids))
     r1 = attach_reps.select(F.col("rep").alias("pa"),
                             F.col("q").alias("qa"))
     r2 = attach_reps.select(F.col("rep").alias("pb"),

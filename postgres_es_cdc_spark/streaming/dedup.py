@@ -23,7 +23,6 @@ never re-read.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,13 +58,13 @@ class KeyedDedupSink(VersionedStore):
     The LOG still grows one dir per store per batch — listing +
     parquet-footer overhead O(entries) with uptime (288 entries/day at
     5-minute triggers; the JoinSink soak measured 1.98× probe growth).
-    ``compact_after=N`` folds each log into ONE snapshot dir whenever
-    either exceeds N entries: both stores are append-only BAGS
-    (appended key sets are disjoint by construction — a key is appended
-    only when absent from everything before it), so the snapshot is a
-    pure bag-union rewrite, committed by one repoint with superseded
-    dirs TOMBSTONED, never deleted in the commit path; the store's
-    vacuum() reclaims them as a separate restartable step.
+    ``compact_after=N`` folds the logs through the store's one
+    compaction (VersionedStore.compact_logs) whenever either exceeds N
+    entries: both stores are append-only BAGS (appended key sets are
+    disjoint by construction — a key is appended only when absent
+    from everything before it), so a fold is a pure bag-union rewrite,
+    committed by one repoint with the folded dirs TOMBSTONED; the
+    store's vacuum() reclaims them as a separate restartable step.
     Shapes pinned by tests/test_streaming_dedup_compaction.py; the
     wall-clock flatness is tools/ivm_soak.py --sink dedup."""
 
@@ -118,34 +117,11 @@ class KeyedDedupSink(VersionedStore):
         ) > self.compact_after:
             self.compact(spark)
 
-    # -- compaction ----------------------------------------------------
     def compact(self, spark: SparkSession) -> dict:
-        """Fold each delta log into ONE snapshot dir (class docstring).
-        Snapshot dirs land first under a generation name the manifest
-        doesn't reference; then one commit repoints both stores and
-        tombstones the superseded dirs. Crash before the repoint leaves
-        the old log current; last_batch_id carries through, so the
-        replay gate survives compaction."""
-        meta = self.meta()
-        if max(len(meta["out"]), len(meta["seen"])) <= 1:
-            return {"compacted": False,
-                    "entries": {s: len(meta[s]) for s in ("out", "seen")}}
-        gen = meta.get("compact_gen", 0) + 1
-        new = {"compact_gen": gen}
-        dead = []
-        for store, base in (("out", self.out_path),
-                            ("seen", self.seen_path)):
-            entries = meta[store]
-            if not entries:
-                continue
-            cdir = os.path.join(base, f"c{gen}")
-            snap = spark.read.parquet(*entries)
-            snap.write.mode("overwrite").parquet(cdir)
-            new[store] = [cdir]
-            dead.extend(entries)
-        new["tombstones"] = meta.get("tombstones", []) + dead
-        self._locked_commit(lambda cur: {**cur, **new})
-        return {"compacted": True, "gen": gen, "folded": len(dead)}
+        """Fold both delta logs (VersionedStore.compact_logs)."""
+        return self.compact_logs(spark, {"out": self.out_path,
+                                         "seen": self.seen_path},
+                                 self.compact_after)
 
     def writer(self):
         return self.apply_batch
@@ -197,97 +173,39 @@ class _IndexSinkBase(VersionedStore):
     (vector / MinHash-LSH): four append-only delta logs — pair output,
     member log, rep log, band log — committed TOGETHER with the last
     applied batch id by one VersionedStore commit (crash ⇒ orphan dirs
-    invisible, retry overwrites; redelivered batch id ⇒ no-op),
-    ``compact_after=N`` folding each log to ONE snapshot dir by pure
-    bag union (appends are disjoint from all committed state by
-    construction), superseded dirs TOMBSTONED and reclaimed by the
+    invisible, retry overwrites; redelivered batch id ⇒ no-op).
+    ``compact_after=N`` folds the logs through the store's one
+    compaction (VersionedStore.compact_logs: a minor pass over the
+    per-batch tail, a major pass once the snapshots outnumber
+    min(MAJOR_AFTER, N)) whenever a log exceeds N entries, so each
+    log keeps <= N + 1 entries; appends are disjoint from all
+    committed state by construction, so every fold is a pure bag
+    union, and the folded dirs are TOMBSTONED and reclaimed by the
     store's vacuum() as a separate restartable step."""
 
     _MANIFEST = "_index_manifest.json"
     STORES = ("out", "members", "reps", "bands")
 
+    # Fold-output CLUSTERED LAYOUT (round 13 — the mechanism behind
+    # the attach pushdown): the store's fold writes these logs range-
+    # partitioned + sorted by their key, so each snapshot file covers
+    # a DISJOINT key range and the pushdown's In(rep, ...) predicate
+    # prunes whole files / row groups at the parquet footer. Without
+    # this, arrival-ordered snapshots spread every key range across
+    # every file and the "pushdown" still scans every data page. Delta
+    # dirs stay arrival-ordered: one micro-batch = one file = one row
+    # group, where internal order cannot change footer min/max.
+    FOLD_SORT: dict = {"reps": ["rep"],
+                       "bands": ["band_idx", "band_key"]}
+
     def __init__(self, out_path: str, index_path: str,
-                 compact_after: int | None = None,
-                 major_after: int = 4,
-                 inline_major: bool = True):
+                 compact_after: int | None = None):
         super().__init__(os.path.join(out_path, self._MANIFEST),
                          {**{st: [] for st in self.STORES},
                           "last_batch_id": -1})
         self.out_path = out_path
         self.index_path = index_path
         self.compact_after = compact_after
-        # snapshot-generation bound: a MAJOR fold (whole-index rewrite)
-        # fires only when minor snapshots exceed this — the knob trading
-        # read amplification (dirs per probe scan) against write
-        # amplification (index rewrites); measured in SCALE.md round 11
-        self.major_after = major_after
-        # Round 12 (the one remaining r11 perf-weak item): the MAJOR
-        # fold rewrites the whole index — 22 s/batch compaction eras in
-        # the day-scale soak when it runs on the TRIGGER path. With
-        # inline_major=False apply_batch only ever folds its own tail
-        # (minor pass, O(tail)); the whole-index rewrite moves to a
-        # separately-run maintenance step (run_maintenance / tools/
-        # index_maintenance.py) against the same manifest — the 100 TB
-        # shape, where a background compactor owns write amplification
-        # and the trigger owns only per-batch work. Commits from the
-        # two writers are serialized by the store's _locked_commit.
-        self.inline_major = inline_major
-
-    # -- bucketed reps layout (r14: tools/bucketed_reps.py graduated) --
-    @staticmethod
-    def _is_bucketed(d: str) -> bool:
-        """A bucketed snapshot is recognizable by CONTENT (its
-        `_bucket=*` partition subdirs), so manifest entries stay plain
-        dir strings and every existing fold/tombstone/vacuum path is
-        untouched. One listdir per dir — the same listStatus a parquet
-        read performs anyway."""
-        try:
-            return any(f.startswith("_bucket=")
-                       for f in os.listdir(d))
-        except OSError:
-            return False
-
-    def _read_reps(self, spark: SparkSession, dirs: list,
-                   buckets: list | None = None) -> DataFrame | None:
-        """Reps-store reader for the MIXED log: flat dirs (delta tails
-        and minor range-sorted snapshots) read whole; bucketed MAJOR
-        snapshots read via recursiveFileLookup (the `_bucket` column
-        lives only in directory names, never in data files — so the
-        schema is uniform across layouts, the reconciliation blocker
-        that parked tools/bucketed_reps.py as a prototype). With a
-        candidate ``buckets`` list, bucketed snapshots are restricted
-        to exactly those `_bucket=i` subdirs — directory-grain pruning
-        BEFORE any footer is read; a scattered probe (most buckets
-        touched) falls back to whole-dir roots, JoinSink's measured
-        heuristic."""
-        from postgres_es_cdc_spark.llm.similarity import REP_BUCKETS
-        flat, bkt = [], []
-        for d in dirs:
-            (bkt if self._is_bucketed(d) else flat).append(d)
-        parts = []
-        if flat:
-            parts.append(spark.read.parquet(*flat))
-        if bkt:
-            if buckets is not None and 2 * len(buckets) < REP_BUCKETS:
-                paths = [p for d in bkt for b in buckets
-                         if os.path.isdir(
-                             p := os.path.join(d, f"_bucket={b}"))]
-            else:
-                paths = bkt
-            if paths:
-                parts.append(spark.read
-                             .option("recursiveFileLookup", "true")
-                             .parquet(*paths))
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _store_base(self, store: str) -> str:
-        return (self.out_path if store == "out"
-                else os.path.join(self.index_path, store))
 
     def pairs(self, spark: SparkSession) -> DataFrame | None:
         """The committed verified/candidate-pair output (log union)."""
@@ -298,238 +216,18 @@ class _IndexSinkBase(VersionedStore):
         per (rep, band); None while the index is empty."""
         return self._read_log(spark, self.meta().get("bands", []))
 
+    def compact(self, spark: SparkSession) -> dict:
+        """Fold the four delta logs (VersionedStore.compact_logs)."""
+        return self.compact_logs(
+            spark, {s: self.out_path if s == "out"
+                    else os.path.join(self.index_path, s)
+                    for s in self.STORES}, self.compact_after)
+
     def _maybe_compact(self, spark: SparkSession, meta: dict) -> None:
         if self.compact_after is not None and max(
                 len(meta.get(s, [])) for s in self.STORES
         ) > self.compact_after:
-            # inline_major=False keeps the whole-index rewrite OFF the
-            # trigger path — run_maintenance owns it (class docstring)
-            self.compact(spark, major=self.inline_major)
-
-    # -- compaction (tiered, round 11) -----------------------------------
-    @staticmethod
-    def _is_snapshot(d: str) -> bool:
-        return os.path.basename(d).startswith("c")
-
-    # Small-files discipline (round 11, measured): the first tiered-288
-    # soak was SLOWER mid-run than the full-fold one — every probe read
-    # the index from ~17 snapshot dirs each holding ~32 shuffle-grain
-    # files (2003 files on disk). Delta writes are micro-batch-sized by
-    # definition → 1 file; fold outputs are index-grain → a few files.
-    FOLD_FILES = 8
-
-    # Fold-output CLUSTERED LAYOUT (round 13 — the 100 TB mechanism
-    # behind the attach pushdown): stores listed here are written
-    # range-partitioned + sorted by their key when folded, so each
-    # snapshot file covers a DISJOINT key range and the pushdown's
-    # In(rep, ...) predicate prunes whole files / row groups at the
-    # parquet footer. Without this, arrival-ordered snapshots spread
-    # every key range across every file (the soak fixture's
-    # anti-localized reps defeat min/max pruning entirely) and the
-    # "pushdown" still scans every data page. Delta dirs stay
-    # arrival-ordered: one micro-batch = one file = one row group,
-    # where internal order cannot change footer min/max. The sort
-    # rides the fold's existing shuffle slot — minor folds are
-    # tail-sized, major folds run off the trigger path.
-    FOLD_SORT: dict = {"reps": ["rep"],
-                       "bands": ["band_idx", "band_key"]}
-
-    def _fold_pass(self, spark: SparkSession, pick,
-                   bucket_reps: bool = False) -> dict:
-        """One CLAIM → FOLD → SWAP pass (round 12 — the fold itself is
-        unchanged bag-union; the protocol around it now tolerates a
-        concurrent writer):
-
-        1. CLAIM: snapshot the manifest, pick the fold set per store
-           (>1 entries matching ``pick``); under the lock, reserve a
-           unique generation number and record the would-be c{gen}
-           dirs in ``pending`` (so a crash mid-fold leaves reclaimable
-           breadcrumbs, never silent orphans — ADVICE r11's migration
-           finding generalized).
-        2. FOLD (heavy, unlocked): union each fold set into its c{gen}
-           dir. Concurrent appends/folds proceed freely.
-        3. SWAP: under the lock, re-read the manifest; verify every
-           claimed dir is STILL listed (a concurrent folder may have
-           claimed overlapping dirs — then abort: the c-dirs stay in
-           pending for vacuum(reclaim_pending=True)); replace the fold
-           set with the c-dir at the position of its first member,
-           preserving entries appended since the claim; tombstone the
-           folded dirs; clear pending.
-
-        Minor and major passes pick disjoint dir kinds (b* vs c*), so
-        a trigger-path minor fold and a maintenance-process major fold
-        never contend on the same entries — the swap verification is
-        the backstop, not the mechanism."""
-        snap = self.meta()
-        folds = {s: f for s in self.STORES
-                 if len(f := [d for d in snap.get(s, []) if pick(d)]) > 1}
-        if not folds:
-            return {"compacted": False, "folded": 0}
-        box: dict = {}
-
-        def reserve(cur: dict) -> dict:
-            gen = cur.get("compact_gen", 0) + 1
-            box["gen"] = gen
-            box["cdirs"] = {s: os.path.join(self._store_base(s), f"c{gen}")
-                            for s in folds}
-            new = dict(cur)
-            new["compact_gen"] = gen
-            # pending entries carry their claim time (ADVICE r12, the
-            # tombstone discipline): dirs parked by a crashed or
-            # lost-claim fold become age-eligible for the steady-state
-            # run_maintenance reclaim instead of leaking until an
-            # operator runs vacuum(reclaim_pending=True)
-            now = time.time()
-            new["pending"] = (new.get("pending", [])
-                              + [[d, now]
-                                 for d in sorted(box["cdirs"].values())])
-            return new
-
-        self._locked_commit(reserve)
-        gen, cdirs = box["gen"], box["cdirs"]
-        for store, fold in folds.items():
-            if store == "reps":
-                # mixed-layout aware (a prior MAJOR snapshot in the
-                # fold set is bucketed); the fold itself stays bag union
-                df = self._read_reps(spark, fold)
-                if bucket_reps:
-                    # MAJOR folds graduate the reps snapshot to the
-                    # hash-bucketed table layout (r14): partition dirs
-                    # by _bucket, rep-sorted within, so attach probes
-                    # prune whole DIRECTORIES by candidate bucket.
-                    # Only the (one) major snapshot pays the
-                    # REP_BUCKETS-dir layout — minor snapshots keep
-                    # the 8-file range layout, bounding file count
-                    # (the r11 small-files lesson): L0 arrival deltas,
-                    # L1 range-sorted minors, L2 bucketed major.
-                    from postgres_es_cdc_spark.llm.similarity import (
-                        REP_BUCKETS, _rep_bucket_expr)
-                    (df.withColumn("_bucket", _rep_bucket_expr())
-                       .repartition(REP_BUCKETS, F.col("_bucket"))
-                       .sortWithinPartitions(*self.FOLD_SORT["reps"])
-                       .write.mode("overwrite").partitionBy("_bucket")
-                       .parquet(cdirs[store]))
-                    continue
-            else:
-                df = spark.read.parquet(*fold)
-            keys = self.FOLD_SORT.get(store)
-            if keys:
-                df = (df.repartitionByRange(self.FOLD_FILES, *keys)
-                        .sortWithinPartitions(*keys))
-            else:
-                df = df.coalesce(self.FOLD_FILES)
-            df.write.mode("overwrite").parquet(cdirs[store])
-
-        def swap(cur: dict) -> dict | None:
-            new = dict(cur)
-            dead = []
-            for store, fold in folds.items():
-                entries = cur.get(store, [])
-                if any(d not in entries for d in fold):
-                    return None          # claimed by a concurrent fold
-                kept = [d for d in entries if d not in fold]
-                at = sum(1 for d in entries[:entries.index(fold[0])]
-                         if d not in fold)
-                kept.insert(at, cdirs[store])
-                new[store] = kept
-                dead.extend(fold)
-            # tombstones carry their commit time (round 12): with a
-            # CONCURRENT compactor, vacuum must not reclaim a dir an
-            # in-flight trigger may still be reading from an older
-            # manifest snapshot — vacuum(grace_s=...) only deletes
-            # tombstones older than the longest possible reader
-            # (a micro-batch), the retention-window discipline every
-            # snapshot-isolated table format uses
-            now = time.time()
-            new["tombstones"] = (new.get("tombstones", [])
-                                 + [[d, now] for d in dead])
-            new["pending"] = [p for p in new.get("pending", [])
-                              if self._pend_path(p)
-                              not in cdirs.values()]
-            return new
-
-        if self._locked_commit(swap) is None:
-            return {"compacted": False, "folded": 0, "gen": gen,
-                    "aborted": True}
-        return {"compacted": True, "gen": gen,
-                "folded": sum(len(f) for f in folds.values())}
-
-    def compact(self, spark: SparkSession, minor: bool = True,
-                major: bool = True) -> dict:
-        """TIERED compaction (round 11 — the 288-batch soak measured
-        the all-entries fold rewriting the WHOLE index every
-        compact_after batches, an O(index) amortized term that
-        dominated day-scale cost): a MINOR pass folds only the
-        per-batch tail dirs into one new snapshot generation —
-        O(tail), earlier snapshots untouched — then, only when the
-        snapshot count itself still exceeds the major threshold, a
-        MAJOR pass folds the snapshots into one (amortized O(index /
-        compact_after²) per batch). Both passes are bag-union folds
-        (appends are disjoint by construction) committed by the
-        claim→fold→swap protocol of _fold_pass; crash between the two
-        passes leaves a fully consistent minor state; last_batch_id
-        carries through, so the replay gate survives. Post-compact
-        entry count stays ≤ compact_after + 1, preserving the round-9
-        bounded-listing contract.
-
-        ``minor``/``major`` select the passes: the trigger path calls
-        compact(spark, major=self.inline_major) so an inline_major=
-        False sink never rewrites the whole index inside a trigger;
-        the background compactor calls compact(spark, minor=False)
-        (run_maintenance) and owns the major fold alone."""
-        meta = self.meta()
-        if max(len(meta.get(s, [])) for s in self.STORES) <= 1:
-            return {"compacted": False}
-        out = {"compacted": False, "folded": 0, "major": False}
-        if minor:
-            r = self._fold_pass(spark,
-                                lambda d: not self._is_snapshot(d))
-            out.update(compacted=r["compacted"], folded=r["folded"])
-            if "gen" in r:
-                out["gen"] = r["gen"]
-        # effective major threshold: never above compact_after, so the
-        # bounded-listing contract (<= compact_after + 1 entries after
-        # compaction) holds at any knob setting
-        cap = (min(self.major_after, self.compact_after)
-               if self.compact_after is not None else 1)
-        meta = self.meta()
-        if major and max(len([d for d in meta.get(s, [])
-                              if self._is_snapshot(d)])
-                         for s in self.STORES) > cap:
-            r = self._fold_pass(spark, self._is_snapshot,
-                                bucket_reps=True)
-            if r["compacted"]:
-                out.update({"compacted": True, "gen": r["gen"],
-                            "major": True,
-                            "folded": out["folded"] + r["folded"]})
-        return out
-
-    def run_maintenance(self, spark: SparkSession, vacuum: bool = True,
-                        grace_s: float = 300.0,
-                        pending_grace_s: float = 3600.0) -> dict:
-        """One background-compactor step — what a 100 TB deployment
-        runs in its OWN process/session while the stream keeps
-        triggering (tools/index_maintenance.py is the CLI): the major
-        whole-index fold, off the trigger path, plus optional vacuum
-        of tombstoned dirs. Safe against the live trigger because
-        every manifest commit goes through _locked_commit's re-read-
-        merge and the swap verifies its claim; safe against crashes
-        because an interrupted fold leaves only ``pending`` dirs that
-        the next reclaim sweep removes. ``grace_s`` keeps tombstones
-        a reader might still hold (vacuum docstring); the default
-        comfortably exceeds a micro-batch. ``pending_grace_s`` lets
-        the STEADY-STATE loop reclaim pending c-dirs parked by a
-        crashed or lost-claim fold (ADVICE r12 — previously they
-        leaked until an operator ran vacuum(reclaim_pending=True)):
-        entries older than the window cannot belong to a live fold as
-        long as the window exceeds the longest possible fold pass —
-        the default hour is ~3 orders of magnitude above any measured
-        major fold; set it None-like high rather than low."""
-        r = self.compact(spark, minor=False, major=True)
-        if vacuum:
-            r = dict(r, vacuumed=self.vacuum(
-                grace_s=grace_s, pending_grace_s=pending_grace_s))
-        return r
+            self.compact(spark)
 
     def writer(self):
         return self.apply_batch
@@ -551,8 +249,9 @@ class VectorIndexSink(_IndexSinkBase):
     committed state by construction (an id arrives once; a rep is added
     only when its vector is unseen), so all FOUR stores are append-only
     bags: one commit lands them together with the batch id
-    (_IndexSinkBase), and ``compact_after=N`` folds each log to ONE
-    snapshot dir by pure bag union.
+    (_IndexSinkBase), and ``compact_after=N`` folds the logs by pure
+    bag union through the store's one compaction
+    (VersionedStore.compact_logs).
 
     The fourth log is the PERSISTED BAND LOG (round 11): each new rep's
     (rep, band_idx, band_key) sign-LSH rows are appended once, when the
@@ -583,8 +282,7 @@ class VectorIndexSink(_IndexSinkBase):
     def __init__(self, out_path: str, index_path: str,
                  threshold: float = 0.9,
                  compact_after: int | None = None,
-                 n_bands: int = 2, bits: int = 32,
-                 major_after: int = 4, inline_major: bool = True):
+                 n_bands: int = 2, bits: int = 32):
         # (2, 32) — the MEASURED rule from the round-12 288-batch day
         # soak: accidental candidates/batch ~ bands*batch*index/2^bits,
         # an O(index) per-batch term. At (4,16) that reads ~300k
@@ -597,9 +295,7 @@ class VectorIndexSink(_IndexSinkBase):
         # 1 under any sign banding; the manifest pins geometry, so
         # existing indexes keep working by passing their committed
         # (n_bands, bits) explicitly.
-        super().__init__(out_path, index_path, compact_after,
-                         major_after=major_after,
-                         inline_major=inline_major)
+        super().__init__(out_path, index_path, compact_after)
         self._empty["banding"] = [n_bands, bits]
         self.threshold = threshold
         self.n_bands = n_bands
@@ -611,7 +307,7 @@ class VectorIndexSink(_IndexSinkBase):
         from the batch schema when no state is committed yet."""
         meta = meta or self.meta()
         mem = self._read_log(spark, meta["members"])
-        reps = self._read_reps(spark, meta["reps"])
+        reps = self._read_log(spark, meta["reps"])
         if mem is None:
             mem = batch.select("id", F.col("id").alias("rep")).limit(0)
         if reps is None:
@@ -644,7 +340,7 @@ class VectorIndexSink(_IndexSinkBase):
             dirs = []
             if meta["reps"]:
                 mig = os.path.join(self.index_path, "bands", "m0")
-                (_emb_rep_bands(self._read_reps(spark, meta["reps"]),
+                (_emb_rep_bands(self._read_log(spark, meta["reps"]),
                                 self.n_bands, self.bits)
                  .coalesce(self.FOLD_FILES)
                  .write.mode("overwrite").parquet(mig))
@@ -667,18 +363,14 @@ class VectorIndexSink(_IndexSinkBase):
         pdir = os.path.join(self.out_path, f"b{batch_id}")
         # repartition(1), NOT coalesce(1): every delta is micro-batch-
         # sized — without it each dir lands ~32 shuffle-grain files and
-        # probe scans pay O(dirs x 32) footers (the small-files note at
-        # _fold). coalesce(1) would merge the FINAL stage to one task
-        # and serialize the whole probe/merge compute (measured in the
+        # probe scans pay O(dirs x 32) footers (VersionedStore.
+        # FOLD_FILES). coalesce(1) would merge the FINAL stage to one
+        # task and serialize the whole probe/merge compute (measured in the
         # round-11 tiered iterations); the extra one-file shuffle of a
         # micro-batch-sized delta is noise by comparison.
         probe = _probe_embedding_store(
             store, bmem, self.threshold, self.n_bands, self.bits,
-            store_bands=store_bands,
-            # r14 bucketed layout: the attach scan re-enumerates the
-            # reps log pruned to the candidates' bucket dirs
-            store_reps_loader=lambda bks:
-            self._read_reps(spark, meta["reps"], bks))
+            store_bands=store_bands)
         # store_bands prefilters the merge's vector-equality scan too
         # (round 12): the reps log's q column is only read for reps
         # whose band-0 key collides with the batch — the last measured
@@ -699,10 +391,8 @@ class VectorIndexSink(_IndexSinkBase):
         # reps log, the invariant tests pin
         (_emb_rep_bands(spark.read.parquet(rdir), self.n_bands, self.bits)
          .repartition(1).write.mode("overwrite").parquet(bdir))
-        # merge-aware commit (round 12): a background compactor may
-        # have folded store entries between this batch's meta read and
-        # now — append the new dirs to the FRESHEST lists, never write
-        # back the stale snapshot
+        # merge-aware commit: append the new dirs to the lists of the
+        # manifest as the lock reads it, never to this batch's early read
         new_meta = self.commit(batch_id, lambda cur: {
             "out": cur["out"] + [pdir],
             "members": cur["members"] + [mdir],
@@ -753,12 +443,9 @@ class SignatureIndexSink(_IndexSinkBase):
 
     def __init__(self, out_path: str, index_path: str,
                  compact_after: int | None = None,
-                 cap: int | None = None,
-                 major_after: int = 4, inline_major: bool = True):
+                 cap: int | None = None):
         from postgres_es_cdc_spark.llm.dedup import PAIR_BUCKET_CAP
-        super().__init__(out_path, index_path, compact_after,
-                         major_after=major_after,
-                         inline_major=inline_major)
+        super().__init__(out_path, index_path, compact_after)
         self.cap = PAIR_BUCKET_CAP if cap is None else cap
 
     def index(self, spark: SparkSession, batch: DataFrame,
@@ -768,7 +455,7 @@ class SignatureIndexSink(_IndexSinkBase):
         from postgres_es_cdc_spark.llm.dedup import _SIG_COLS
         meta = meta or self.meta()
         mem = self._read_log(spark, meta["members"])
-        reps = self._read_reps(spark, meta["reps"])
+        reps = self._read_log(spark, meta["reps"])
         if mem is None:
             mem = batch.select("doc_id",
                                F.col("doc_id").alias("rep")).limit(0)
@@ -795,7 +482,7 @@ class SignatureIndexSink(_IndexSinkBase):
         pdir = os.path.join(self.out_path, f"b{batch_id}")
         # repartition(1), NOT coalesce(1): micro-batch-sized deltas,
         # one file each without serializing the probe compute into a
-        # single task (the small-files note at _fold)
+        # single task (VersionedStore.FOLD_FILES)
         probe = _probe_signature_store(store, bmem, self.cap,
                                        store_bands=store_bands)
         new_members, new_reps = merge_signature_deltas(store, bmem)
@@ -812,7 +499,7 @@ class SignatureIndexSink(_IndexSinkBase):
         # round-11 invariant, same rationale)
         (_rep_bands(spark.read.parquet(rdir).select("rep", *_SIG_COLS))
          .repartition(1).write.mode("overwrite").parquet(bdir))
-        # merge-aware commit — same rationale as VectorIndexSink's
+        # merge-aware commit, as VectorIndexSink's
         new_meta = self.commit(batch_id, lambda cur: {
             "out": cur["out"] + [pdir],
             "members": cur["members"] + [mdir],

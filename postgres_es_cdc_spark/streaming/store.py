@@ -20,10 +20,24 @@ Manifest fields that name data come in two shapes:
     every batch's merge is also its compaction). The superseded dir is
     deleted right after the repoint, so a frame occupies at most two
     versions on disk.
-  * a DELTA LOG: a list of dirs its sink appends to and compacts. Dirs
-    folded away are TOMBSTONED in the manifest, never deleted in the
-    commit path, and ``vacuum`` reclaims them as a separate restartable
-    step — a crash can never orphan live data.
+  * a DELTA LOG: a list of dirs its sink appends to, one ``b<batch>``
+    dir per batch, and folds with ``compact_logs``. Every log is an
+    append-only bag, so a fold is a bag-union rewrite. The one rule:
+    a minor pass folds a log's ``b*`` dirs into one ``c<gen>`` dir,
+    and a major pass folds the ``c*`` snapshots into one once there
+    are more than min(MAJOR_AFTER, compact_after) of them, so a log
+    compacted whenever it holds more than ``compact_after`` dirs never
+    holds more than ``compact_after + 1``. Each pass lands its
+    ``c<gen>`` dirs, then one locked commit repoints the logs, bumps
+    ``compact_gen`` and TOMBSTONES the folded dirs; ``vacuum``
+    reclaims tombstones as a separate restartable step, so a crash can
+    never orphan live data. A store has ONE writer: the sink's own
+    trigger appends and compacts, nothing folds beside it, so a
+    tombstone is dead the moment it is committed. ``JoinSink``
+    (streaming/ivm.py) keeps its own fold: its entries are
+    ``{"dir", "buckets"}`` records written by a partitioned writer,
+    and folding that format here would make the store branch on its
+    caller.
 
 Sinks inherit from the store (``meta``, ``_commit``, ``_manifest_path``
 and ``_locked_commit`` are their manifest surface) or, for a one-frame
@@ -37,13 +51,30 @@ import fcntl
 import json
 import os
 import shutil
-import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
 
+MAJOR_AFTER = 4
+"""A delta log's major pass fires once it holds more than
+min(MAJOR_AFTER, compact_after) snapshots (SCALE.md round 11)."""
+
+
+def _is_snapshot(d: str) -> bool:
+    return os.path.basename(d).startswith("c")
+
+
 class VersionedStore:
+    # Fold outputs are index-grain: a few files each, where a shuffle-
+    # grain write would land ~32 and every later scan pays their
+    # footers (the round-11 small-files measurement).
+    FOLD_FILES = 8
+    # {log: sort keys}: a log named here folds range-partitioned and
+    # sorted by its keys, so each snapshot file covers a disjoint key
+    # range that a pushed-down predicate prunes at the parquet footer.
+    FOLD_SORT: dict = {}
+
     def __init__(self, manifest: str, empty: dict):
         # empty: the manifest before the first commit; it must hold
         # "last_batch_id": -1 (the replay gate) and every frame / log
@@ -78,15 +109,15 @@ class VersionedStore:
         """Serialized read-modify-write of the manifest: take an
         exclusive flock, re-read the manifest, apply ``mutate(current)
         -> new | None`` (None aborts without writing) and write the
-        result in one os.replace. A compactor running beside the
-        trigger makes TWO writers; a blind write of a manifest read
-        earlier would lose the other writer's commit (the classic lost
-        update). The lock is held only around read+mutate+write —
-        never around Spark work — so contention is microseconds. flock
-        is advisory and host-local, which fits one box; on a cluster
-        the manifest lives in a coordination service or a table format
-        with optimistic CAS commits. Frames the new manifest no longer
-        names are deleted after the repoint."""
+        result in one os.replace. A store has one writer, but two sink
+        objects on one manifest (a restarted trigger overlapping the
+        old one) must not lose each other's commit to a blind write of
+        a manifest read earlier (the classic lost update). The lock is
+        held only around read+mutate+write, never around Spark work.
+        flock is advisory and host-local, which fits one box; on a
+        cluster the manifest lives in a coordination service or a
+        table format with optimistic CAS commits. Frames the new
+        manifest no longer names are deleted after the repoint."""
         p = self._manifest_path()
         os.makedirs(os.path.dirname(p) or ".", exist_ok=True)
         with open(p + ".lock", "w") as lk:
@@ -149,69 +180,81 @@ class VersionedStore:
             return new
         return self._locked_commit(mutate)
 
-    # -- tombstones and vacuum -----------------------------------------
-    @staticmethod
-    def _tomb_path(t) -> str:
-        """A tombstone is a bare path (always eligible for vacuum) or a
-        [path, tombstoned_unix] pair (eligible once older than the
-        reader-retention window)."""
-        return t if isinstance(t, str) else t[0]
+    # -- delta logs ----------------------------------------------------
+    def compact_logs(self, spark: SparkSession, logs: dict,
+                     compact_after: int | None) -> dict:
+        """Fold the delta logs ``logs`` ({log name: base dir}) by the
+        module docstring's rule: a minor pass over each log's ``b*``
+        dirs, then a major pass over its ``c*`` snapshots when there
+        are more than min(MAJOR_AFTER, compact_after) of them (more
+        than one when ``compact_after`` is None). A minor pass leaves
+        earlier snapshots untouched, so its cost is O(tail); the major
+        pass rewrites the whole log once every ~compact_after batches
+        (SCALE.md round 11). A crash between the passes leaves a
+        consistent minor state; ``last_batch_id`` carries through, so
+        the replay gate survives."""
+        cap = 1 if compact_after is None else min(MAJOR_AFTER,
+                                                  compact_after)
+        folded = self._fold(spark, logs, lambda d: not _is_snapshot(d))
+        meta = self.meta()
+        major = max(sum(map(_is_snapshot, meta.get(s, [])))
+                    for s in logs) > cap
+        if major:
+            folded |= self._fold(spark, logs, _is_snapshot)
+        return {"compacted": folded, "major": major}
 
-    # pending entries (claimed fold outputs) share the tombstone
-    # encoding: bare path or [path, claimed_unix]
-    _pend_path = _tomb_path
+    def _fold(self, spark: SparkSession, logs: dict, pick) -> bool:
+        """One pass: each log with more than one ``pick``ed dir folds
+        them into ``<base>/c<gen>``, then one locked commit puts the
+        ``c<gen>`` dir where the first folded dir was, tombstones the
+        folded dirs and bumps ``compact_gen``. The commit aborts when
+        the manifest no longer lists a folded dir (another commit
+        folded it). A crash before the commit leaves the manifest as
+        it was, and the retry rewrites the same ``c<gen>`` path.
+        Returns whether the pass committed."""
+        meta = self.meta()
+        folds = {s: f for s in logs
+                 if len(f := [d for d in meta.get(s, []) if pick(d)]) > 1}
+        if not folds:
+            return False
+        gen = meta.get("compact_gen", 0) + 1
+        cdirs = {s: os.path.join(logs[s], f"c{gen}") for s in folds}
+        for s, fold in folds.items():
+            df = spark.read.parquet(*fold)
+            keys = self.FOLD_SORT.get(s)
+            df = (df.repartitionByRange(self.FOLD_FILES, *keys)
+                    .sortWithinPartitions(*keys) if keys
+                  else df.coalesce(self.FOLD_FILES))
+            df.write.mode("overwrite").parquet(cdirs[s])
+        dead = [d for f in folds.values() for d in f]
 
-    def vacuum(self, reclaim_pending: bool = False,
-               grace_s: float = 0.0,
-               pending_grace_s: float | None = None) -> int:
+        def repoint(cur: dict) -> dict | None:
+            if any(d not in cur[s] for s, f in folds.items() for d in f):
+                return None
+            new = {**cur, "compact_gen": gen,
+                   "tombstones": cur.get("tombstones", []) + dead}
+            for s, fold in folds.items():
+                new[s] = [cdirs[s] if d == fold[0] else d
+                          for d in cur[s] if d == fold[0] or d not in fold]
+            return new
+        return self._locked_commit(repoint) is not None
+
+    def vacuum(self) -> int:
         """Delete tombstoned dirs and drop them from the manifest —
         separate from the commit that tombstoned them, so a crash can
         never orphan LIVE data (re-running re-deletes already-gone
         dirs, a no-op). Merge-aware: the commit drops exactly the dirs
-        THIS call deleted, preserving tombstones a concurrent fold
-        added in between. Returns the number of dirs reclaimed.
-
-        ``grace_s`` is the reader-retention window: a tombstone younger
-        than this may still be READ by an in-flight trigger that
-        planned from the pre-fold manifest, so a CONCURRENT maintenance
-        process must vacuum with grace_s above the longest micro-batch.
-        grace_s=0 reclaims everything, right for a single writer.
-
-        ``reclaim_pending=True`` also deletes ALL ``pending`` dirs —
-        leftovers of a fold that crashed or lost its swap. Only safe
-        when no compactor is mid-fold (a live fold's outputs sit in
-        pending until its swap commits), so it is an operator sweep,
-        never part of the trigger path. ``pending_grace_s`` is the
-        concurrent-safe form: only entries claimed longer ago than the
-        window (longer than any fold pass) are deleted."""
-        meta = self.meta()
-        cutoff = time.time() - grace_s
-        dead = [self._tomb_path(t) for t in meta.get("tombstones", [])
-                if isinstance(t, str) or t[1] <= cutoff]
-        if reclaim_pending:
-            ripe_p = list(meta.get("pending", []))
-        elif pending_grace_s is not None:
-            pcut = time.time() - pending_grace_s
-            ripe_p = [p for p in meta.get("pending", [])
-                      if isinstance(p, str) or p[1] <= pcut]
-        else:
-            ripe_p = []
-        pend = [self._pend_path(p) for p in ripe_p]
-        for d in dead + pend:
-            shutil.rmtree(d, ignore_errors=True)
-        if dead or pend:
-            def drop(cur: dict) -> dict:
-                new = dict(cur)
-                new["tombstones"] = [
-                    t for t in cur.get("tombstones", [])
-                    if self._tomb_path(t) not in dead]
-                if pend:
-                    new["pending"] = [
-                        p for p in cur.get("pending", [])
-                        if self._pend_path(p) not in pend]
-                return new
-            self._locked_commit(drop)
-        return len(dead) + len(pend)
+        THIS call deleted. Returns the number of dirs reclaimed."""
+        # a tombstone is a dir path; manifests written before the store
+        # had one writer hold [path, tombstoned_unix] pairs
+        dead = self.meta().get("tombstones", [])
+        for t in dead:
+            shutil.rmtree(t if isinstance(t, str) else t[0],
+                          ignore_errors=True)
+        if dead:
+            self._locked_commit(lambda cur: {**cur, "tombstones": [
+                t for t in cur.get("tombstones", []) if t not in dead]})
+        return len(dead)
 
 
 class SnapshotStore(VersionedStore):

@@ -58,16 +58,6 @@ def main() -> None:
                          "clustersink = ClusterLabelSink (round-13: "
                          "the same fold through the DURABLE "
                          "versioned-snapshot store)")
-    ap.add_argument("--maintenance", action="store_true",
-                    help="vector/lshsink only: inline_major=False on "
-                         "the trigger sink and a CONCURRENT background "
-                         "compactor thread (separate sink object, the "
-                         "separate-process shape) owning major folds + "
-                         "grace-gated vacuum — the round-12 trigger-"
-                         "path claim: trigger times never see the "
-                         "whole-index-rewrite eras")
-    ap.add_argument("--grace", type=float, default=30.0,
-                    help="maintenance vacuum retention window (s)")
     ap.add_argument("--bands", type=int, default=2,
                     help="vector only: sign-LSH bands (bands*bits=64)")
     ap.add_argument("--bits", type=int, default=32,
@@ -376,18 +366,10 @@ def _lshsink_soak(spark, args) -> None:
         return dup.unionByName(fr)
 
     base = tempfile.mkdtemp(prefix="lshsink_soak_")
-    stop = mt = None
     try:
         sink = SignatureIndexSink(out_path=os.path.join(base, "pairs"),
                                   index_path=os.path.join(base, "index"),
-                                  compact_after=args.compact_after,
-                                  inline_major=not args.maintenance)
-        merrs: list = []
-        if args.maintenance:
-            stop, mt, merrs = _start_maintenance(
-                spark, SignatureIndexSink,
-                dict(out_path=os.path.join(base, "pairs"),
-                     index_path=os.path.join(base, "index")), args)
+                                  compact_after=args.compact_after)
         times = []
         max_files = 0
         for i in range(args.batches):
@@ -400,9 +382,6 @@ def _lshsink_soak(spark, args) -> None:
             n_files = sum(len(files) for _, _, files in os.walk(base))
             max_files = max(max_files, n_files)
 
-        if stop is not None:
-            stop.set()
-            mt.join()
         m = sink.meta()
         n_pairs = sink.pairs(spark).count()
         want = pool * args.batches * (args.batches - 1) // 2
@@ -415,8 +394,6 @@ def _lshsink_soak(spark, args) -> None:
             "batches": args.batches,
             "rows_per_batch": args.rows,
             "compact_after": args.compact_after,
-            "maintenance": args.maintenance,
-            "maintenance_errors": merrs,
             "vacuum": args.vacuum,
             "first10_avg_s": round(first10, 3),
             "last10_avg_s": round(last10, 3),
@@ -433,35 +410,7 @@ def _lshsink_soak(spark, args) -> None:
             "per_batch_s": times,
         }))
     finally:
-        if stop is not None:
-            stop.set()
-            mt.join()
         shutil.rmtree(base, ignore_errors=True)
-
-
-def _start_maintenance(spark, sink_cls, kw, args):
-    """(stop_event, thread, errors): a concurrent background compactor
-    on a SEPARATE sink object — the separate-process shape (flock
-    serializes commits either way); major folds + grace-gated vacuum
-    run here while the soak loop only ever pays minor folds."""
-    import threading
-
-    maint = sink_cls(**kw, major_after=1)
-    stop = threading.Event()
-    errs: list = []
-
-    def loop():
-        while not stop.is_set():
-            try:
-                maint.run_maintenance(spark, grace_s=args.grace)
-            except Exception as e:          # pragma: no cover
-                errs.append(repr(e))
-                return
-            stop.wait(1.0)
-
-    t = threading.Thread(target=loop)
-    t.start()
-    return stop, t, errs
 
 
 def _cluster_soak(spark, args, durable: bool = False,
@@ -600,20 +549,11 @@ def _vector_soak(spark, args) -> None:
     from postgres_es_cdc_spark.streaming.dedup import VectorIndexSink
 
     base = tempfile.mkdtemp(prefix="vector_soak_")
-    stop = mt = None
     try:
         sink = VectorIndexSink(out_path=os.path.join(base, "pairs"),
                                index_path=os.path.join(base, "index"),
                                compact_after=args.compact_after,
-                               inline_major=not args.maintenance,
                                n_bands=args.bands, bits=args.bits)
-        merrs: list = []
-        if args.maintenance:
-            stop, mt, merrs = _start_maintenance(
-                spark, VectorIndexSink,
-                dict(out_path=os.path.join(base, "pairs"),
-                     index_path=os.path.join(base, "index"),
-                     n_bands=args.bands, bits=args.bits), args)
         pool = 100
         fresh_per = args.rows - pool
 
@@ -657,9 +597,6 @@ def _vector_soak(spark, args) -> None:
             n_files = sum(len(files) for _, _, files in os.walk(base))
             max_files = max(max_files, n_files)
 
-        if stop is not None:
-            stop.set()
-            mt.join()
         m = sink.meta()
         n_pairs = sink.pairs(spark).count()
         # every pool-key pair across batches, none among fresh vectors:
@@ -673,8 +610,6 @@ def _vector_soak(spark, args) -> None:
             "rows_per_batch": args.rows,
             "compact_after": args.compact_after,
             "banding": [args.bands, args.bits],
-            "maintenance": args.maintenance,
-            "maintenance_errors": merrs,
             "vacuum": args.vacuum,
             "first10_avg_s": round(first10, 3),
             "last10_avg_s": round(last10, 3),
@@ -690,9 +625,6 @@ def _vector_soak(spark, args) -> None:
             "per_batch_s": times,
         }))
     finally:
-        if stop is not None:
-            stop.set()
-            mt.join()
         shutil.rmtree(base, ignore_errors=True)
 
 
