@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from postgres_es_cdc_spark.catalog import table
 from postgres_es_cdc_spark.streaming.store import (SnapshotStore,
-                                                   VersionedStore, write_all)
+                                                   VersionedStore)
 
 
 class KeyedDedupSink(VersionedStore):
@@ -39,44 +39,36 @@ class KeyedDedupSink(VersionedStore):
     In-batch ties resolve by ``order_col`` (min wins) so replays are
     deterministic.
 
-    Round-10 durability/compaction rewrite (the JoinSink discipline
-    ported to the append-only pair, closing the round-9 verdict's
-    file-count-growth item): both stores are APPEND-ONLY delta logs —
-    one dir per batch under ``out_path``/``seen_path`` — committed
-    TOGETHER with the last applied batch id in one VersionedStore
-    commit (streaming/store.py). That replaces three defects of the
-    pre-round-10 sink: (1) the survivor output was a bare ``mode("append")`` with no
-    replay gate, so an at-least-once redelivery duplicated output
-    files; (2) the seen store was fully REWRITTEN per batch — O(corpus)
-    per batch, the anti-IVM shape; (3) that rewrite overwrote the live
-    dir in place — a crash mid-write lost both old and new state. Now a
-    crash at any point leaves the previously committed manifest current
-    (orphan dirs are invisible and overwritten on retry), a redelivered
-    batch id is a no-op, and per-batch cost is O(batch + store probe)
-    in rows.
+    Both stores are APPEND-ONLY delta logs of the sink's
+    VersionedStore (streaming/store.py), ``out`` under ``out_path`` and
+    ``seen`` under ``seen_path``: per batch the store lands one
+    ``b<batch_id>`` dir per log and one ``append`` commits both with
+    the last applied batch id. A crash at any point leaves the
+    previously committed manifest current (orphan dirs are invisible
+    and overwritten on retry), a redelivered batch id is a no-op, and
+    per-batch cost is O(batch + store probe) in rows — the seen store
+    is never rewritten.
 
     The LOG still grows one dir per store per batch — listing +
     parquet-footer overhead O(entries) with uptime (288 entries/day at
     5-minute triggers; the JoinSink soak measured 1.98× probe growth).
-    ``compact_after=N`` folds the logs through the store's one
-    compaction (VersionedStore.compact_logs) whenever either exceeds N
-    entries: both stores are append-only BAGS (appended key sets are
-    disjoint by construction — a key is appended only when absent
-    from everything before it), so a fold is a pure bag-union rewrite,
-    committed by one repoint with the folded dirs TOMBSTONED; the
-    store's vacuum() reclaims them as a separate restartable step.
-    Shapes pinned by tests/test_streaming_dedup_compaction.py; the
-    wall-clock flatness is tools/ivm_soak.py --sink dedup."""
+    With ``compact_after=N`` the store's ``append`` folds the logs
+    (VersionedStore.compact_logs) whenever either exceeds N entries:
+    both stores are append-only BAGS (appended key sets are disjoint by
+    construction — a key is appended only when absent from everything
+    before it), so a fold is a pure bag-union rewrite, committed by one
+    repoint with the folded dirs TOMBSTONED; the store's vacuum()
+    reclaims them as a separate restartable step. Shapes pinned by
+    tests/test_streaming_dedup_compaction.py; the wall-clock flatness
+    is tools/ivm_soak.py --sink dedup."""
 
     def __init__(self, out_path: str, seen_path: str, keys: list[str],
                  order_col: str, compact_after: int | None = None):
         super().__init__(os.path.join(out_path, "_dedup_manifest.json"),
-                         {"out": [], "seen": [], "last_batch_id": -1})
-        self.out_path = out_path
-        self.seen_path = seen_path
+                         {}, {"out": out_path, "seen": seen_path},
+                         compact_after)
         self.keys = keys
         self.order_col = order_col
-        self.compact_after = compact_after
 
     def survivors(self, spark: SparkSession) -> DataFrame | None:
         """The committed survivor output (union of the delta log)."""
@@ -96,32 +88,17 @@ class KeyedDedupSink(VersionedStore):
         if self.applied(batch_id):
             return                      # committed replay: no-op
         spark = batch.sparkSession
-        meta = self.meta()
         cand = self._batch_first(batch)
-        seen = self._read_log(spark, meta["seen"])
+        seen = self._read_log(spark, self.meta()["seen"])
         if seen is not None:
             # key-only anti-join: the store holds keys, not payloads —
             # broadcastable while the store is small, shuffle at scale
             cand = cand.join(seen, self.keys, "left_anti")
         cand = cand.localCheckpoint()  # one computation for both writes
-        odir = os.path.join(self.out_path, f"b{batch_id}")
-        sdir = os.path.join(self.seen_path, f"b{batch_id}")
         # independent writes off the checkpointed frame, overlapped;
-        # both land before the one commit
-        write_all({odir: cand.write,
-                   sdir: cand.select(*self.keys).write})
-        new_meta = self.commit(batch_id, {"out": meta["out"] + [odir],
-                                          "seen": meta["seen"] + [sdir]})
-        if new_meta is not None and self.compact_after is not None and max(
-                len(new_meta["out"]), len(new_meta["seen"])
-        ) > self.compact_after:
-            self.compact(spark)
-
-    def compact(self, spark: SparkSession) -> dict:
-        """Fold both delta logs (VersionedStore.compact_logs)."""
-        return self.compact_logs(spark, {"out": self.out_path,
-                                         "seen": self.seen_path},
-                                 self.compact_after)
+        # both land before the one append
+        self.append(spark, batch_id, self.land(
+            {"out": cand, "seen": cand.select(*self.keys)}, batch_id))
 
     def writer(self):
         return self.apply_batch
@@ -170,18 +147,21 @@ FROM w WHERE rn = 1
 
 class _IndexSinkBase(VersionedStore):
     """Shared layout of the two streaming near-dup index sinks
-    (vector / MinHash-LSH): four append-only delta logs — pair output,
-    member log, rep log, band log — committed TOGETHER with the last
-    applied batch id by one VersionedStore commit (crash ⇒ orphan dirs
-    invisible, retry overwrites; redelivered batch id ⇒ no-op).
-    ``compact_after=N`` folds the logs through the store's one
-    compaction (VersionedStore.compact_logs: a minor pass over the
-    per-batch tail, a major pass once the snapshots outnumber
-    min(MAJOR_AFTER, N)) whenever a log exceeds N entries, so each
-    log keeps <= N + 1 entries; appends are disjoint from all
-    committed state by construction, so every fold is a pure bag
-    union, and the folded dirs are TOMBSTONED and reclaimed by the
-    store's vacuum() as a separate restartable step."""
+    (vector / MinHash-LSH): four append-only delta logs of the sink's
+    VersionedStore — pair output ``out`` under ``out_path``, and the
+    member, rep and band logs under ``index_path``. Per batch the
+    store lands each log's ``b<batch_id>`` dir (two ``land`` calls:
+    the band delta is derived from the WRITTEN reps delta) and one
+    ``append`` commits all four with the last applied batch id (crash
+    ⇒ orphan dirs invisible, retry overwrites; redelivered batch id ⇒
+    no-op). With ``compact_after=N`` that ``append`` folds the logs
+    (VersionedStore.compact_logs: a minor pass over the per-batch
+    tail, a major pass once the snapshots outnumber min(MAJOR_AFTER,
+    N)) whenever a log exceeds N entries, so each log keeps <= N + 1
+    entries; appends are disjoint from all committed state by
+    construction, so every fold is a pure bag union, and the folded
+    dirs are TOMBSTONED and reclaimed by the store's vacuum() as a
+    separate restartable step."""
 
     _MANIFEST = "_index_manifest.json"
     STORES = ("out", "members", "reps", "bands")
@@ -200,12 +180,11 @@ class _IndexSinkBase(VersionedStore):
 
     def __init__(self, out_path: str, index_path: str,
                  compact_after: int | None = None):
-        super().__init__(os.path.join(out_path, self._MANIFEST),
-                         {**{st: [] for st in self.STORES},
-                          "last_batch_id": -1})
-        self.out_path = out_path
+        super().__init__(os.path.join(out_path, self._MANIFEST), {},
+                         {s: out_path if s == "out"
+                          else os.path.join(index_path, s)
+                          for s in self.STORES}, compact_after)
         self.index_path = index_path
-        self.compact_after = compact_after
 
     def pairs(self, spark: SparkSession) -> DataFrame | None:
         """The committed verified/candidate-pair output (log union)."""
@@ -214,20 +193,7 @@ class _IndexSinkBase(VersionedStore):
     def band_rows(self, spark: SparkSession) -> DataFrame | None:
         """The committed band log (rep, band_idx, band_key) — one row
         per (rep, band); None while the index is empty."""
-        return self._read_log(spark, self.meta().get("bands", []))
-
-    def compact(self, spark: SparkSession) -> dict:
-        """Fold the four delta logs (VersionedStore.compact_logs)."""
-        return self.compact_logs(
-            spark, {s: self.out_path if s == "out"
-                    else os.path.join(self.index_path, s)
-                    for s in self.STORES}, self.compact_after)
-
-    def _maybe_compact(self, spark: SparkSession, meta: dict) -> None:
-        if self.compact_after is not None and max(
-                len(meta.get(s, [])) for s in self.STORES
-        ) > self.compact_after:
-            self.compact(spark)
+        return self._read_log(spark, self.meta()["bands"])
 
     def writer(self):
         return self.apply_batch
@@ -314,38 +280,17 @@ class VectorIndexSink(_IndexSinkBase):
             reps = batch.select(F.col("id").alias("rep"), "q").limit(0)
         return (mem.select("id", "rep"), reps.select("rep", "q"))
 
-    def _band_log(self, spark: SparkSession, meta: dict) -> tuple:
-        """(committed band rows | None, band dir list) — migrating a
-        pre-round-11 manifest (no "bands" key) by banding the whole
-        committed reps log ONCE into an orphan-until-committed dir;
-        from then on each batch appends only its own new reps' bands.
-
-        The migration dir name is FIXED ("m0", not m{batch_id}): if
-        the commit crashes and the stream redelivers under a different
-        batch id, the retry overwrites the same dir instead of
-        orphaning one per attempt — m{batch_id} could leak a dir that
-        no manifest ever references and vacuum() cannot reclaim
-        (ADVICE r11)."""
-        from postgres_es_cdc_spark.llm.similarity import _emb_rep_bands
-
-        if meta.get("banding", [self.n_bands, self.bits]) != \
-                [self.n_bands, self.bits]:
+    def _band_log(self, spark: SparkSession,
+                  meta: dict) -> DataFrame | None:
+        """The committed band rows (None while the index is empty),
+        refusing an index built with another banding geometry."""
+        if meta["banding"] != [self.n_bands, self.bits]:
             raise ValueError(
                 f"index at {self.index_path} was built with banding "
                 f"{meta['banding']}, sink configured "
                 f"{[self.n_bands, self.bits]} — band keys would not "
                 f"match; rebuild the index or match the geometry")
-        dirs = meta.get("bands")
-        if dirs is None:
-            dirs = []
-            if meta["reps"]:
-                mig = os.path.join(self.index_path, "bands", "m0")
-                (_emb_rep_bands(self._read_log(spark, meta["reps"]),
-                                self.n_bands, self.bits)
-                 .coalesce(self.FOLD_FILES)
-                 .write.mode("overwrite").parquet(mig))
-                dirs = [mig]
-        return self._read_log(spark, dirs), dirs
+        return self._read_log(spark, meta["bands"])
 
     # -- per-batch fold ------------------------------------------------
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -359,8 +304,7 @@ class VectorIndexSink(_IndexSinkBase):
         meta = self.meta()
         bmem = _emb_collapsed(batch.select("id", "q")).localCheckpoint()
         store = self.index(spark, batch, meta)
-        store_bands, band_dirs = self._band_log(spark, meta)
-        pdir = os.path.join(self.out_path, f"b{batch_id}")
+        store_bands = self._band_log(spark, meta)
         # repartition(1), NOT coalesce(1): every delta is micro-batch-
         # sized — without it each dir lands ~32 shuffle-grain files and
         # probe scans pay O(dirs x 32) footers (VersionedStore.
@@ -378,30 +322,18 @@ class VectorIndexSink(_IndexSinkBase):
         new_members, new_reps = merge_embedding_deltas(
             store, bmem, store_bands=store_bands,
             n_bands=self.n_bands, bits=self.bits)
-        mdir = os.path.join(self.index_path, "members", f"b{batch_id}")
-        rdir = os.path.join(self.index_path, "reps", f"b{batch_id}")
-        bdir = os.path.join(self.index_path, "bands", f"b{batch_id}")
         # probe / member-delta / rep-delta writes are independent jobs,
-        # run concurrently; everything lands before the one commit
-        write_all({d: df.repartition(1).write
-                   for df, d in ((probe, pdir), (new_members, mdir),
-                                 (new_reps, rdir))})
+        # run concurrently; everything lands before the one append
+        dirs = self.land({"out": probe.repartition(1),
+                          "members": new_members.repartition(1),
+                          "reps": new_reps.repartition(1)}, batch_id)
         # band the WRITTEN rep rows (no recompute of the merge plan):
         # the band log stays row-for-row derived from the committed
         # reps log, the invariant tests pin
-        (_emb_rep_bands(spark.read.parquet(rdir), self.n_bands, self.bits)
-         .repartition(1).write.mode("overwrite").parquet(bdir))
-        # merge-aware commit: append the new dirs to the lists of the
-        # manifest as the lock reads it, never to this batch's early read
-        new_meta = self.commit(batch_id, lambda cur: {
-            "out": cur["out"] + [pdir],
-            "members": cur["members"] + [mdir],
-            "reps": cur["reps"] + [rdir],
-            "bands": (cur["bands"] if "bands" in cur
-                      else band_dirs) + [bdir],
-            "banding": [self.n_bands, self.bits]})
-        if new_meta is not None:
-            self._maybe_compact(spark, new_meta)
+        dirs |= self.land({"bands": _emb_rep_bands(
+            spark.read.parquet(dirs["reps"]), self.n_bands, self.bits)
+            .repartition(1)}, batch_id)
+        self.append(spark, batch_id, dirs)
 
 
 class SignatureIndexSink(_IndexSinkBase):
@@ -479,34 +411,24 @@ class SignatureIndexSink(_IndexSinkBase):
             batch.select("doc_id", *_SIG_COLS)).localCheckpoint()
         store = self.index(spark, batch, meta)
         store_bands = self._read_log(spark, meta["bands"])
-        pdir = os.path.join(self.out_path, f"b{batch_id}")
         # repartition(1), NOT coalesce(1): micro-batch-sized deltas,
         # one file each without serializing the probe compute into a
         # single task (VersionedStore.FOLD_FILES)
         probe = _probe_signature_store(store, bmem, self.cap,
                                        store_bands=store_bands)
         new_members, new_reps = merge_signature_deltas(store, bmem)
-        mdir = os.path.join(self.index_path, "members", f"b{batch_id}")
-        rdir = os.path.join(self.index_path, "reps", f"b{batch_id}")
-        bdir = os.path.join(self.index_path, "bands", f"b{batch_id}")
         # probe / member-delta / rep-delta writes are independent jobs,
-        # run concurrently; everything lands before the one commit
-        write_all({d: df.repartition(1).write
-                   for df, d in ((probe, pdir), (new_members, mdir),
-                                 (new_reps, rdir))})
+        # run concurrently; everything lands before the one append
+        dirs = self.land({"out": probe.repartition(1),
+                          "members": new_members.repartition(1),
+                          "reps": new_reps.repartition(1)}, batch_id)
         # band the WRITTEN rep rows: the band log stays row-for-row
         # derived from the committed reps log (VectorIndexSink's
         # round-11 invariant, same rationale)
-        (_rep_bands(spark.read.parquet(rdir).select("rep", *_SIG_COLS))
-         .repartition(1).write.mode("overwrite").parquet(bdir))
-        # merge-aware commit, as VectorIndexSink's
-        new_meta = self.commit(batch_id, lambda cur: {
-            "out": cur["out"] + [pdir],
-            "members": cur["members"] + [mdir],
-            "reps": cur["reps"] + [rdir],
-            "bands": cur["bands"] + [bdir]})
-        if new_meta is not None:
-            self._maybe_compact(spark, new_meta)
+        dirs |= self.land({"bands": _rep_bands(
+            spark.read.parquet(dirs["reps"]).select("rep", *_SIG_COLS))
+            .repartition(1)}, batch_id)
+        self.append(spark, batch_id, dirs)
 
 
 class ClusterLabelSink:

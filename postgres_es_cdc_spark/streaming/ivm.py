@@ -591,12 +591,13 @@ class JoinSink(VersionedStore):
     Durability: all three state stores (left, right, view) are
     APPEND-ONLY delta logs of the sink's VersionedStore
     (streaming/store.py) — per batch we write one new parquet dir per
-    store and commit them together with the batch id. A crash before
-    commit leaves orphan dirs the manifest never references (harmless);
-    a checkpoint replay of a committed batch id is a no-op. No state dir
-    is ever rewritten, so per-batch cost is O(|delta| + matched output)
-    in ROWS, independent of history length — the property that makes
-    this an IVM operator rather than a re-join.
+    store and the store's one ``append`` commits them together with the
+    batch id. A crash before commit leaves orphan dirs the manifest
+    never references (harmless); a checkpoint replay of a committed
+    batch id is a no-op. No state dir is ever rewritten, so per-batch
+    cost is O(|delta| + matched output) in ROWS, independent of history
+    length — the property that makes this an IVM operator rather than a
+    re-join.
 
     Compaction: per-batch cost in rows is history-free, but the LOG is
     one dir per store per batch forever — listing + parquet-footer
@@ -604,8 +605,8 @@ class JoinSink(VersionedStore):
     micro-batches is 288 entries/store; measured 1.75 → 2.63 s/probe at
     10× history, SCALE.md round 8). ``compact_after=N`` folds each log
     into ONE snapshot dir per store (bucket layout preserved) whenever
-    any log exceeds N entries — the same call Delta's OPTIMIZE/
-    checkpoint makes. The fold is a pure bag-union rewrite (every store
+    ``append`` leaves a log above N entries — the same call Delta's
+    OPTIMIZE/checkpoint makes. The fold is a pure bag-union rewrite (every store
     is an append-only bag, so snapshot == union of entries, no merge
     semantics to get wrong), committed by one manifest repoint with the
     superseded dirs TOMBSTONED — a crash at any point leaves either the
@@ -647,8 +648,8 @@ class JoinSink(VersionedStore):
         # exceeds this many entries (None = never; consumer may still
         # call compact() explicitly).
         super().__init__(os.path.join(base_dir, "_join_manifest.json"),
-                         {"left": [], "right": [], "view": [],
-                          "last_batch_id": -1})
+                         {}, dict.fromkeys(("left", "right", "view"),
+                                           base_dir), compact_after)
         self.base_dir = base_dir
         self.key_col = key_col
         self.left_cols = list(left_cols or [])
@@ -657,7 +658,6 @@ class JoinSink(VersionedStore):
         self.left_tag = left_tag
         self.right_tag = right_tag
         self.n_buckets = n_buckets
-        self.compact_after = compact_after
 
     def state_view(self, spark) -> DataFrame | None:
         return self._read_log(spark, self.meta()["view"])
@@ -765,16 +765,10 @@ class JoinSink(VersionedStore):
             d_view = d_view.unionByName(old_l.join(dr, k))
 
         write_all({vdir: d_view.write})
-        new_meta = self.commit(batch_id, {
-            "left": meta["left"] + [
-                {"dir": ldir, "buckets": lb} if bkt else ldir],
-            "right": meta["right"] + [
-                {"dir": rdir, "buckets": rb} if bkt else rdir],
-            "view": meta["view"] + [vdir]})
-        if new_meta is not None and self.compact_after is not None and max(
-                len(new_meta[s]) for s in ("left", "right", "view")
-        ) > self.compact_after:
-            self.compact(spark)
+        self.append(spark, batch_id, {
+            "left": {"dir": ldir, "buckets": lb} if bkt else ldir,
+            "right": {"dir": rdir, "buckets": rb} if bkt else rdir,
+            "view": vdir})
 
     def _writer(self, df: DataFrame, bucketed: bool):
         if bucketed:

@@ -20,27 +20,36 @@ Manifest fields that name data come in two shapes:
     every batch's merge is also its compaction). The superseded dir is
     deleted right after the repoint, so a frame occupies at most two
     versions on disk.
-  * a DELTA LOG: a list of dirs its sink appends to, one ``b<batch>``
-    dir per batch, and folds with ``compact_logs``. Every log is an
-    append-only bag, so a fold is a bag-union rewrite. The one rule:
-    a minor pass folds a log's ``b*`` dirs into one ``c<gen>`` dir,
-    and a major pass folds the ``c*`` snapshots into one once there
-    are more than min(MAJOR_AFTER, compact_after) of them, so a log
-    compacted whenever it holds more than ``compact_after`` dirs never
-    holds more than ``compact_after + 1``. Each pass lands its
-    ``c<gen>`` dirs, then one locked commit repoints the logs, bumps
+  * a DELTA LOG: a list of dirs, declared once as ``{log: base dir}``
+    with the store's ``compact_after``. The store owns the whole log
+    life: ``land`` writes a batch's delta to ``<base>/b<batch_id>``,
+    and ``append`` adds the batch's dirs to their logs as the manifest
+    reads UNDER the lock, sets the replay gate in the same repoint and
+    folds (``compact``) once any log holds more than ``compact_after``
+    entries. Every log is an append-only bag, so a fold is a bag-union
+    rewrite. The one rule (``compact_logs``): a minor pass folds a
+    log's ``b*`` dirs into one ``c<gen>`` dir, and a major pass folds
+    the ``c*`` snapshots into one once there are more than
+    min(MAJOR_AFTER, compact_after) of them, so a log compacted
+    whenever it holds more than ``compact_after`` dirs never holds
+    more than ``compact_after + 1``. Each pass lands its ``c<gen>``
+    dirs, then one locked commit repoints the logs, bumps
     ``compact_gen`` and TOMBSTONES the folded dirs; ``vacuum``
     reclaims tombstones as a separate restartable step, so a crash can
-    never orphan live data. A store has ONE writer: the sink's own
-    trigger appends and compacts, nothing folds beside it, so a
-    tombstone is dead the moment it is committed. ``JoinSink``
-    (streaming/ivm.py) keeps its own fold: its entries are
+    never orphan live data. ``JoinSink`` (streaming/ivm.py) appends
+    through ``append`` but keeps its own fold: its entries are
     ``{"dir", "buckets"}`` records written by a partitioned writer,
     and folding that format here would make the store branch on its
     caller.
 
-Sinks inherit from the store (``meta``, ``_commit``, ``_manifest_path``
-and ``_locked_commit`` are their manifest surface) or, for a one-frame
+No sink's trigger calls ``vacuum``: a fold may tombstone the very
+``b<batch_id>`` dir a downstream reader takes the batch's output
+from — the near-dup stream feeds ``<pairs>/b<i>`` to its keeper sink
+and re-reads every one in its oracle — so when to reclaim is the
+caller's decision, made once nothing reads a folded dir by path.
+
+Sinks inherit from the store (``meta``, ``land``, ``commit``,
+``append`` and ``compact`` are their surface) or, for a one-frame
 state, hold a ``SnapshotStore``.
 """
 
@@ -75,12 +84,19 @@ class VersionedStore:
     # range that a pushed-down predicate prunes at the parquet footer.
     FOLD_SORT: dict = {}
 
-    def __init__(self, manifest: str, empty: dict):
-        # empty: the manifest before the first commit; it must hold
-        # "last_batch_id": -1 (the replay gate) and every frame / log
-        # key the sink reads
+    def __init__(self, manifest: str, empty: dict,
+                 logs: dict | None = None,
+                 compact_after: int | None = None):
+        # empty: the manifest's other fields before the first commit
+        # (every frame key the sink reads); the replay gate starts at
+        # -1 and each delta log ({log: base dir}) empty. compact_after:
+        # ``append`` folds once a log holds more entries (None: only an
+        # explicit ``compact`` folds)
         self._manifest = manifest
-        self._empty = empty
+        self.logs = dict(logs or {})
+        self.compact_after = compact_after
+        self._empty = {"last_batch_id": -1,
+                       **{s: [] for s in self.logs}, **empty}
 
     # -- manifest ------------------------------------------------------
     def _manifest_path(self) -> str:
@@ -158,29 +174,53 @@ class VersionedStore:
                             f"{frame}.v{batch_id}")
 
     def land(self, frames: dict, batch_id: int) -> dict:
-        """Write each named frame to its version dir; return
-        {frame: dir} for ``commit``."""
-        dirs = {f: self.version_dir(f, batch_id) for f in frames}
+        """Write each named frame where batch ``batch_id`` lands it — a
+        delta log's delta to ``<base>/b<batch_id>``, any other frame to
+        its version dir — and return {name: dir} for ``commit`` or
+        ``append``."""
+        dirs = {f: os.path.join(self.logs[f], f"b{batch_id}")
+                if f in self.logs else self.version_dir(f, batch_id)
+                for f in frames}
         write_all({dirs[f]: df.write for f, df in frames.items()})
         return dirs
 
-    def commit(self, batch_id: int, fields) -> dict | None:
+    @staticmethod
+    def _gated(cur: dict, batch_id: int, fields: dict) -> dict | None:
+        """``cur`` updated by ``fields`` with ``batch_id`` as its replay
+        gate; None when the batch is already committed."""
+        if batch_id <= cur["last_batch_id"]:
+            return None
+        return {**cur, **fields, "last_batch_id": batch_id}
+
+    def commit(self, batch_id: int, fields: dict) -> dict | None:
         """Repoint the manifest to ``fields`` with ``batch_id`` as its
-        new replay gate, in one locked os.replace. ``fields`` is a dict
-        or a function of the current manifest returning one — the
-        latter appends to delta logs another writer may have compacted
-        since they were read. Returns the new manifest, or None when
-        the batch was already committed."""
-        def mutate(cur: dict) -> dict | None:
-            if batch_id <= cur["last_batch_id"]:
-                return None
-            new = dict(cur)
-            new.update(fields(cur) if callable(fields) else fields)
-            new["last_batch_id"] = batch_id
-            return new
-        return self._locked_commit(mutate)
+        new replay gate, in one locked os.replace. Returns the new
+        manifest, or None when the batch was already committed."""
+        return self._locked_commit(
+            lambda cur: self._gated(cur, batch_id, fields))
 
     # -- delta logs ----------------------------------------------------
+    def append(self, spark: SparkSession, batch_id: int,
+               entries: dict) -> dict | None:
+        """Commit batch ``batch_id``'s delta-log entries ({log: entry},
+        as ``land`` returns them): one locked repoint adds each entry
+        to its log AS THE MANIFEST READS UNDER THE LOCK — never to a
+        list read earlier, which would drop a fold another sink object
+        committed meanwhile and keep listing the dirs it tombstoned —
+        and sets the replay gate. Then ``compact`` runs once any log
+        holds more than ``compact_after`` entries. Returns the appended
+        manifest, or None when the batch was already committed."""
+        new = self._locked_commit(lambda cur: self._gated(
+            cur, batch_id, {s: cur[s] + [e] for s, e in entries.items()}))
+        if new is not None and self.compact_after is not None and max(
+                len(new[s]) for s in self.logs) > self.compact_after:
+            self.compact(spark)
+        return new
+
+    def compact(self, spark: SparkSession) -> dict:
+        """Fold the store's delta logs (``compact_logs``)."""
+        return self.compact_logs(spark, self.logs, self.compact_after)
+
     def compact_logs(self, spark: SparkSession, logs: dict,
                      compact_after: int | None) -> dict:
         """Fold the delta logs ``logs`` ({log name: base dir}) by the
@@ -244,13 +284,12 @@ class VersionedStore:
         separate from the commit that tombstoned them, so a crash can
         never orphan LIVE data (re-running re-deletes already-gone
         dirs, a no-op). Merge-aware: the commit drops exactly the dirs
-        THIS call deleted. Returns the number of dirs reclaimed."""
-        # a tombstone is a dir path; manifests written before the store
-        # had one writer hold [path, tombstoned_unix] pairs
+        THIS call deleted. Returns the number of dirs reclaimed. No
+        sink's trigger calls it (module docstring): the caller vacuums
+        once nothing reads a folded dir by path."""
         dead = self.meta().get("tombstones", [])
-        for t in dead:
-            shutil.rmtree(t if isinstance(t, str) else t[0],
-                          ignore_errors=True)
+        for d in dead:
+            shutil.rmtree(d, ignore_errors=True)
         if dead:
             self._locked_commit(lambda cur: {**cur, "tombstones": [
                 t for t in cur.get("tombstones", []) if t not in dead]})
@@ -267,8 +306,7 @@ class SnapshotStore(VersionedStore):
 
     def __init__(self, path: str):
         self.frame = os.path.basename(path)
-        super().__init__(path + "._state.json",
-                         {self.frame: None, "last_batch_id": -1})
+        super().__init__(path + "._state.json", {self.frame: None})
 
     def state(self, spark: SparkSession) -> DataFrame | None:
         return self.read(spark, self.frame)

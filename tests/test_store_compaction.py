@@ -33,7 +33,7 @@ def _append(spark, st, base, i: int) -> dict:
         dirs[s] = str(base / s / f"b{i}")
         spark.range(10 * i, 10 * i + 10).write.mode("overwrite") \
             .parquet(dirs[s])
-    return st.commit(i, lambda cur: {s: cur[s] + [dirs[s]] for s in LOGS})
+    return st.append(spark, i, dirs)
 
 
 def _ids(spark, st) -> dict:

@@ -138,6 +138,39 @@ def test_dedup_sink_crash_between_writes_and_commit_is_invisible(
     assert sink.survivors(spark).count() == n2
 
 
+def test_dedup_sink_append_keeps_a_rivals_fold(spark, tmp_path):
+    """A second sink object on the same manifest (a restarted trigger
+    overlapping the old one) folds the logs between batch 3's land and
+    its commit. The append must add batch 3's dirs to the logs as the
+    lock reads them — [c1, b3] — not to the list read before the fold:
+    that would drop c1, keep listing the tombstoned b0-b2, and the
+    vacuum would then delete live data."""
+    batches = _batches(spark, 4)
+    want = sorted((r.key, r.seq) for r in _drive(
+        spark, tmp_path / "plain", batches).survivors(spark).collect())
+    sink = _drive(spark, tmp_path / "d", batches[:3])
+    rival = KeyedDedupSink(out_path=str(tmp_path / "d" / "out"),
+                           seen_path=str(tmp_path / "d" / "seen"),
+                           keys=["key"], order_col="seq")
+    real = sink._locked_commit
+
+    def fold_first(mutate):
+        sink._locked_commit = real
+        assert rival.compact(spark)["compacted"]
+        return real(mutate)
+
+    sink._locked_commit = fold_first
+    sink.apply_batch(batches[3], 3)
+    m = sink.meta()
+    assert m["last_batch_id"] == 3
+    for s in ("out", "seen"):
+        assert len(m[s]) == 2, (s, m[s])            # [c1, b3]
+        assert not set(m[s]) & set(m["tombstones"]), (s, m)
+    sink.vacuum()
+    assert sorted((r.key, r.seq)
+                  for r in sink.survivors(spark).collect()) == want
+
+
 def test_dedup_sink_compact_noop_on_single_entry_log(spark, tmp_path):
     sink = _drive(spark, tmp_path / "d", _batches(spark, 1))
     res = sink.compact(spark)

@@ -251,43 +251,6 @@ def test_vector_sink_band_log_matches_reps(spark, sf_dir, tmp_path):
         assert "banding" in str(e)
 
 
-def test_vector_sink_migrates_legacy_manifest(spark, sf_dir, tmp_path):
-    """A pre-round-11 manifest (no band log) must keep working: the
-    first batch after upgrade bands the whole committed reps log once
-    into a migration dir, then appends per batch as usual — pairs stay
-    identical to a sink that had the band log from batch 0."""
-    import json as _json
-
-    batches = _batches(spark, sf_dir, 3)
-    sink = _drive(spark, tmp_path / "v", batches[:2])
-    # strip the round-11 manifest keys, simulating an old index
-    mpath = sink._manifest_path()
-    with open(mpath) as f:
-        m = _json.load(f)
-    m.pop("bands"), m.pop("banding")
-    with open(mpath, "w") as f:
-        _json.dump(m, f)
-    assert sink.band_rows(spark) is None
-    sink.apply_batch(batches[2], 2)
-    want = sorted((r.id1, r.id2, r.cos_sim)
-                  for r in emb_cosine_near_dup_pairs(spark, sf_dir)
-                  .collect())
-    # default (2,32) banding differs from the one-shot (8,8) only in
-    # RECALL guarantees, not on this fixture (identical/near-identical
-    # vectors collide under both), so the fold law still closes
-    assert _pairs(sink, spark) == want
-    # the migration dir + the new batch dir are both committed; the
-    # migration dir name is FIXED (m0) so a crash-retry under another
-    # batch id overwrites it instead of orphaning one per attempt
-    m2 = sink.meta()
-    assert m2["banding"] == [2, 32]
-    assert any(d.endswith("m0") for d in m2["bands"])
-    from postgres_es_cdc_spark.llm.similarity import _emb_rep_bands
-    _, reps = sink.index(spark, _q_corpus(spark, sf_dir))
-    assert (sink.band_rows(spark).count()
-            == _emb_rep_bands(reps, 2, 32).count())
-
-
 def test_vector_sink_probe_reads_band_log_not_reps(spark, tmp_path):
     """Round-11 regression pin: the probe must take its store-side
     candidates from the PERSISTED band log, not from re-banding the
