@@ -44,6 +44,23 @@ def scan_parallel(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
+def driver_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """A small frame the driver decided (a broadcast lookup: a label
+    remap, sampled labels, a vocabulary) as a JVM-local relation.
+    ``createDataFrame`` over a Python list ``parallelize``s it, so every
+    job that reads the frame — each broadcast of it — runs Python
+    worker tasks. Built from a ``pyarrow.Table``, the rows go to the
+    JVM once and the plan scans a ``LocalTableScan``. ``rows`` are
+    tuples in ``schema``'s column order (a DDL string)."""
+    import pyarrow as pa
+    from pyspark.sql.types import _parse_datatype_string
+
+    names = _parse_datatype_string(schema).names
+    cols = zip(*rows) if rows else ([] for _ in names)
+    return spark.createDataFrame(
+        pa.table(dict(zip(names, map(list, cols)))), schema)
+
+
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: table(spark, sf_dir, name) for name in TABLES}
 

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from postgres_es_cdc_spark.catalog import scan_parallel, table
+from postgres_es_cdc_spark.catalog import driver_frame, scan_parallel, table
 from postgres_es_cdc_spark.llm.text import (
     _STOP_SQL, TOKENS_SQL, h32, quality_expr, shingles3, tokens)
 from postgres_es_cdc_spark.memo import register
@@ -1890,11 +1890,17 @@ def _cluster_label_step(labels: DataFrame | None,
     """merge_cluster_labels' kernel, returning the parts a DERIVED
     per-cluster store needs alongside the new label store (round 13 —
     keeper maintenance): (new_labels, remap, new_rows) where ``remap``
-    is the {old label -> new label} dict this batch's union-find
-    decided (empty when no components merged) and ``new_rows`` is the
-    (rep, label) frame of endpoints first seen in this batch, with
-    their FINAL (post-remap) labels. Behavior of the returned store is
-    bit-identical to the pre-refactor merge_cluster_labels."""
+    is the (label, new_label) frame of the {old label -> new label}
+    map this batch's union-find decided (None when no components
+    merged) and ``new_rows`` is the (rep, label) frame of endpoints
+    first seen in this batch, with their FINAL (post-remap) labels.
+
+    The remap frame is built ONCE, from a pyarrow table
+    (catalog.driver_frame): a JVM-local relation, so every broadcast
+    of it — the label store's, the new rows' and the keeper store's —
+    runs no Python worker task and no job of its own, where a frame
+    built from the Python list makes each of them a ``parallelize``
+    job of Python tasks."""
     ends = (delta_pairs.select(F.col("a").alias("rep"))
                        .unionByName(delta_pairs.select(
                            F.col("b").alias("rep")))
@@ -1920,10 +1926,10 @@ def _cluster_label_step(labels: DataFrame | None,
     new_rows = (ends.join(labels.select("rep"), "rep", "left_anti")
                     .select("rep", F.col("rep").alias("label")))
     if not remap:
-        return labels.unionByName(new_rows), remap, new_rows
-    spark = delta_pairs.sparkSession
-    rm = F.broadcast(spark.createDataFrame(
-        list(remap.items()), "label long, new_label long"))
+        return labels.unionByName(new_rows), None, new_rows
+    rm = F.broadcast(driver_frame(delta_pairs.sparkSession,
+                                  list(remap.items()),
+                                  "label long, new_label long"))
 
     def apply(df: DataFrame) -> DataFrame:
         return (df.join(rm, "label", "left")
@@ -1931,7 +1937,7 @@ def _cluster_label_step(labels: DataFrame | None,
                                   .alias("label")))
 
     fresh = apply(new_rows)
-    return apply(labels).unionByName(fresh), remap, fresh
+    return apply(labels).unionByName(fresh), rm, fresh
 
 
 N_QUALITY_BUCKETS = 16   # quality-store hash buckets (ClusterKeeperSink)
@@ -1946,8 +1952,8 @@ def _quality_bucket(col: str):
                   F.lit(N_QUALITY_BUCKETS)).cast("int")
 
 
-def merge_cluster_keepers(keepers: DataFrame | None, remap: dict,
-                          new_rows: DataFrame,
+def merge_cluster_keepers(keepers: DataFrame | None,
+                          remap: DataFrame | None, new_rows: DataFrame,
                           quality: DataFrame) -> DataFrame:
     """Incremental per-cluster KEEPER maintenance (round 13 — the
     dedup DECISION step made continuous): fold one label-fold step's
@@ -1955,13 +1961,15 @@ def merge_cluster_keepers(keepers: DataFrame | None, remap: dict,
     per component, the highest-quality member seen so far (ties break
     to the min id — docs_cluster_representatives' convention).
 
-    Inputs are _cluster_label_step's byproducts: ``remap`` ({old label
-    -> new label} — merged components' keepers max-combine under the
-    surviving label) and ``new_rows`` ((rep, label) endpoints first
-    seen this batch — each seeds a keeper candidate with its quality
-    from the ``quality`` lookup (id, quality); the caller guarantees
-    coverage of new endpoints — an upstream quality score is exactly
-    the kind of column a crawl pipeline lands next to the raw text).
+    Inputs are _cluster_label_step's byproducts: ``remap`` (its one
+    broadcast (label, new_label) frame, None when nothing merged —
+    merged components' keepers max-combine under the surviving label;
+    the frame is JVM-local, so this join adds no job) and ``new_rows``
+    ((rep, label) endpoints first seen this batch — each seeds a
+    keeper candidate with its quality from the ``quality`` lookup
+    (id, quality); the caller guarantees coverage of new endpoints —
+    an upstream quality score is exactly the kind of column a crawl
+    pipeline lands next to the raw text).
 
     Confluent by the same argument as min-label merging: quality is
     static per doc, components only grow or merge, and argmax with a
@@ -1983,9 +1991,16 @@ def merge_cluster_keepers(keepers: DataFrame | None, remap: dict,
         # batch's new endpoints hash into — per-trigger lookup I/O is
         # O(delta), not O(corpus). The _qb equality is implied by
         # rep == id (same hash expression both sides): rows identical.
+        # Spark inserts the pruning only when the filtering side holds
+        # a Filter it deems selective (PartitionPruning's
+        # hasPartitionPruningFilter); an anti join and the inferred
+        # isnotnull filters do not count, so the bucket range check —
+        # true for every row — is that Filter. It rides the seeds
+        # broadcast: no extra job, and no driver collect of buckets.
         q = quality.select(F.col("id").alias("rep"), "quality", "_qb")
         seeds = (F.broadcast(
-                    new_rows.withColumn("_qb", _quality_bucket("rep")))
+                    new_rows.withColumn("_qb", _quality_bucket("rep"))
+                            .filter(F.col("_qb") < N_QUALITY_BUCKETS))
                  .join(q, ["rep", "_qb"])
                  .select("label", F.col("rep").alias("keep_id"),
                          F.col("quality").alias("keep_q")))
@@ -1996,11 +2011,8 @@ def merge_cluster_keepers(keepers: DataFrame | None, remap: dict,
                                  F.col("quality").alias("keep_q")))
     if keepers is None:
         keepers = seeds.limit(0)
-    if remap:
-        spark = new_rows.sparkSession
-        rm = F.broadcast(spark.createDataFrame(
-            list(remap.items()), "label long, new_label long"))
-        keepers = (keepers.join(rm, "label", "left")
+    if remap is not None:
+        keepers = (keepers.join(remap, "label", "left")
                           .select(F.coalesce("new_label", "label")
                                    .alias("label"),
                                   "keep_id", "keep_q"))

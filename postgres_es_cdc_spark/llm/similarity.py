@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from postgres_es_cdc_spark.catalog import table
+from postgres_es_cdc_spark.catalog import driver_frame, table
 from postgres_es_cdc_spark.memo import register
 
 Q_SCALE = 1_000_000  # fixed-point quantization for exact cross-engine math
@@ -2084,8 +2084,9 @@ def emb_label_knn_accuracy(spark: SparkSession, sf_dir: str,
                   quantize(F.col("embedding")).alias("q")))
     srows = s.collect()          # ~KNN_SAMPLE_TARGET rows by construction
     qrows = [(r["vec_id"], list(r["q"])) for r in srows]
-    labels = F.broadcast(spark.createDataFrame(
-        [(r["vec_id"], r["label"]) for r in srows], "vid long, lab int"))
+    labels = F.broadcast(driver_frame(
+        spark, [(r["vec_id"], r["label"]) for r in srows],
+        "vid long, lab int"))
     pairs = (_bq_scores(qrows, s.select(F.col("vec_id").alias("idb"), "q"),
                         "idb", "q", "l2sq")
              .filter(F.col("qid") != F.col("idb"))

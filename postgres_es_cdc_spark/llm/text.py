@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from postgres_es_cdc_spark.catalog import table
+from postgres_es_cdc_spark.catalog import driver_frame, table
 from postgres_es_cdc_spark.memo import register
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -791,9 +791,9 @@ def docs_bpe_encode(spark: SparkSession, sf_dir: str,
     vocab_df = _bpe_vocab(spark, sf_dir)
     vocab = [(r["word"], r["wn"]) for r in vocab_df.collect()]
     _, syms = _bpe_train(vocab, merges)
-    mdf = spark.createDataFrame(
-        [(w, s.count(BPE_DELIM)) for w, s in syms.items()],
-        "word string, n_tok long")
+    mdf = driver_frame(spark,
+                       [(w, s.count(BPE_DELIM)) for w, s in syms.items()],
+                       "word string, n_tok long")
     d = table(spark, sf_dir, "documents")
     words = (d.select("doc_id", "source",
                       F.explode(tokens(F.col("text"))).alias("word"))

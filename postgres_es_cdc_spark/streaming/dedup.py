@@ -72,11 +72,11 @@ class KeyedDedupSink(VersionedStore):
 
     def survivors(self, spark: SparkSession) -> DataFrame | None:
         """The committed survivor output (union of the delta log)."""
-        return self._read_log(spark, self.meta()["out"])
+        return self._read_log(spark, "out", self.meta()["out"])
 
     def seen_keys(self, spark: SparkSession) -> DataFrame | None:
         """The committed seen-key store (union of the delta log)."""
-        return self._read_log(spark, self.meta()["seen"])
+        return self._read_log(spark, "seen", self.meta()["seen"])
 
     # -- per-batch fold ------------------------------------------------
     def _batch_first(self, batch: DataFrame) -> DataFrame:
@@ -89,7 +89,7 @@ class KeyedDedupSink(VersionedStore):
             return                      # committed replay: no-op
         spark = batch.sparkSession
         cand = self._batch_first(batch)
-        seen = self._read_log(spark, self.meta()["seen"])
+        seen = self._read_log(spark, "seen", self.meta()["seen"])
         if seen is not None:
             # key-only anti-join: the store holds keys, not payloads —
             # broadcastable while the store is small, shuffle at scale
@@ -179,21 +179,23 @@ class _IndexSinkBase(VersionedStore):
                        "bands": ["band_idx", "band_key"]}
 
     def __init__(self, out_path: str, index_path: str,
-                 compact_after: int | None = None):
+                 compact_after: int | None, schemas: dict):
+        # schemas: each log's declared read schema ({log: DDL}), so no
+        # read of a log or of a landed delta runs parquet inference
         super().__init__(os.path.join(out_path, self._MANIFEST), {},
                          {s: out_path if s == "out"
                           else os.path.join(index_path, s)
-                          for s in self.STORES}, compact_after)
+                          for s in self.STORES}, compact_after, schemas)
         self.index_path = index_path
 
     def pairs(self, spark: SparkSession) -> DataFrame | None:
         """The committed verified/candidate-pair output (log union)."""
-        return self._read_log(spark, self.meta()["out"])
+        return self._read_log(spark, "out", self.meta()["out"])
 
     def band_rows(self, spark: SparkSession) -> DataFrame | None:
         """The committed band log (rep, band_idx, band_key) — one row
         per (rep, band); None while the index is empty."""
-        return self._read_log(spark, self.meta()["bands"])
+        return self._read_log(spark, "bands", self.meta()["bands"])
 
     def writer(self):
         return self.apply_batch
@@ -261,7 +263,11 @@ class VectorIndexSink(_IndexSinkBase):
         # 1 under any sign banding; the manifest pins geometry, so
         # existing indexes keep working by passing their committed
         # (n_bands, bits) explicitly.
-        super().__init__(out_path, index_path, compact_after)
+        super().__init__(out_path, index_path, compact_after, {
+            "out": "id1 long, id2 long, cos_sim double",
+            "members": "id long, rep long",
+            "reps": "rep long, q array<long>",
+            "bands": "rep long, band_idx int, band_key long"})
         self._empty["banding"] = [n_bands, bits]
         self.threshold = threshold
         self.n_bands = n_bands
@@ -272,8 +278,8 @@ class VectorIndexSink(_IndexSinkBase):
         """The committed (members, reps) index; empty frames derived
         from the batch schema when no state is committed yet."""
         meta = meta or self.meta()
-        mem = self._read_log(spark, meta["members"])
-        reps = self._read_log(spark, meta["reps"])
+        mem = self._read_log(spark, "members", meta["members"])
+        reps = self._read_log(spark, "reps", meta["reps"])
         if mem is None:
             mem = batch.select("id", F.col("id").alias("rep")).limit(0)
         if reps is None:
@@ -290,7 +296,7 @@ class VectorIndexSink(_IndexSinkBase):
                 f"{meta['banding']}, sink configured "
                 f"{[self.n_bands, self.bits]} — band keys would not "
                 f"match; rebuild the index or match the geometry")
-        return self._read_log(spark, meta["bands"])
+        return self._read_log(spark, "bands", meta["bands"])
 
     # -- per-batch fold ------------------------------------------------
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -331,8 +337,8 @@ class VectorIndexSink(_IndexSinkBase):
         # the band log stays row-for-row derived from the committed
         # reps log, the invariant tests pin
         dirs |= self.land({"bands": _emb_rep_bands(
-            spark.read.parquet(dirs["reps"]), self.n_bands, self.bits)
-            .repartition(1)}, batch_id)
+            self._read_log(spark, "reps", [dirs["reps"]]), self.n_bands,
+            self.bits).repartition(1)}, batch_id)
         self.append(spark, batch_id, dirs)
 
 
@@ -376,8 +382,14 @@ class SignatureIndexSink(_IndexSinkBase):
     def __init__(self, out_path: str, index_path: str,
                  compact_after: int | None = None,
                  cap: int | None = None):
-        from postgres_es_cdc_spark.llm.dedup import PAIR_BUCKET_CAP
-        super().__init__(out_path, index_path, compact_after)
+        from postgres_es_cdc_spark.llm.dedup import (PAIR_BUCKET_CAP,
+                                                     _SIG_COLS)
+        super().__init__(out_path, index_path, compact_after, {
+            "out": "doc_a long, doc_b long",
+            "members": "doc_id long, rep long",
+            "reps": ", ".join(["rep long",
+                               *(f"{c} long" for c in _SIG_COLS)]),
+            "bands": "rep long, band_idx int, band_key string"})
         self.cap = PAIR_BUCKET_CAP if cap is None else cap
 
     def index(self, spark: SparkSession, batch: DataFrame,
@@ -386,8 +398,8 @@ class SignatureIndexSink(_IndexSinkBase):
         from the batch schema when no state is committed yet."""
         from postgres_es_cdc_spark.llm.dedup import _SIG_COLS
         meta = meta or self.meta()
-        mem = self._read_log(spark, meta["members"])
-        reps = self._read_log(spark, meta["reps"])
+        mem = self._read_log(spark, "members", meta["members"])
+        reps = self._read_log(spark, "reps", meta["reps"])
         if mem is None:
             mem = batch.select("doc_id",
                                F.col("doc_id").alias("rep")).limit(0)
@@ -410,7 +422,7 @@ class SignatureIndexSink(_IndexSinkBase):
         bmem = _sig_collapsed(
             batch.select("doc_id", *_SIG_COLS)).localCheckpoint()
         store = self.index(spark, batch, meta)
-        store_bands = self._read_log(spark, meta["bands"])
+        store_bands = self._read_log(spark, "bands", meta["bands"])
         # repartition(1), NOT coalesce(1): micro-batch-sized deltas,
         # one file each without serializing the probe compute into a
         # single task (VersionedStore.FOLD_FILES)
@@ -426,7 +438,7 @@ class SignatureIndexSink(_IndexSinkBase):
         # derived from the committed reps log (VectorIndexSink's
         # round-11 invariant, same rationale)
         dirs |= self.land({"bands": _rep_bands(
-            spark.read.parquet(dirs["reps"]).select("rep", *_SIG_COLS))
+            self._read_log(spark, "reps", [dirs["reps"]]))
             .repartition(1)}, batch_id)
         self.append(spark, batch_id, dirs)
 
@@ -531,7 +543,16 @@ class ClusterKeeperSink(VersionedStore):
     ONE repoint (labels.v{n} + keepers.v{n} dirs, batch-id replay
     gate, superseded versions deleted after the repoint) — a crash
     between the two writes leaves the previous pair current, never a
-    labels/keepers version skew.
+    labels/keepers version skew. The quality lookup is landed once as
+    a store partitioned by ``_qb`` (the _quality_bucket hash), and the
+    seeds join reads only the buckets the batch's new endpoints hash
+    into by dynamic partition pruning: the broadcast seeds side prunes
+    the scan's ``_qb`` partitions at run time, with no collect of the
+    batch's buckets on the driver. All three frames are read with the
+    schemas the sink declares (the quality columns typed as the
+    ``quality`` frame's), so no read runs parquet inference; the
+    label remap is one JVM-local frame (_cluster_label_step), so the
+    trigger starts no Python worker.
     Confluence (the driver-gate law, docs_streaming_cluster_keepers):
     any batch partition of the pair set yields the one-shot
     per-component argmax — min-label merge and quality argmax are both
@@ -543,13 +564,20 @@ class ClusterKeeperSink(VersionedStore):
                  a_col: str = "a", b_col: str = "b",
                  max_label_edges: int | None = None):
         from postgres_es_cdc_spark.llm.dedup import MAX_LABEL_EDGES
-        super().__init__(os.path.join(path, self._MANIFEST),
-                         {"labels": None, "keepers": None,
-                          "quality": None, "last_batch_id": -1})
-        self.path = path
         self.quality = quality.select(
             F.col(quality.columns[0]).alias("id"),
             F.col(quality.columns[1]).alias("quality"))
+        qt = {f.name: f.dataType.simpleString()
+              for f in self.quality.schema}
+        super().__init__(
+            os.path.join(path, self._MANIFEST),
+            {"labels": None, "keepers": None, "quality": None},
+            schemas={"labels": "rep long, label long",
+                     "keepers": f"label long, keep_id long, "
+                                f"keep_q {qt['quality']}",
+                     "quality": f"id {qt['id']}, quality "
+                                f"{qt['quality']}, _qb int"})
+        self.path = path
         self.a_col = a_col
         self.b_col = b_col
         self.max_label_edges = (MAX_LABEL_EDGES if max_label_edges
@@ -571,41 +599,20 @@ class ClusterKeeperSink(VersionedStore):
         if self.applied(batch_id):
             return                      # committed replay: no-op
         spark = batch.sparkSession
-        meta = self.meta()
-        # Quality store landed ONCE as a hash-bucketed parquet layout
-        # (r14, guide §3/§6): each trigger's seeds join then reads only
-        # the buckets its new endpoints hash into (dynamic partition
-        # pruning on _qb) — per-trigger lookup I/O O(delta), where the
-        # r13 checkpoint was rescanned O(corpus) per trigger. Landing
-        # is crash-safe: the dir is only trusted once the manifest
-        # commit below records it; a crash before that rewrites it.
-        qdir = meta.get("quality")
+        # the quality store lands once (class docstring); the dir is
+        # only trusted once the manifest commit below records it, so a
+        # crash before that rewrites it
+        qdir = self.meta()["quality"]
         if qdir is None:
             qdir = os.path.join(self.path, "quality_store")
             (self.quality.withColumn("_qb", _quality_bucket("id"))
                  .repartition(N_QUALITY_BUCKETS, F.col("_qb"))
                  .write.mode("overwrite").partitionBy("_qb")
                  .parquet(qdir))
-        qstore = spark.read.parquet(qdir)
+        qstore = self._reader(spark, "quality").parquet(qdir)
         delta = batch.select(
             F.col(self.a_col).cast("long").alias("a"),
             F.col(self.b_col).cast("long").alias("b"))
-        # Literal partition pruning: the batch's endpoint ids hash to a
-        # bucket SUBSET (new endpoints ⊆ delta endpoints, so this can
-        # never drop a row the seeds join needs); one tiny O(delta)
-        # collect buys a quality scan restricted to touched buckets —
-        # PartitionFilters carries the In(_qb, ...) literals, so the
-        # untouched corpus partitions are never listed or read. On the
-        # FIRST batch every endpoint is new (the whole key space is
-        # touched), so the collect is skipped outright.
-        if meta["labels"] is not None:
-            bks = [r[0] for r in
-                   (delta.select(F.col("a").alias("id"))
-                         .unionByName(delta.select(F.col("b").alias("id")))
-                         .select(_quality_bucket("id").alias("b"))
-                         .distinct().collect())]
-            if len(bks) < N_QUALITY_BUCKETS:
-                qstore = qstore.filter(F.col("_qb").isin(bks))
         labels2, remap, new_rows = _cluster_label_step(
             self.labels(spark), delta, self.max_label_edges)
         keepers2 = merge_cluster_keepers(

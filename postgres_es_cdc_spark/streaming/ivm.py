@@ -660,7 +660,7 @@ class JoinSink(VersionedStore):
         self.n_buckets = n_buckets
 
     def state_view(self, spark) -> DataFrame | None:
-        return self._read_log(spark, self.meta()["view"])
+        return self._read_log(spark, "view", self.meta()["view"])
 
     def _bucket(self):
         return F.pmod(F.xxhash64(F.col(self.key_col)),
@@ -800,7 +800,11 @@ class JoinSink(VersionedStore):
         current (orphan snapshot dirs are invisible and overwritten by
         the next attempt); after it, the snapshot is current and the old
         dirs await vacuum(). last_batch_id is carried through, so the
-        replay gate survives compaction."""
+        replay gate survives compaction. The repoint reads the manifest
+        under the lock, as the store's own fold does: an entry another
+        sink object appended after this fold's read stays listed, and
+        the commit aborts (``compacted`` False) when a folded entry is
+        no longer listed."""
         meta = self.meta()
         stores = ("left", "right", "view")
         if max(len(meta[s]) for s in stores) <= 1:
@@ -837,18 +841,27 @@ class JoinSink(VersionedStore):
         # the per-store folds are independent, so they run concurrently;
         # the manifest repoints all of them in the ONE commit below
         write_all(writers)
-        new = {"compact_gen": gen}
-        dead = []
+        heads = {}
         for store, snap in snaps.items():
             if snap is None:
-                new[store] = []
+                heads[store] = []
             else:
                 cdir, bucketed = snap
-                new[store] = [{"dir": cdir, "buckets": self._buckets_of(cdir)}
-                              if bucketed else cdir]
-            dead.extend(self._entry_dir(e) for e in meta[store])
-        new["tombstones"] = meta.get("tombstones", []) + dead
-        self._locked_commit(lambda cur: {**cur, **new})
+                heads[store] = [{"dir": cdir,
+                                 "buckets": self._buckets_of(cdir)}
+                                if bucketed else cdir]
+        dead = [self._entry_dir(e) for s in snaps for e in meta[s]]
+
+        def repoint(cur: dict) -> dict | None:
+            if any(e not in cur[s] for s in snaps for e in meta[s]):
+                return None
+            return {**cur, "compact_gen": gen,
+                    "tombstones": cur.get("tombstones", []) + dead,
+                    **{s: heads[s] + [e for e in cur[s]
+                                      if e not in meta[s]]
+                       for s in snaps}}
+        if self._locked_commit(repoint) is None:
+            return {"compacted": False, "gen": gen}
         return {"compacted": True, "gen": gen, "folded": len(dead)}
 
     @staticmethod

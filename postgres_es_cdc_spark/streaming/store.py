@@ -42,6 +42,16 @@ Manifest fields that name data come in two shapes:
     and folding that format here would make the store branch on its
     caller.
 
+A sink declares the schema of each frame and log it writes once, in
+``__init__`` beside its logs (``schemas``: {name: DDL}). Every read the
+store makes of that name — ``read``, ``_read_log`` (committed lists and
+a just-landed delta alike) and ``_fold`` — passes it to
+``spark.read.schema``, so no read runs parquet's schema-inference job
+(one Spark job per read, a footer read of a file the sink itself
+wrote). Spark's parquet reader widens an int column to a declared
+long, so a delta landed from int ids reads back as the log declares.
+A name without a declaration reads with the inferred schema.
+
 No sink's trigger calls ``vacuum``: a fold may tombstone the very
 ``b<batch_id>`` dir a downstream reader takes the batch's output
 from — the near-dup stream feeds ``<pairs>/b<i>`` to its keeper sink
@@ -86,15 +96,18 @@ class VersionedStore:
 
     def __init__(self, manifest: str, empty: dict,
                  logs: dict | None = None,
-                 compact_after: int | None = None):
+                 compact_after: int | None = None,
+                 schemas: dict | None = None):
         # empty: the manifest's other fields before the first commit
         # (every frame key the sink reads); the replay gate starts at
         # -1 and each delta log ({log: base dir}) empty. compact_after:
         # ``append`` folds once a log holds more entries (None: only an
-        # explicit ``compact`` folds)
+        # explicit ``compact`` folds). schemas: {frame or log: DDL or
+        # StructType}, the declared read schema (module docstring)
         self._manifest = manifest
         self.logs = dict(logs or {})
         self.compact_after = compact_after
+        self.schemas = dict(schemas or {})
         self._empty = {"last_batch_id": -1,
                        **{s: [] for s in self.logs}, **empty}
 
@@ -154,16 +167,23 @@ class VersionedStore:
         return new
 
     # -- frames --------------------------------------------------------
+    def _reader(self, spark: SparkSession, name: str):
+        """A parquet reader for frame or log ``name``: its declared
+        schema when it has one, else parquet's inferred one."""
+        schema = self.schemas.get(name)
+        return spark.read.schema(schema) if schema else spark.read
+
     def read(self, spark: SparkSession, frame: str) -> DataFrame | None:
         """The committed version of a frame; None before its first
         commit."""
         d = self.meta().get(frame)
-        return spark.read.parquet(d) if d else None
+        return self._reader(spark, frame).parquet(d) if d else None
 
-    @staticmethod
-    def _read_log(spark: SparkSession, dirs: list) -> DataFrame | None:
-        """A delta log's committed rows; None while it is empty."""
-        return spark.read.parquet(*dirs) if dirs else None
+    def _read_log(self, spark: SparkSession, log: str,
+                  dirs: list) -> DataFrame | None:
+        """Rows of log ``log``'s dirs ``dirs`` (the committed list, or a
+        landed delta); None while there are none."""
+        return self._reader(spark, log).parquet(*dirs) if dirs else None
 
     def version_dir(self, frame: str, batch_id: int) -> str:
         """Where batch ``batch_id`` lands its version of ``frame``:
@@ -260,7 +280,7 @@ class VersionedStore:
         gen = meta.get("compact_gen", 0) + 1
         cdirs = {s: os.path.join(logs[s], f"c{gen}") for s in folds}
         for s, fold in folds.items():
-            df = spark.read.parquet(*fold)
+            df = self._read_log(spark, s, fold)
             keys = self.FOLD_SORT.get(s)
             df = (df.repartitionByRange(self.FOLD_FILES, *keys)
                     .sortWithinPartitions(*keys) if keys

@@ -11,7 +11,10 @@ incrementally alongside the label store. Pins:
   and a struct-max must agree on;
 - sink durability: replay no-op, crash between the two parquet writes
   and the manifest leaves the previous labels+keepers PAIR current
-  (no version skew), restart continues.
+  (no version skew), restart continues;
+- the trigger's plans: the landed frames scan no Python-built RDD (the
+  label remap is a JVM-local relation), and the quality lookup is
+  pruned to the touched ``_qb`` buckets by dynamic partition pruning.
 """
 
 from __future__ import annotations
@@ -173,3 +176,46 @@ def test_keeper_sink_tails_vector_index_pair_log(spark, sf_dir,
     nodes = sorted({x for p in pairs for x in p})
     assert labels == [(n, remap.get(n, n)) for n in nodes]
     assert _keepers(keep, spark) == _one_shot_keepers(pairs, q)
+
+
+def _landed_on_merge(spark, tmp_path, monkeypatch):
+    """Fold three parquet-backed batches whose last one merges two
+    components (a non-empty remap) and return the {frame: DataFrame}
+    that batch passes to ``land``, unexecuted plans included."""
+    seen = {}
+    land = ClusterKeeperSink.land
+
+    def capture(self, frames, batch_id):
+        seen[batch_id] = frames
+        return land(self, frames, batch_id)
+
+    monkeypatch.setattr(ClusterKeeperSink, "land", capture)
+    q = {1: 0.2, 2: 0.9, 5: 0.7, 6: 0.1}
+    sink = ClusterKeeperSink(str(tmp_path / "k"), _quality_df(spark, q))
+    for i, b in enumerate([[(1, 2)], [(5, 6)], [(2, 6)]]):
+        d = str(tmp_path / f"pairs{i}")
+        _pairs_df(spark, b).write.parquet(d)
+        sink.apply_batch(spark.read.parquet(d), i)
+    assert _keepers(sink, spark) == [(1, 2, 0.9)]
+    return seen[2]
+
+
+def test_keeper_merge_scans_no_python_rdd(spark, tmp_path, monkeypatch):
+    """A merging trigger fed from parquet builds its landed frames from
+    parquet scans and JVM-local relations only: no LogicalRDD (a
+    ``parallelize``d Python list, whose every broadcast runs Python
+    worker tasks)."""
+    frames = _landed_on_merge(spark, tmp_path, monkeypatch)
+    for name in ("labels", "keepers"):
+        plan = frames[name]._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, (name, plan)
+        assert "ExistingRDD" not in plan, (name, plan)
+
+
+def test_keeper_quality_scan_pruned_by_dpp(spark, tmp_path, monkeypatch):
+    """The seeds join prunes the quality store's ``_qb`` partitions at
+    run time from the broadcast new endpoints (dynamic partition
+    pruning), with no driver-side collect of the batch's buckets."""
+    frames = _landed_on_merge(spark, tmp_path, monkeypatch)
+    plan = frames["keepers"]._jdf.queryExecution().executedPlan().toString()
+    assert "dynamicpruningexpression(_qb" in plan, plan

@@ -191,6 +191,45 @@ def test_join_sink_compaction_crash_before_repoint_is_invisible(
         == [1, 1, 1]
 
 
+def test_join_sink_compact_keeps_a_rivals_append(spark, tmp_path):
+    """Two sink objects on one manifest: a batch the rival commits
+    between compact's read and its repoint stays listed, so the view
+    holds every batch's rows (a repoint of lists read before the fold
+    dropped the batch and kept its replay gate). A compaction the rival
+    commits in that window makes this one abort instead."""
+    from postgres_es_cdc_spark.streaming.ivm import JoinSink
+
+    def view(sink):
+        return sorted((r.k, r.name, r.qty)
+                      for r in sink.state_view(spark).collect())
+
+    batches = _join_batches(5)
+    want4 = view(_drive_join(spark, tmp_path / "p4", batches[:4]))
+    want5 = view(_drive_join(spark, tmp_path / "p5", batches))
+    sink = _drive_join(spark, tmp_path / "j", batches[:3])
+    rival = JoinSink(str(tmp_path / "j"), key_col="k", left_cols=["name"],
+                     right_cols=["qty"])
+    real = sink._locked_commit
+
+    def rival_first(step):
+        def locked_commit(mutate):
+            step()
+            return real(mutate)
+        return locked_commit
+
+    sink._locked_commit = rival_first(lambda: rival.apply_batch(
+        _join_rows(spark, batches[3]), 3))
+    assert sink.compact(spark)["compacted"]
+    assert sink.meta()["last_batch_id"] == 3
+    assert view(sink) == want4
+
+    sink._locked_commit = real
+    sink.apply_batch(_join_rows(spark, batches[4]), 4)
+    sink._locked_commit = rival_first(lambda: rival.compact(spark))
+    assert not sink.compact(spark)["compacted"]
+    assert view(sink) == want5
+
+
 def test_join_sink_compact_noop_on_single_entry_log(spark, tmp_path):
     sink = _drive_join(spark, tmp_path / "j", _join_batches(1))
     res = sink.compact(spark)
