@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from postgres_es_cdc_spark.streaming.store import (SnapshotStore,
-                                                   VersionedStore, write_all)
+                                                   VersionedStore)
 
 
 class AggSink:
@@ -590,284 +590,85 @@ class JoinSink(VersionedStore):
 
     Durability: all three state stores (left, right, view) are
     APPEND-ONLY delta logs of the sink's VersionedStore
-    (streaming/store.py) — per batch we write one new parquet dir per
-    store and the store's one ``append`` commits them together with the
-    batch id. A crash before commit leaves orphan dirs the manifest
-    never references (harmless); a checkpoint replay of a committed
+    (streaming/store.py), each under its own base dir
+    (``<base_dir>/left``, ``/right``, ``/view``) — per batch the store
+    lands one ``b<batch_id>`` dir per log and its one ``append``
+    commits them together with the batch id. A crash before commit
+    leaves orphan dirs the manifest never references (harmless, and
+    the retry overwrites them); a checkpoint replay of a committed
     batch id is a no-op. No state dir is ever rewritten, so per-batch
     cost is O(|delta| + matched output) in ROWS, independent of history
     length — the property that makes this an IVM operator rather than a
-    re-join.
+    re-join. State grows with retained keys, not stream length;
+    bounding retention is WatermarkAggSink's gate composed upstream.
 
     Compaction: per-batch cost in rows is history-free, but the LOG is
     one dir per store per batch forever — listing + parquet-footer
-    overhead grows O(entries) with uptime (a day of 5-minute
-    micro-batches is 288 entries/store; measured 1.75 → 2.63 s/probe at
-    10× history, SCALE.md round 8). ``compact_after=N`` folds each log
-    into ONE snapshot dir per store (bucket layout preserved) whenever
-    ``append`` leaves a log above N entries — the same call Delta's
-    OPTIMIZE/checkpoint makes. The fold is a pure bag-union rewrite (every store
-    is an append-only bag, so snapshot == union of entries, no merge
-    semantics to get wrong), committed by one manifest repoint with the
-    superseded dirs TOMBSTONED — a crash at any point leaves either the
-    old log or the complete snapshot current, and the store's vacuum()
-    reclaims tombstones as a separate, restartable step.
-
-    Scale shape: both delta joins key on the join column, and the
-    accumulated sides can be BUCKETED by key hash (``n_buckets`` > 1:
-    partitionBy subdirs per delta-log entry, one file per bucket):
-    each batch reads only the buckets its OWN delta touches — the
-    manifest records every log entry's bucket list, so a key-local
-    probe enumerates exact paths and never lists untouched history,
-    while a scattered probe falls back to whole-entry roots (entries ×
-    buckets scan roots cost more in listing overhead than pruning
-    saves — measured). Bucketing is OPT-IN (default n_buckets=1, the
-    lean layout): the partitionBy repartition is a per-batch shuffle
-    tax that only pays off once entries are large enough that pruned
-    data reads dominate listing — the cluster regime, SCALE.md round 8.
-    Bucket bookkeeping costs zero extra Spark jobs (bucket lists come
-    from the written partition directory names; deltas re-read from
-    their own files). State grows with retained keys, not stream
-    length; bounding retention is WatermarkAggSink's gate composed
-    upstream.
+    overhead grows O(entries) with uptime (measured 1.75 → 2.63 s/probe
+    at 10× history, SCALE.md round 8). ``compact_after=N`` folds the
+    logs through the store's one delta-log fold (``compact``, the
+    minor/major rule of streaming/store.py) whenever ``append`` leaves
+    a log above N entries, so no log holds more than N + 1 dirs after
+    a fold. Every store is an append-only bag, so the fold is a
+    bag-union rewrite that leaves the view unchanged (pinned by the
+    compact-mid-stream == uncompacted equivalence test).
     """
-
-    N_BUCKETS = 16  # the cluster-scale bucketed layout (opt-in)
 
     def __init__(self, base_dir: str, key_col: str,
                  left_cols: list | None = None,
                  right_cols: list | None = None,
                  side_col: str = "side",
                  left_tag: str = "L", right_tag: str = "R",
-                 n_buckets: int = 1,
                  compact_after: int | None = None):
         # left_cols / right_cols: each side's payload columns within the
         # multiplexed batch (disjoint; the other side carries them as
         # null padding). None = no payload beyond the key.
-        # compact_after: fold each delta log to one snapshot dir when it
-        # exceeds this many entries (None = never; consumer may still
-        # call compact() explicitly).
+        # compact_after: fold the delta logs once one exceeds this many
+        # entries (None = never; consumer may still call compact()).
         super().__init__(os.path.join(base_dir, "_join_manifest.json"),
-                         {}, dict.fromkeys(("left", "right", "view"),
-                                           base_dir), compact_after)
-        self.base_dir = base_dir
+                         {}, {s: os.path.join(base_dir, s)
+                              for s in ("left", "right", "view")},
+                         compact_after)
         self.key_col = key_col
         self.left_cols = list(left_cols or [])
         self.right_cols = list(right_cols or [])
         self.side_col = side_col
         self.left_tag = left_tag
         self.right_tag = right_tag
-        self.n_buckets = n_buckets
 
     def state_view(self, spark) -> DataFrame | None:
         return self._read_log(spark, "view", self.meta()["view"])
-
-    def _bucket(self):
-        return F.pmod(F.xxhash64(F.col(self.key_col)),
-                      F.lit(self.n_buckets)).cast("int")
-
-    def _read_side(self, spark, entries: list, buckets: list):
-        """Accumulated-side scan restricted to the given buckets.
-
-        Key-LOCAL probe (the delta touches a minority of buckets): read
-        the exact (entry dir, _b=i) paths from the manifest's bucket
-        lists — no listing or footer reads of untouched history.
-        SCATTERED probe (most buckets touched — hash scatter makes this
-        the shape of any delta with more than a handful of keys): read
-        whole entry dirs instead; enumerating entries x buckets as
-        separate scan roots costs more in listing/footer overhead than
-        the pruning saves (measured 3x slower at 40-entry history), and
-        a whole-dir read is one root per entry. Entries recorded by a
-        pre-bucketing sink (plain strings) are always read whole."""
-        paths = []
-        everything = buckets is None
-        local = (not everything
-                 and 2 * len(buckets) < self.n_buckets)
-        for e in entries:
-            if isinstance(e, str):           # unbucketed entry
-                paths.append(e)
-            elif not e["buckets"]:
-                continue                     # empty delta entry
-            elif everything:
-                paths.append(e["dir"])
-            elif local:
-                paths.extend(os.path.join(e["dir"], f"_b={b}")
-                             for b in buckets if b in e["buckets"])
-            elif any(b in e["buckets"] for b in buckets):
-                paths.append(e["dir"])
-        if not paths:
-            return None
-        # recursiveFileLookup skips partition discovery: the whole-dir
-        # fallback passes multiple partitioned roots, which discovery
-        # would reject (CONFLICTING_DIRECTORY_STRUCTURES), and the _b
-        # column lives only in directory names, never in data files.
-        return (spark.read.option("recursiveFileLookup", "true")
-                     .parquet(*paths))
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         if self.applied(batch_id):
             return                      # committed replay: no-op
         spark = batch.sparkSession
         meta = self.meta()
-        bkt = self.n_buckets > 1
         side = F.col(self.side_col)
-        d_left = batch.filter(side == self.left_tag).select(
-            self.key_col, *self.left_cols)
-        d_right = batch.filter(side == self.right_tag).select(
-            self.key_col, *self.right_cols)
-        if bkt:
-            d_left = d_left.withColumn("_b", self._bucket())
-            d_right = d_right.withColumn("_b", self._bucket())
-
-        # Land the delta logs FIRST, then derive each entry's bucket
-        # list from the partition directory names and re-read the
-        # deltas from their own files — zero extra Spark jobs for the
-        # bookkeeping (no collects, no checkpoints). The two delta
-        # writes are independent jobs, so write_all runs them
-        # concurrently; both dirs land before the one commit below. On
-        # a remote FS the listdir becomes one FileSystem.listStatus.
-        ldir, rdir, vdir = (os.path.join(self.base_dir, f"{s}.b{batch_id}")
-                            for s in ("left", "right", "view"))
-        write_all({ldir: self._writer(d_left, bkt),
-                   rdir: self._writer(d_right, bkt)})
-
-        # The delta-join legs re-read the just-written delta FILES
-        # (both layouts): the view write's plan then scans two tiny
-        # parquet dirs instead of re-computing each delta from the base
-        # tables — one whole base-table scan per side per trigger
-        # removed (guide §2.3, shuffle/scan fewer bytes). Same rows by
-        # construction (the files are exactly the deltas).
-        if bkt:
-            lb, rb = self._buckets_of(ldir), self._buckets_of(rdir)
-            dl = (spark.read.option("recursiveFileLookup", "true")
-                       .parquet(ldir) if lb
-                  else d_left.drop("_b"))
-            dr = (spark.read.option("recursiveFileLookup", "true")
-                       .parquet(rdir) if rb
-                  else d_right.drop("_b"))
-        else:
-            lf = [os.path.join(ldir, f) for f in os.listdir(ldir)
-                  if f.endswith(".parquet")]
-            rf = [os.path.join(rdir, f) for f in os.listdir(rdir)
-                  if f.endswith(".parquet")]
-            dl = spark.read.parquet(*lf) if lf else d_left
-            dr = spark.read.parquet(*rf) if rf else d_right
-
-        # Each delta probes only the OTHER side's buckets it can match
-        # (unbucketed entries read whole — _read_side handles both).
-        old_l = self._read_side(spark, meta["left"], rb if bkt else None)
-        old_r = self._read_side(spark, meta["right"], lb if bkt else None)
+        # Land the two deltas first (one land, so the independent
+        # writes run concurrently), then re-read them from their own
+        # files: the view write's plan scans two tiny parquet dirs
+        # instead of re-computing each delta from the base tables. A
+        # side with no rows still reads back: Spark writes partition
+        # 0's file even when it is empty, and the file carries the
+        # schema.
+        dirs = self.land({
+            "left": batch.filter(side == self.left_tag).select(
+                self.key_col, *self.left_cols),
+            "right": batch.filter(side == self.right_tag).select(
+                self.key_col, *self.right_cols)}, batch_id)
+        dl, dr = (self._read_log(spark, s, [dirs[s]])
+                  for s in ("left", "right"))
+        old_l = self._read_log(spark, "left", meta["left"])
+        old_r = self._read_log(spark, "right", meta["right"])
         k = self.key_col
         d_view = dl.join(dr, k)
         if old_r is not None:
             d_view = d_view.unionByName(dl.join(old_r, k))
         if old_l is not None:
             d_view = d_view.unionByName(old_l.join(dr, k))
-
-        write_all({vdir: d_view.write})
-        self.append(spark, batch_id, {
-            "left": {"dir": ldir, "buckets": lb} if bkt else ldir,
-            "right": {"dir": rdir, "buckets": rb} if bkt else rdir,
-            "view": vdir})
-
-    def _writer(self, df: DataFrame, bucketed: bool):
-        if bucketed:
-            # repartition BY _b first: otherwise every write task
-            # splits its rows across all buckets and an entry lands
-            # tasks x buckets small files (file-count overhead the
-            # whole-history probe pays forever); this way each bucket
-            # is exactly one file per entry.
-            return (df.repartition(self.n_buckets, F.col("_b"))
-                      .write.partitionBy("_b"))
-        return df.write
-
-    @staticmethod
-    def _entry_dir(e) -> str:
-        return e if isinstance(e, str) else e["dir"]
-
-    def compact(self, spark) -> dict:
-        """Fold each delta log into ONE snapshot entry (class docstring,
-        Compaction). Every store is an append-only BAG — the snapshot is
-        exactly the bag union of its entries, so the fold is a rewrite,
-        not a merge, and the maintained view is unchanged by
-        construction (pinned by the compact-mid-stream == uncompacted
-        equivalence test).
-
-        Crash safety: snapshot dirs land first under a generation name
-        the manifest doesn't reference; the manifest then repoints all
-        three stores AND tombstones the superseded dirs in one commit.
-        A crash before the repoint leaves the old log
-        current (orphan snapshot dirs are invisible and overwritten by
-        the next attempt); after it, the snapshot is current and the old
-        dirs await vacuum(). last_batch_id is carried through, so the
-        replay gate survives compaction. The repoint reads the manifest
-        under the lock, as the store's own fold does: an entry another
-        sink object appended after this fold's read stays listed, and
-        the commit aborts (``compacted`` False) when a folded entry is
-        no longer listed."""
-        meta = self.meta()
-        stores = ("left", "right", "view")
-        if max(len(meta[s]) for s in stores) <= 1:
-            return {"compacted": False, "entries": {
-                s: len(meta[s]) for s in stores}}
-        gen = meta.get("compact_gen", 0) + 1
-        bkt = self.n_buckets > 1
-        snaps: dict = {}          # store -> (cdir, bucketed) | None
-        writers: dict = {}
-        for store in stores:
-            entries = meta[store]
-            if not entries:
-                continue
-            bucketed = bkt and store != "view"
-            parts = []
-            for e in entries:
-                if isinstance(e, str):
-                    d = spark.read.parquet(e)
-                    if bucketed:      # pre-bucketing entry: assign now
-                        d = d.withColumn("_b", self._bucket())
-                    parts.append(d)
-                elif e["buckets"]:    # empty deltas have no files to read
-                    # one root per read: partition discovery restores _b
-                    parts.append(spark.read.parquet(e["dir"]))
-            if not parts:
-                snaps[store] = None
-                continue
-            snap = parts[0]
-            for p in parts[1:]:
-                snap = snap.unionByName(p)
-            cdir = os.path.join(self.base_dir, f"{store}.c{gen}")
-            snaps[store] = (cdir, bucketed)
-            writers[cdir] = self._writer(snap, bucketed)
-        # the per-store folds are independent, so they run concurrently;
-        # the manifest repoints all of them in the ONE commit below
-        write_all(writers)
-        heads = {}
-        for store, snap in snaps.items():
-            if snap is None:
-                heads[store] = []
-            else:
-                cdir, bucketed = snap
-                heads[store] = [{"dir": cdir,
-                                 "buckets": self._buckets_of(cdir)}
-                                if bucketed else cdir]
-        dead = [self._entry_dir(e) for s in snaps for e in meta[s]]
-
-        def repoint(cur: dict) -> dict | None:
-            if any(e not in cur[s] for s in snaps for e in meta[s]):
-                return None
-            return {**cur, "compact_gen": gen,
-                    "tombstones": cur.get("tombstones", []) + dead,
-                    **{s: heads[s] + [e for e in cur[s]
-                                      if e not in meta[s]]
-                       for s in snaps}}
-        if self._locked_commit(repoint) is None:
-            return {"compacted": False, "gen": gen}
-        return {"compacted": True, "gen": gen, "folded": len(dead)}
-
-    @staticmethod
-    def _buckets_of(d: str) -> list:
-        return sorted(int(f.split("=", 1)[1]) for f in os.listdir(d)
-                      if f.startswith("_b="))
+        self.append(spark, batch_id,
+                    dirs | self.land({"view": d_view}, batch_id))
 
     def writer(self):
         return self.apply_batch
@@ -940,13 +741,14 @@ GROUP BY 1
 
 def ivm_join_view_compacted_rollup(spark, sf_dir: str) -> DataFrame:
     """ivm_join_view_rollup's fold with delta-log COMPACTION firing
-    mid-stream (compact_after=1: the snapshot fold runs after every
-    batch past the first, plus vacuum reclaiming tombstones between
-    batches) — proving on real data that compaction + vacuum preserve
-    the maintained view exactly. The oracle is the SAME one-shot join +
-    GROUP BY: compaction is a bag-union rewrite of append-only stores,
-    so the view is unchanged by construction (JoinSink.compact
-    docstring); this row is the driver-checked witness.
+    mid-stream (compact_after=1: the store's fold runs whenever a log
+    holds more than one entry, plus vacuum reclaiming tombstones
+    between batches) — proving on real data that compaction + vacuum
+    preserve the maintained view exactly. The oracle is the SAME
+    one-shot join + GROUP BY: compaction is a bag-union rewrite of
+    append-only stores, so the view is unchanged by construction
+    (JoinSink docstring, Compaction); this row is the oracle-checked
+    witness.
 
     Scale shape: this is the operational fix for the one unbounded
     resource in the delta-log design — manifest entries (and with them

@@ -32,15 +32,13 @@ Manifest fields that name data come in two shapes:
     the ``c*`` snapshots into one once there are more than
     min(MAJOR_AFTER, compact_after) of them, so a log compacted
     whenever it holds more than ``compact_after`` dirs never holds
-    more than ``compact_after + 1``. Each pass lands its ``c<gen>``
-    dirs, then one locked commit repoints the logs, bumps
+    more than ``compact_after + 1``. Each pass lands its fold in a
+    private dir, then one locked commit picks ``gen`` from the manifest
+    it reads, moves the fold to ``c<gen>``, repoints the logs, bumps
     ``compact_gen`` and TOMBSTONES the folded dirs; ``vacuum``
     reclaims tombstones as a separate restartable step, so a crash can
-    never orphan live data. ``JoinSink`` (streaming/ivm.py) appends
-    through ``append`` but keeps its own fold: its entries are
-    ``{"dir", "buckets"}`` records written by a partitioned writer,
-    and folding that format here would make the store branch on its
-    caller.
+    never orphan live data. Every delta log of the package — the
+    dedup, index and join sinks' alike — folds here and nowhere else.
 
 A sink declares the schema of each frame and log it writes once, in
 ``__init__`` beside its logs (``schemas``: {name: DDL}). Every read the
@@ -70,6 +68,7 @@ import fcntl
 import json
 import os
 import shutil
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -265,39 +264,51 @@ class VersionedStore:
 
     def _fold(self, spark: SparkSession, logs: dict, pick) -> bool:
         """One pass: each log with more than one ``pick``ed dir folds
-        them into ``<base>/c<gen>``, then one locked commit puts the
-        ``c<gen>`` dir where the first folded dir was, tombstones the
-        folded dirs and bumps ``compact_gen``. The commit aborts when
-        the manifest no longer lists a folded dir (another commit
-        folded it). A crash before the commit leaves the manifest as
-        it was, and the retry rewrites the same ``c<gen>`` path.
-        Returns whether the pass committed."""
+        them into a private dir under its base, then one locked commit
+        takes ``gen`` from the manifest it reads, moves each private
+        dir to ``<base>/c<gen>``, puts it where the first folded dir
+        was, tombstones the folded dirs and bumps ``compact_gen``.
+        Taking ``gen`` under the lock means no pass overwrites a
+        committed snapshot and no two commits share a ``c<gen>``: a
+        ``c<gen>`` above the committed ``compact_gen`` is never listed,
+        so the move may replace what a crashed commit left there. The
+        commit aborts when the manifest no longer lists a folded dir
+        (another commit folded it). A private dir that is not moved
+        into place is removed. Returns whether the pass committed."""
         meta = self.meta()
         folds = {s: f for s in logs
                  if len(f := [d for d in meta.get(s, []) if pick(d)]) > 1}
         if not folds:
             return False
-        gen = meta.get("compact_gen", 0) + 1
-        cdirs = {s: os.path.join(logs[s], f"c{gen}") for s in folds}
-        for s, fold in folds.items():
-            df = self._read_log(spark, s, fold)
-            keys = self.FOLD_SORT.get(s)
-            df = (df.repartitionByRange(self.FOLD_FILES, *keys)
-                    .sortWithinPartitions(*keys) if keys
-                  else df.coalesce(self.FOLD_FILES))
-            df.write.mode("overwrite").parquet(cdirs[s])
+        tmp = {s: os.path.join(logs[s], f"_fold-{uuid.uuid4().hex}")
+               for s in folds}
         dead = [d for f in folds.values() for d in f]
 
         def repoint(cur: dict) -> dict | None:
             if any(d not in cur[s] for s, f in folds.items() for d in f):
                 return None
+            gen = cur.get("compact_gen", 0) + 1
             new = {**cur, "compact_gen": gen,
                    "tombstones": cur.get("tombstones", []) + dead}
             for s, fold in folds.items():
-                new[s] = [cdirs[s] if d == fold[0] else d
+                cdir = os.path.join(logs[s], f"c{gen}")
+                shutil.rmtree(cdir, ignore_errors=True)
+                os.rename(tmp[s], cdir)
+                new[s] = [cdir if d == fold[0] else d
                           for d in cur[s] if d == fold[0] or d not in fold]
             return new
-        return self._locked_commit(repoint) is not None
+        try:
+            for s, fold in folds.items():
+                df = self._read_log(spark, s, fold)
+                keys = self.FOLD_SORT.get(s)
+                df = (df.repartitionByRange(self.FOLD_FILES, *keys)
+                        .sortWithinPartitions(*keys) if keys
+                      else df.coalesce(self.FOLD_FILES))
+                df.write.mode("overwrite").parquet(tmp[s])
+            return self._locked_commit(repoint) is not None
+        finally:
+            for d in tmp.values():
+                shutil.rmtree(d, ignore_errors=True)
 
     def vacuum(self) -> int:
         """Delete tombstoned dirs and drop them from the manifest —

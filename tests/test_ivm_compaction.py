@@ -120,41 +120,40 @@ def _join_batches(n=8):
 
 @pytest.mark.slow_soak
 def test_join_sink_compact_mid_stream_equals_uncompacted(spark, tmp_path):
-    """THE equivalence the snapshot fold must preserve: a sink that
+    """THE equivalence the store's fold must preserve: a sink that
     compacts every 2 batches (so compaction fires repeatedly MID-stream,
     with more deltas arriving on top of each snapshot) maintains exactly
-    the view an uncompacted sink maintains — under both the lean and the
-    bucketed state layouts — while its manifest stays bounded."""
+    the view an uncompacted sink maintains, while its manifest stays
+    bounded."""
     batches = _join_batches(8)
     plain = _drive_join(spark, tmp_path / "plain", batches)
     want = sorted((r.k, r.name, r.qty)
                   for r in plain.state_view(spark).collect())
     assert len(want) >= 20  # non-trivial fixture
 
-    for nb, tag in ((1, "lean"), (4, "bucketed")):
-        sink = _drive_join(spark, tmp_path / f"compact_{tag}", batches,
-                           n_buckets=nb, compact_after=2)
-        got = sorted((r.k, r.name, r.qty)
-                     for r in sink.state_view(spark).collect())
-        assert got == want, tag
-        m = sink.meta()
-        assert m.get("compact_gen", 0) >= 2, tag
-        for s in ("left", "right", "view"):
-            assert len(m[s]) <= 3, (tag, s)   # bounded, not O(batches)
-        assert m["last_batch_id"] == len(batches) - 1
-        # tombstones recorded, then reclaimed; live data untouched
-        dead = list(m["tombstones"])
-        assert dead and all(os.path.isdir(d) for d in dead)
-        assert sink.vacuum() == len(dead)
-        assert not any(os.path.isdir(d) for d in dead)
-        assert sink.meta()["tombstones"] == []
-        assert sorted((r.k, r.name, r.qty)
-                      for r in sink.state_view(spark).collect()) == want
-        # and the stream continues correctly on top of the snapshot
-        sink.apply_batch(_join_rows(
-            spark, [(0, "R", None, 999)]), len(batches))
-        assert (0, "n0", 999) in {(r.k, r.name, r.qty)
-                                  for r in sink.state_view(spark).collect()}
+    sink = _drive_join(spark, tmp_path / "compact", batches,
+                       compact_after=2)
+    got = sorted((r.k, r.name, r.qty)
+                 for r in sink.state_view(spark).collect())
+    assert got == want
+    m = sink.meta()
+    assert m.get("compact_gen", 0) >= 2
+    for s in ("left", "right", "view"):
+        assert len(m[s]) <= 3, s          # bounded, not O(batches)
+    assert m["last_batch_id"] == len(batches) - 1
+    # tombstones recorded, then reclaimed; live data untouched
+    dead = list(m["tombstones"])
+    assert dead and all(os.path.isdir(d) for d in dead)
+    assert sink.vacuum() == len(dead)
+    assert not any(os.path.isdir(d) for d in dead)
+    assert sink.meta()["tombstones"] == []
+    assert sorted((r.k, r.name, r.qty)
+                  for r in sink.state_view(spark).collect()) == want
+    # and the stream continues correctly on top of the snapshot
+    sink.apply_batch(_join_rows(
+        spark, [(0, "R", None, 999)]), len(batches))
+    assert (0, "n0", 999) in {(r.k, r.name, r.qty)
+                              for r in sink.state_view(spark).collect()}
 
 
 def test_join_sink_compaction_crash_before_repoint_is_invisible(

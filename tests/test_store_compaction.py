@@ -1,8 +1,9 @@
 """VersionedStore.compact_logs — the one delta-log compaction the
-append-only sinks (KeyedDedupSink, VectorIndexSink, SignatureIndexSink)
-fold through — pinned on plain parquet logs, without a sink: the
-minor/major tiering, the bounded listing, crash and abort behaviour of
-the one commit per pass, and the flock under two writers."""
+append-only sinks (KeyedDedupSink, VectorIndexSink, SignatureIndexSink,
+JoinSink) fold through — pinned on plain parquet logs, without a sink:
+the minor/major tiering, the bounded listing, crash and abort behaviour
+of the one commit per pass, the snapshot name each pass takes under
+that commit's lock, and the flock under two writers."""
 
 from __future__ import annotations
 
@@ -12,7 +13,9 @@ import threading
 
 import pytest
 
-from postgres_es_cdc_spark.streaming.store import MAJOR_AFTER, VersionedStore
+from postgres_es_cdc_spark.streaming.store import (MAJOR_AFTER,
+                                                   VersionedStore,
+                                                   _is_snapshot)
 
 LOGS = ("x", "y")
 
@@ -140,6 +143,68 @@ def test_fold_of_already_folded_dirs_aborts(spark, tmp_path):
         assert m[s] == [logs[s] + "/c1"]
         assert not set(m[s]) & set(m["tombstones"])
     assert _ids(spark, st) == {s: list(range(30)) for s in LOGS}
+
+
+def _rival_before_write(st, step) -> None:
+    """Run ``step`` once, after ``st``'s fold pass has read the
+    manifest and before it writes its fold."""
+    real = st._read_log
+
+    def read_log(*a):
+        st._read_log = real
+        step()
+        return real(*a)
+    st._read_log = read_log
+
+
+def test_fold_never_overwrites_a_rivals_committed_snapshot(spark,
+                                                            tmp_path):
+    """A rival appends and folds between this pass's manifest read and
+    its write: the rival's committed c<gen> keeps the rival's rows (a
+    gen taken from the earlier read made this pass overwrite it), and
+    this pass aborts."""
+    st, logs = _store(tmp_path), _logs(tmp_path)
+    rival = _store(tmp_path)
+    for i in range(3):
+        _append(spark, st, tmp_path, i)
+
+    def rival_step():
+        _append(spark, rival, tmp_path, 3)
+        assert rival.compact_logs(spark, logs, None)["compacted"]
+    _rival_before_write(st, rival_step)
+    assert not st.compact_logs(spark, logs, None)["compacted"]
+    m = st.meta()
+    assert m["compact_gen"] == 1
+    assert {s: m[s] for s in LOGS} == {s: [logs[s] + "/c1"] for s in LOGS}
+    assert _ids(spark, st) == {s: list(range(40)) for s in LOGS}
+    assert _on_disk(tmp_path) == (
+        {d for s in LOGS for d in m[s]} | set(m["tombstones"]))
+
+
+def test_minor_and_rival_major_take_distinct_gens(spark, tmp_path):
+    """A rival's major pass commits between this minor pass's manifest
+    read and its write: both commit, each under its own c<gen>, so the
+    log never lists one snapshot twice and keeps every row (a shared
+    gen made this pass overwrite the rival's snapshot and list it
+    twice)."""
+    st, logs = _store(tmp_path), _logs(tmp_path)
+    rival = _store(tmp_path)
+    for i in range(4):
+        _append(spark, st, tmp_path, i)
+    assert st._fold(spark, logs, lambda d: d.endswith(("b0", "b1")))
+    assert st._fold(spark, logs, lambda d: d.endswith(("b2", "b3")))
+    for i in range(4, 6):
+        _append(spark, st, tmp_path, i)
+    assert st.meta()["x"] == [logs["x"] + f"/{d}"
+                              for d in ("c1", "c2", "b4", "b5")]
+
+    _rival_before_write(st, lambda: rival._fold(spark, logs, _is_snapshot))
+    assert st.compact_logs(spark, logs, MAJOR_AFTER)["compacted"]
+    m = st.meta()
+    assert m["compact_gen"] == 4
+    assert {s: m[s] for s in LOGS} == {
+        s: [logs[s] + "/c3", logs[s] + "/c4"] for s in LOGS}
+    assert _ids(spark, st) == {s: list(range(60)) for s in LOGS}
 
 
 def test_locked_commit_keeps_both_writers_appends(tmp_path):

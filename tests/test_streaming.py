@@ -1045,11 +1045,8 @@ def test_join_sink_matches_oneshot_join_any_batch_order(spark, tmp_path):
     want = sorted([(1, "a", 10), (2, "b", 20), (3, "c", 30),
                    (6, "f", 60), (6, "f", 61)])
     for pi, perm in enumerate(itertools.permutations(range(3))):
-        # odd permutations exercise the opt-in bucketed layout so the
-        # delta-join algebra is pinned under BOTH state formats
         sink = JoinSink(str(tmp_path / f"join{pi}"), key_col="k",
-                        left_cols=["name"], right_cols=["qty"],
-                        n_buckets=4 if pi % 2 else 1)
+                        left_cols=["name"], right_cols=["qty"])
         for i, bi in enumerate(perm):
             sink.apply_batch(_join_batch(spark, batches[bi]), i)
         got = sorted((r.k, r.name, r.qty)
@@ -1078,7 +1075,7 @@ def test_join_sink_replay_and_torn_write(spark, tmp_path):
 
     # Torn write: orphan delta dirs from a crashed batch 1 are invisible
     # because the manifest still lists only batch 0's dirs.
-    orphan = str(tmp_path / "join" / "view.b1")
+    orphan = str(tmp_path / "join" / "view" / "b1")
     os.makedirs(orphan, exist_ok=True)
     with open(os.path.join(orphan, "part-garbage.parquet"), "w") as f:
         f.write("not parquet")
@@ -1104,8 +1101,7 @@ def test_join_sink_state_is_append_only(spark, tmp_path):
     sink.apply_batch(_join_batch(
         spark, [(1, "L", "a", None), (1, "R", None, 10)]), 0)
     def _dirs(m):
-        return [e["dir"] if isinstance(e, dict) else e
-                for e in m["left"] + m["right"] + m["view"]]
+        return m["left"] + m["right"] + m["view"]
 
     m0 = sink.meta()
     stamp = {d: os.stat(d).st_mtime_ns for d in _dirs(m0)}
@@ -1244,43 +1240,3 @@ def test_qsketch_sink_stream_matches_batch_and_replay_noop(spark, tmp_path):
             for r in qsketch_registers(all_rows, "grp", "v").collect()}
     assert got == want
     assert sum(c for (g, _), c in got.items() if g == "a") == 7
-
-
-def test_join_sink_bucketed_probe_reads_only_touched_buckets(spark,
-                                                             tmp_path):
-    """The cluster-scale claim behind the bucketed delta logs: a batch
-    whose delta's key buckets don't intersect an accumulated entry's
-    buckets never reads it. Pinned structurally — manifest entries
-    record their bucket lists, and _read_side returns None for a
-    disjoint probe — and behaviorally with a two-bucket sink where
-    keys 0 and 1 hash to different buckets."""
-    from pyspark.sql import functions as F
-
-    from postgres_es_cdc_spark.streaming.ivm import JoinSink
-
-    sink = JoinSink(str(tmp_path / "join"), key_col="k",
-                    left_cols=["name"], right_cols=["qty"], n_buckets=4)
-    # find two keys in different buckets under xxhash64 % 4
-    probe = spark.createDataFrame([(i,) for i in range(16)], "k long") \
-        .select("k", F.pmod(F.xxhash64("k"), F.lit(4)).alias("b")) \
-        .collect()
-    by_bucket: dict = {}
-    for r in probe:
-        by_bucket.setdefault(r.b, r.k)
-    (b1, k1), (b2, k2) = list(by_bucket.items())[:2]
-
-    sink.apply_batch(_join_batch(spark, [(k1, "L", "a", None)]), 0)
-    m = sink.meta()
-    assert m["left"][-1]["buckets"] == [b1]
-    # delta in bucket b2 only: the probe path set for batch 0's left
-    # entry must be empty
-    assert sink._read_side(spark, m["left"], [b2]) is None
-    assert sink._read_side(spark, m["left"], [b1]).count() == 1
-
-    # and the join is still correct across the bucket boundary
-    sink.apply_batch(_join_batch(spark, [(k1, "R", None, 10),
-                                         (k2, "L", "c", None)]), 1)
-    sink.apply_batch(_join_batch(spark, [(k2, "R", None, 20)]), 2)
-    got = sorted((r.k, r.name, r.qty)
-                 for r in sink.state_view(spark).collect())
-    assert got == sorted([(k1, "a", 10), (k2, "c", 20)])

@@ -4,8 +4,8 @@ IVM docstring claim "per-batch cost is O(|delta| + matches), not
 O(history)". Without compaction the delta log accrues one dir per
 store per batch and listing/footer overhead grows with uptime (the
 round-8 verdict's named scale-killer: 1.75 -> 2.63 s/probe at 10x
-history); with --compact-after N the log folds to one snapshot dir and
-the curve must stay FLAT.
+history); with --compact-after N the store folds the log by its
+minor/major rule (streaming/store.py) and the curve must stay FLAT.
 
 Reported: per-batch seconds (first-10 avg vs last-10 avg — the
 flatness ratio), manifest entry counts at close, final view row count,
@@ -13,7 +13,7 @@ and a correctness echo (maintained view row count == one-shot join row
 count over everything that arrived).
 
 Usage: PYTHONPATH=. python tools/ivm_soak.py [--batches 60]
-         [--rows 10000] [--compact-after 16] [--buckets 1] [--vacuum]
+         [--rows 10000] [--compact-after 16] [--vacuum]
 Prints one JSON line.
 """
 
@@ -36,7 +36,6 @@ def main() -> None:
     ap.add_argument("--batches", type=int, default=60)
     ap.add_argument("--rows", type=int, default=10_000)
     ap.add_argument("--compact-after", type=int, default=None)
-    ap.add_argument("--buckets", type=int, default=1)
     ap.add_argument("--vacuum", action="store_true",
                     help="vacuum tombstones after every batch (the "
                          "operational steady state)")
@@ -97,7 +96,6 @@ def main() -> None:
     try:
         sink = JoinSink(os.path.join(base, "join"), key_col="k",
                         left_cols=["name"], right_cols=["qty"],
-                        n_buckets=args.buckets,
                         compact_after=args.compact_after)
 
         def batch_df(i: int):
@@ -144,7 +142,6 @@ def main() -> None:
             "batches": args.batches,
             "rows_per_batch": args.rows,
             "compact_after": args.compact_after,
-            "n_buckets": args.buckets,
             "vacuum": args.vacuum,
             "first10_avg_s": round(first10, 3),
             "last10_avg_s": round(last10, 3),
