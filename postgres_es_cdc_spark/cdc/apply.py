@@ -12,8 +12,9 @@ applied one HTTP call per event in arrival order (utils.go:92-117).
 Spark-first formulation (batch; the streaming frontend reuses it via
 ``foreachBatch``): ONE aggregation pass — no window, no UDFs, no
 per-event loop, no driver-side state — over ONE input shape, the typed
-change rows of ``envelope.typed_events``. ``apply_changes`` parses the
-JSON envelope into that shape and calls ``apply_changes_typed``, the
+change rows of ``envelope.typed_events``. ``apply_changes`` brings an
+envelope (JSON payload or decoded map) into that shape and calls
+``apply_changes_typed``, the
 one fold; sinks feed their committed state back in the same shape
 (``envelope.state_as_inserts``). Per key:
 
@@ -49,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from postgres_es_cdc_spark.cdc.envelope import (
-    OP_INSERT, OP_UPDATE, typed_events)
+    OP_INSERT, OP_UPDATE, payload_map, typed_events)
 
 
 def latest_events(events: DataFrame, key: str = "id",
@@ -84,7 +85,9 @@ def apply_changes(events: DataFrame, value_schema: StructType,
     """Fold a single table's event stream into its final state.
 
     ``events``: flat envelope rows (offset, operationType, payload[, ...])
-    with a JSON-string payload — the wire format (utils.go:74).
+    whose payload is either the JSON string of the wire format
+    (utils.go:74) or the pgoutput decoder's ``map<string,string>``
+    (``envelope.payload_map`` tells them apart by the column's type).
     Returns one row per surviving key with the columns of ``value_schema``;
     if ``version_col`` is given, adds the max contributing offset per row
     (the row's materialized version — what an incremental sink stores so
@@ -193,8 +196,7 @@ def observed_payload_columns(events: DataFrame) -> list[str]:
     definition appear in new events.
     """
     keys = (events
-            .select(F.explode(F.map_keys(
-                F.from_json("payload", "map<string,string>"))).alias("c"))
+            .select(F.explode(F.map_keys(payload_map(events))).alias("c"))
             .distinct())
     return sorted(r.c for r in keys.collect())
 

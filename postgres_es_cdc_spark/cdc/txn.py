@@ -22,8 +22,6 @@ that torn state permanently. Here transactions are first-class:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -122,7 +120,7 @@ class TxnUpsertSink(UpsertSink):
         spark = batch.sparkSession
         pending_path = self.table_path(self.PENDING)
         events = batch
-        if os.path.exists(pending_path):
+        if pending_path:
             events = events.unionByName(
                 spark.read.schema(batch.schema).parquet(pending_path))
         tagged = tag_committed(events, self.txn_col).localCheckpoint()
@@ -130,7 +128,7 @@ class TxnUpsertSink(UpsertSink):
         frames = {name: self._merge(spark, name,
                                     ready.filter(F.col("tableName") == name),
                                     batch_id)
-                  for name in self.schemas}
+                  for name in self.value_schemas}
         # Downstream forwarding hook (e.g. the ES bulk executor): runs
         # AFTER the state merges land and BEFORE the commit, so a crash
         # in between replays the batch — at-least-once with the keyed

@@ -18,8 +18,9 @@ Reference parity, per operation:
   DELETE  -> `POST /{index}/_delete_by_query` with the same `match`
              (es.go:112-144).
 
-Rendering is JVM-side (`from_json` + `to_json` on nested structs) —
-no Python in the per-event path. Execution is one driver loop per plan
+Rendering is JVM-side (`to_json` of the payload map, parsed from JSON
+only when it arrives as JSON — `envelope.payload_map`) — no Python in
+the per-event path. Execution is one driver loop per plan
 that posts in offset order, so per-key order needs no partitioning
 invariant; `_bulk` amortizes the reference's one blocking round-trip
 per event (its stated throughput bound, SURVEY §6).
@@ -32,17 +33,19 @@ import urllib.request
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from postgres_es_cdc_spark.cdc.envelope import payload_map
+
 PUTALL_SCRIPT = "ctx._source.putAll(params.data)"  # es.go:56
 
 
 def _keyed(events: DataFrame, key: str) -> DataFrame:
-    """INSERT/UPDATE/DELETE rows with the payload parsed (`_p`) and the
-    key extracted (`_k`). Rows whose payload fails to parse or lacks
+    """INSERT/UPDATE/DELETE rows with the payload as a map (`_p`) and
+    the key extracted (`_k`). Rows whose payload fails to parse or lacks
     the key are dropped, mirroring the consumer's skip-and-log
     (utils.go:99-102) — dead_letters() exposes them upstream."""
     return (events
             .filter(F.col("operationType").isin("INSERT", "UPDATE", "DELETE"))
-            .withColumn("_p", F.from_json("payload", "map<string,string>"))
+            .withColumn("_p", payload_map(events))
             .withColumn("_k", F.col("_p")[key])
             .filter(F.col("_k").isNotNull()))
 
@@ -56,8 +59,8 @@ def _putall_script():
 
 
 def es_consumer_requests(events: DataFrame, key: str = "id") -> DataFrame:
-    """Envelope rows (offset, operationType, tableName, payload JSON)
-    -> REST requests (offset, method, path, body), one per event;
+    """Envelope rows (offset, operationType, tableName, payload JSON or
+    map) -> REST requests (offset, method, path, body), one per event;
     unparseable and keyless rows are dropped (`_keyed`)."""
     match_q = F.struct(
         F.struct(F.col("_k").alias(key)).alias("match")).alias("query")

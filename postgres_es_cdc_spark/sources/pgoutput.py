@@ -29,16 +29,19 @@ it reads one sequential stream, producer.go:68,121-122,163-164):
            order: each relation version's offset range, the sorted
            (Begin offset -> xid) list and the xid still open at the end.
   data plane — one Arrow-batched mapInArrow parses every message into
-           the engine's envelope (operationType/tableName/payload JSON +
+           the engine's envelope (operationType/tableName/payload map +
            txn_id). Each row picks its relation version and its txn_id
            by numpy.searchsorted of its offset over the driver's lists.
 
-Semantics parity with the reference's column decode (producer.go:183-195):
-  'n' -> explicit JSON null ("set null"), 'u' (unchanged TOAST) ->
-  key ABSENT from the payload ("unchanged") — landing exactly on the
-  presence-map distinction apply_changes folds with; 't' values stay
-  text, cast later by the declared table schema (producer.go:176-181's
-  text decode; unknown types stay raw strings like its OID fallback).
+The payload is a ``map<string,string>`` of column name -> text value,
+the plain column->value map the reference builds (producer.go:124-159);
+JSON is a transport encoding (utils.go:74) and this path has no
+transport. Semantics parity with the reference's column decode
+(producer.go:183-195): 'n' -> a null item ("set null"), 'u' (unchanged
+TOAST) -> key ABSENT from the map ("unchanged") — landing exactly on
+the presence-map distinction apply_changes folds with; 't' values stay
+text, cast later by the declared table schema (producer.go:176-181's
+text decode; unknown types stay raw strings like its OID fallback).
 
 Transaction ids: protocol v1 carries the xid only on Begin, so a data
 row's txn is the last Begin before it in WAL order. The control plane
@@ -50,7 +53,6 @@ sequential reference the stamped output is checked against.
 
 from __future__ import annotations
 
-import json
 import struct
 from typing import NamedTuple
 
@@ -129,30 +131,6 @@ def encode_truncate(oids: list[int]) -> bytes:
 # ---------------------------------------------------------------------------
 
 
-def _parse_tuple(data: bytes, pos: int) -> tuple[list, int]:
-    """TupleData -> list of str | None | UNCHANGED, new position."""
-    (ncols,) = struct.unpack_from(">H", data, pos)
-    pos += 2
-    vals: list = []
-    for _ in range(ncols):
-        kind = data[pos:pos + 1]
-        pos += 1
-        if kind == b"n":
-            vals.append(None)
-        elif kind == b"u":
-            vals.append(UNCHANGED)
-        elif kind == b"t":
-            (ln,) = struct.unpack_from(">I", data, pos)
-            pos += 4
-            vals.append(data[pos:pos + ln].decode())
-            pos += ln
-        else:  # 'b' binary — not produced in text mode
-            (ln,) = struct.unpack_from(">I", data, pos)
-            pos += 4 + ln
-            vals.append(None)
-    return vals, pos
-
-
 def decode_relation(data: bytes) -> tuple[int, str, list[str]]:
     """'R' message -> (oid, table name, column names)."""
     (oid,) = struct.unpack_from(">I", data, 1)
@@ -190,57 +168,15 @@ def relation_cache(messages: DataFrame, data_col: str = "data") -> dict:
     return cache
 
 
-def _payload_json(cols: list[str], vals: list) -> str:
-    # 'u' (unchanged TOAST) keys stay ABSENT; explicit nulls stay null —
-    # the presence-map contract of apply_changes.
-    return json.dumps({c: v for c, v in zip(cols, vals) if not (isinstance(v, str) and v == UNCHANGED)},
-                      separators=(",", ":"))
-
-
 # --- Vectorized decode internals (guide §4.2: offset-array re-slicing
 # over the Arrow binary buffer instead of per-row Python byte walks).
 # An Arrow binary column is ONE contiguous data buffer plus an offsets
 # array; every fixed-width wire field (tags, oids, u16/u32 lengths) is
 # a vectorized gather, the variable-length TupleData walk is a wave per
 # column index (data-dependent positions advanced as int64 arrays), and
-# the payload JSON is assembled by computing each output byte's source
-# index and doing ONE fancy-gather — no per-row Python objects. Rows
-# whose text values contain JSON-escape-worthy bytes (control chars,
-# quotes, backslashes, non-ASCII — absent from typed wire traffic) fall
-# back to the scalar parser, which is also the byte-semantics reference
-# (golden-wire tests pin both against _parse_tuple/_payload_json).
-
-
-def _esc_tab():
-    """needs-JSON-escape lookup per byte (json.dumps ensure_ascii)."""
-    import numpy as np
-    tab = np.zeros(256, np.uint8)
-    tab[:0x20] = 1
-    tab[0x22] = 1            # '"'
-    tab[0x5C] = 1            # '\\'
-    tab[0x80:] = 1           # non-ASCII -> \uXXXX escapes
-    return tab
-
-
-_ESC_TAB = None
-_KEYBUF_CACHE: dict = {}     # tuple(cols) -> (keybuf bytes, offs, lens)
-
-
-def _key_pieces(cols: tuple):
-    """Per-relation JSON key pieces ',"col":' (comma dropped for a
-    row's first present field by slicing 1 byte off), escaped once with
-    the same encoder json.dumps uses."""
-    import numpy as np
-    from json.encoder import encode_basestring_ascii
-    ent = _KEYBUF_CACHE.get(cols)
-    if ent is None:
-        pieces = [b"," + encode_basestring_ascii(c).encode("ascii") + b":"
-                  for c in cols]
-        lens = np.array([len(p) for p in pieces], np.int64)
-        offs = np.concatenate([[0], np.cumsum(lens)[:-1]]).astype(np.int64)
-        ent = (b"".join(pieces), offs, lens)
-        _KEYBUF_CACHE[cols] = ent
-    return ent
+# the payload maps' values are every text field's byte slice, joined by
+# ONE fancy-gather — no per-row Python objects, and no escaping, so
+# every row decodes in the one vectorized pass.
 
 
 def _be32(buf, pos):
@@ -301,54 +237,6 @@ def _walk_tuple(buf, pos, record: bool):
     return ncols, kind2d, vs2d, vl2d, p
 
 
-def _payload_scalar(data: bytes, cols: list) -> str:
-    """Reference scalar parse of ONE I/U/D message -> payload JSON
-    (identical semantics to the vectorized path; used for rows whose
-    values need JSON escaping, and pinned by the golden-wire tests)."""
-    u32 = struct.Struct(">I").unpack_from
-    u16 = struct.Struct(">H").unpack_from
-    tag = data[0]
-    pos = 5
-    if tag == 85:
-        k = data[5]
-        if k == 75 or k == 79:                  # 'K'/'O': skip old tuple
-            (ncols,) = u16(data, 6)
-            pos = 8
-            for _ in range(ncols):
-                kind = data[pos]
-                pos += 1
-                if kind != 110 and kind != 117:
-                    (ln,) = u32(data, pos)
-                    pos += 4 + ln
-        pos += 1                                # 'N'
-    else:
-        pos += 1                                # 'N' or 'K'/'O'
-    (ncols,) = u16(data, pos)
-    pos += 2
-    ncl = len(cols)
-    d: dict = {}
-    for ci in range(ncols):
-        kind = data[pos]
-        pos += 1
-        if kind == 116:                         # 't' text
-            (ln,) = u32(data, pos)
-            pos += 4
-            if ci < ncl:
-                d[cols[ci]] = data[pos:pos + ln].decode()
-            pos += ln
-        elif kind == 110:                       # 'n' SQL null
-            if ci < ncl:
-                d[cols[ci]] = None
-        elif kind == 117:                       # 'u': key ABSENT
-            pass
-        else:                                   # 'b' binary
-            (ln,) = u32(data, pos)
-            pos += 4 + ln
-            if ci < ncl:
-                d[cols[ci]] = None
-    return json.dumps(d, separators=(",", ":"))
-
-
 def _gather_concat(src, srcs, lens):
     """Concatenate many (start, len) slices of ``src`` into one buffer:
     the gather-index trick — every output byte's source index computed
@@ -369,63 +257,31 @@ def _gather_concat(src, srcs, lens):
     return src[idx], begins, ends
 
 
-def _assemble_json(buf, cols, kind2d, vs2d, vl2d):
-    """Fast-path payload JSON for a relation's rows: pieces are
-    precomputed key fragments, value byte ranges and constants; one
-    gather builds every row's JSON at once. Byte-identical to
-    json.dumps(d, separators=(",", ":")) for ASCII-clean values (rows
-    needing escapes never reach here)."""
+def _payload_map(buf, cols, kind2d, vs2d, vl2d):
+    """A relation's rows -> their payload maps: one entry per field that
+    is neither padding nor 'u' (unchanged TOAST), keyed by the column's
+    name; a 't' value is its byte slice of ``buf``, an 'n' or 'b' field
+    a null item. Fields beyond the declared columns are walked (position
+    advance) but dropped."""
     import numpy as np
     import pyarrow as pa
-    keybuf, koffs, klens = _key_pieces(tuple(cols))
-    ng, maxc = kind2d.shape
-    usec = min(maxc, len(cols))
+    usec = min(kind2d.shape[1], len(cols))
     kind = kind2d[:, :usec]
-    vs2d = vs2d[:, :usec]        # fields beyond the declared columns are
-    vl2d = vl2d[:, :usec]        # walked (position advance) but ignored
     present = (kind != 0) & (kind != 117)
-    is_text = kind == 116
-    const = b'{}"null' + keybuf
-    cnp = np.frombuffer(const, np.uint8)
-    base = np.int64(len(buf))
-    # slots per row: '{', then per field (key, quote, content, quote),
-    # then '}' — zero-length slots are dropped inside _gather_concat.
-    # All slot arrays are filled by BROADCAST np.where into a strided
-    # 3-D view — no per-column boolean fancy writes (measured ~3x the
-    # assembly cost of the whole-array form).
-    nslots = 2 + 4 * usec
-    srcs = np.zeros((ng, nslots), np.int32)
-    lens = np.zeros((ng, nslots), np.int32)
-    srcs[:, 0] = base + 0                      # '{'
-    lens[:, 0] = 1
-    srcs[:, -1] = base + 1                     # '}'
-    lens[:, -1] = 1
-    sv = srcs[:, 1:-1].reshape(ng, usec, 4)
-    lv = lens[:, 1:-1].reshape(ng, usec, 4)
-    tnm = present & ~is_text                   # present nulls ('n'/'b')
-    sv[:, :, 0] = np.where(present, base + 7 + koffs[None, :usec], 0)
-    lv[:, :, 0] = np.where(present, klens[None, :usec], 0)
-    sv[:, :, 1] = np.where(is_text, base + 2, 0)          # '"'
-    lv[:, :, 1] = np.where(is_text, 1, 0)
-    sv[:, :, 2] = np.where(is_text, vs2d,
-                           np.where(tnm, base + 3, 0))    # value | 'null'
-    lv[:, :, 2] = np.where(is_text, vl2d, np.where(tnm, 4, 0))
-    sv[:, :, 3] = sv[:, :, 1]
-    lv[:, :, 3] = lv[:, :, 1]
-    # drop the leading comma of each row's FIRST present field
-    anyp = present.any(axis=1)
-    r = np.flatnonzero(anyp)
-    if r.size:
-        c = 1 + 4 * present[r].argmax(axis=1)
-        srcs[r, c] += 1
-        lens[r, c] -= 1
-    src = np.concatenate([buf, cnp])
-    out, _, _ = _gather_concat(src, srcs, lens)
-    row_lens = lens.sum(axis=1)
-    offsets = np.zeros(ng + 1, np.int32)
-    np.cumsum(row_lens, out=offsets[1:])
-    return pa.StringArray.from_buffers(
-        ng, pa.py_buffer(offsets.tobytes()), pa.py_buffer(out.tobytes()))
+    r, c = np.nonzero(present)                 # entries, row-major
+    text = kind[r, c] == 116
+    lens = np.where(text, vl2d[r, c], 0)
+    data, _, _ = _gather_concat(buf, vs2d[r, c], lens)
+    voffs = np.zeros(r.size + 1, np.int32)
+    np.cumsum(lens, out=voffs[1:])
+    items = pa.Array.from_buffers(pa.utf8(), r.size, [
+        pa.py_buffer(np.packbits(text, bitorder="little")),
+        pa.py_buffer(voffs), pa.py_buffer(data)])
+    items.validate(full=True)        # text values must be UTF-8
+    moffs = np.zeros(len(kind) + 1, np.int32)
+    np.cumsum(present.sum(axis=1), out=moffs[1:])
+    return pa.MapArray.from_arrays(
+        moffs, pa.array(cols[:usec], pa.utf8()).take(c), items)
 
 
 def _decode_batch_arrow(rb, relcache: dict, control=None):
@@ -435,7 +291,6 @@ def _decode_batch_arrow(rb, relcache: dict, control=None):
     current at its offset and gets its transaction's xid; without one,
     every row decodes against ``relcache`` and only Begin rows carry an
     xid."""
-    global _ESC_TAB
     import numpy as np
     import pyarrow as pa
     n = rb.num_rows
@@ -470,7 +325,7 @@ def _decode_batch_arrow(rb, relcache: dict, control=None):
             name_vocab.append(nm)
         return c
 
-    # --- I/U/D: header walk + tuple waves + JSON assembly ---
+    # --- I/U/D: header walk + tuple waves + payload maps ---
     iud = np.flatnonzero(m_iud)
     pay_chunks: list = []
     pos_chunks: list = []
@@ -489,17 +344,6 @@ def _decode_batch_arrow(rb, relcache: dict, control=None):
                 pos[has_old] = endp
         pos = pos + 1                           # 'N' (or 'K'/'O' for D)
         ncols, kind2d, vs2d, vl2d, _ = _walk_tuple(buf, pos, record=True)
-        # rows whose text values need JSON escaping -> scalar fallback
-        if _ESC_TAB is None:
-            _ESC_TAB = _esc_tab()
-        cs = np.zeros(len(buf) + 1, np.int32)
-        np.cumsum(_ESC_TAB[buf], out=cs[1:])
-        tmask = kind2d == 116
-        esc_any = np.zeros(iud.size, bool)
-        if tmask.any():
-            e = np.zeros_like(vs2d)
-            e[tmask] = cs[(vs2d + vl2d)[tmask]] - cs[vs2d[tmask]]
-            esc_any = (e > 0).any(axis=1)
         # one group per (relation version, oid); oids are uint32
         uo, inv = np.unique((ver[iud] << 32) | oid, return_inverse=True)
         for gi, vo in enumerate(uo.tolist()):
@@ -507,17 +351,9 @@ def _decode_batch_arrow(rb, relcache: dict, control=None):
             gcode = code_of(name)
             g = np.flatnonzero(inv == gi)
             name_code_iud[g] = gcode
-            fast = g[~esc_any[g]]
-            if fast.size:
-                pay_chunks.append(_assemble_json(
-                    buf, cols, kind2d[fast], vs2d[fast], vl2d[fast]))
-                pos_chunks.append(fast)
-            slow = g[esc_any[g]]
-            for r in slow.tolist():
-                data = buf[starts[iud[r]]:ends[iud[r]]].tobytes()
-                pay_chunks.append(pa.array([_payload_scalar(data, cols)],
-                                           pa.utf8()))
-                pos_chunks.append(np.array([r], np.int64))
+            pay_chunks.append(_payload_map(buf, cols, kind2d[g], vs2d[g],
+                                           vl2d[g]))
+            pos_chunks.append(g)
 
     # --- B / C / T markers ---
     t_rows = np.flatnonzero(m_t)
@@ -563,7 +399,7 @@ def _decode_batch_arrow(rb, relcache: dict, control=None):
     # scattered through the same null-slot trick
     if iud.size:
         merged = pa.concat_arrays(
-            pay_chunks + [pa.array([None], pa.utf8())])
+            pay_chunks + [pa.nulls(1, pay_chunks[0].type)])
         posall = np.concatenate(pos_chunks)
         invp = np.empty(iud.size, np.int64)
         invp[posall] = np.arange(iud.size, dtype=np.int64)
@@ -571,7 +407,7 @@ def _decode_batch_arrow(rb, relcache: dict, control=None):
         pay_idx[run_start[iud]] = invp
         pay_out = merged.take(pa.array(pay_idx))
     else:
-        pay_out = pa.nulls(total, pa.utf8())
+        pay_out = pa.nulls(total, pa.map_(pa.utf8(), pa.utf8()))
     if control is not None:
         # a row's txn is the last Begin at or before it; rows before the
         # batch's first Begin belong to the carried open one (slot 0)
@@ -606,13 +442,15 @@ def decode_messages(messages: DataFrame, relcache: dict,
                     offset_col: str = "offset",
                     control: WalControl | None = None) -> DataFrame:
     """Binary pgoutput messages -> envelope rows
-    (offset, operationType, tableName, payload, txn_id).
+    (offset, operationType, tableName, payload, txn_id), where
+    ``payload`` is the row's map<string,string> of column name -> text
+    value (module docstring; null on marker rows).
 
     mapInArrow (r14; was mapInPandas with a per-row Python loop):
     format parsing is byte fiddling no built-in expression covers, but
     it IS vectorizable — every fixed-width field is a numpy gather over
-    the Arrow binary buffer and the payload JSON is one fancy-gather
-    assembly (_decode_batch_arrow). The relation cache and ``control``
+    the Arrow binary buffer and the payload maps' values are one
+    fancy-gather of text slices (_decode_batch_arrow, _payload_map). The relation cache and ``control``
     ride the closure (broadcast by task serialization — they are
     O(relations + transactions) small).
 
@@ -622,7 +460,7 @@ def decode_messages(messages: DataFrame, relcache: dict,
     carry their xid (``assign_txn_ids`` fills the rest).
     """
     schema = ("offset long, operationType string, tableName string, "
-              "payload string, txn_id long")
+              "payload map<string,string>, txn_id long")
 
     def parse(batches):
         for rb in batches:

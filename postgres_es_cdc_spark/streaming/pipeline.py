@@ -125,38 +125,38 @@ class UpsertSink(VersionedStore):
 
     def __init__(self, base_dir: str, schemas: dict[str, StructType],
                  key: str = "id", order_col: str = "offset"):
-        super().__init__(os.path.join(base_dir, "_manifest.json"),
-                         {"last_batch_id": -1})
-        self.base_dir = base_dir
-        self.schemas = schemas
+        # the store reads each table with its stored schema: the value
+        # columns plus the version column (a column added since the
+        # state was written reads as null)
+        super().__init__(os.path.join(base_dir, "_manifest.json"), {},
+                         schemas={name: StructType([*schema]).add(
+                             self.VERSION_COL, "long")
+                             for name, schema in schemas.items()})
+        self.value_schemas = schemas
         self.key = key
         self.order_col = order_col
 
-    def table_path(self, name: str) -> str:
-        """The CURRENT committed state directory for a table (resolves
-        the manifest; falls back to the legacy flat path)."""
-        return self.meta().get(name) or os.path.join(self.base_dir, name)
+    def table_path(self, name: str) -> str | None:
+        """The CURRENT committed state directory for a table, as the
+        manifest names it; None before its first commit."""
+        return self.meta().get(name)
 
     def _merge(self, spark: SparkSession, name: str, batch: DataFrame,
                batch_id: int = 0) -> str:
         """Fold ``batch`` into the table's committed state and land the
         result as the table's version dir for ``batch_id``; returns the
         dir, which becomes current at the sink's commit."""
-        schema = self.schemas[name]
-        path = self.table_path(name)
+        schema = self.value_schemas[name]
         # Committed state re-enters the fold as typed full-row INSERTs at
         # each row's version: batch events at higher offsets then
         # override per column/key by exactly the apply_changes rules.
         # DELETEs in the batch drop existing keys; sparse UPDATEs merge
         # onto existing rows; stored values never pass through JSON.
         events = typed_events(batch, schema, self.order_col)
-        if os.path.exists(path):
-            # read with the declared schema: no inference job, and a
-            # column added since the state was written reads as null
-            stored = StructType([*schema]).add(self.VERSION_COL, "long")
+        stored = self.read(spark, name)
+        if stored is not None:
             events = events.unionByName(state_as_inserts(
-                spark.read.schema(stored).parquet(path), schema,
-                self.VERSION_COL, self.order_col))
+                stored, schema, self.VERSION_COL, self.order_col))
         state = apply_changes_typed(events, schema, self.key, self.order_col,
                                     version_col=self.VERSION_COL)
         return self.land({name: state}, batch_id)[name]
@@ -169,7 +169,7 @@ class UpsertSink(VersionedStore):
             name: self._merge(spark, name,
                               batch.filter(F.col("tableName") == name),
                               batch_id)
-            for name in self.schemas})
+            for name in self.value_schemas})
 
     def writer(self) -> Callable[[DataFrame, int], None]:
         return self.apply_batch

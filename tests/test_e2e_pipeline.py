@@ -154,6 +154,43 @@ def test_es_forwarding_sink_replay_is_idempotent(spark, tmp_path):
         shutdown()
 
 
+def test_wal_to_es_special_values_land_verbatim(spark, tmp_path):
+    """Text values holding JSON metacharacters, control bytes and
+    non-ASCII text cross the decode's payload map and the ES render
+    verbatim — through an INSERT's document and an UPDATE's putAll
+    params — into the ES index and the sink's parquet state alike."""
+    from postgres_es_cdc_spark.sinks.es_fake import EsStore, serve_store
+    from postgres_es_cdc_spark.sinks.es_rest import EsForwardingTxnSink
+    from postgres_es_cdc_spark.sources.pgoutput import WalStreamApply
+
+    values = ['say "hi"', "back\\slash", "tab\there", "ctl\x01byte",
+              "café 中😀"]
+    msgs = [encode_relation(OID, "t", COLS), encode_begin(xid=1)]
+    msgs += [encode_insert(OID, [i, v, i]) for i, v in enumerate(values)]
+    msgs += [encode_update(OID, [0, values[-1], UNCHANGED]),
+             encode_commit()]
+    schema = _parse_datatype_string("id long, name string, qty long")
+    store = EsStore()
+    url, shutdown = serve_store(store)
+    try:
+        sink = EsForwardingTxnSink(str(tmp_path / "state"),
+                                   {"t": schema}, es_url=url)
+        WalStreamApply(sink).apply(spark.createDataFrame(
+            [(i, bytearray(m)) for i, m in enumerate(msgs)],
+            "offset long, data binary"), 0)
+    finally:
+        shutdown()
+
+    names = [values[-1], *values[1:]]          # row 0 updated to the last
+    assert store.indices["t"] == {
+        str(i): {"id": str(i), "name": v, "qty": str(i)}
+        for i, v in enumerate(names)}
+    assert not store.item_errors
+    assert sorted((r.id, r.name, r.qty) for r in spark.read.parquet(
+        sink.table_path("t")).collect()) == [
+        (i, v, i) for i, v in enumerate(names)]
+
+
 def test_fake_es_store_semantics():
     """The stand-in's op semantics, pinned independently: overwrite,
     putAll merge, update-on-missing no-op (recorded), delete

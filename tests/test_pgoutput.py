@@ -41,17 +41,15 @@ def test_decode_insert_update_delete_and_toast(spark):
     assert cache == {OID: ("t", COLS)}
     ev = {r.offset: r for r in decode_messages(df, cache).collect()}
     assert ev[1].operationType == "INSERT"
-    assert ev[1].payload == '{"id":"1","name":"a","qty":"5"}'
+    assert ev[1].payload == {"id": "1", "name": "a", "qty": "5"}
     # presence contract: 'u' key absent, explicit null kept
-    assert ev[2].payload == '{"id":"1","qty":null}'
+    assert ev[2].payload == {"id": "1", "qty": None}
     assert ev[3].operationType == "DELETE"
-    assert ev[3].payload == '{"id":"1"}'
+    assert ev[3].payload == {"id": "1"}
 
 
 def test_decode_edge_kinds_and_column_drift(spark):
-    """Edge paths of the r13 inlined decode loop (perf rewrite of the
-    per-row parse — the behaviors below were previously carried by
-    _parse_tuple/_payload_json and must survive the inlining):
+    """Edge paths of the vectorized decode's tuple walk:
     (1) an UPDATE's discarded old tuple containing text/null/TOAST
     values is skipped without affecting the new tuple; (2) a tuple
     WIDER than the relation's column list truncates (zip semantics);
@@ -80,32 +78,29 @@ def test_decode_edge_kinds_and_column_drift(spark):
     ev = sorted(decode_messages(df, cache).collect(),
                 key=lambda r: (r.offset, r.tableName or ""))
     upd = [r for r in ev if r.operationType == "UPDATE"][0]
-    assert upd.payload == '{"id":"2","name":"new","qty":null}'
+    assert upd.payload == {"id": "2", "name": "new", "qty": None}
     wide = [r for r in ev if r.tableName == "w"][0]
-    assert wide.payload == '{"id":"7"}'
+    assert wide.payload == {"id": "7"}
     narrow = [r for r in ev if r.tableName == "n"][0]
-    assert narrow.payload == '{"id":"9"}'
+    assert narrow.payload == {"id": "9"}
     truncs = [r for r in ev if r.operationType == "TRUNCATE"]
     assert sorted(t.tableName for t in truncs) == ["t", "w"]
 
 
-def test_decode_vectorized_escape_fallback_and_order(spark):
-    """Edge paths of the r14 VECTORIZED decode (numpy wave parse + one
-    fancy-gather JSON assembly): (1) values containing JSON-escape-
-    worthy bytes (quotes, backslashes, control chars, non-ASCII) take
-    the scalar fallback and must serialize exactly like json.dumps —
-    interleaved with fast-path rows so the position-merge is exercised;
-    (2) a 'b' binary field skips its bytes and lands as null; (3) rows
-    come back in input order across the mixed fast/slow/marker
-    categories."""
-    import json as _json
+def test_decode_vectorized_special_values_binary_and_order(spark):
+    """Edge paths of the VECTORIZED decode (numpy wave parse + one
+    fancy-gather of the text slices): (1) values holding quotes,
+    backslashes, control chars and non-ASCII text come back verbatim,
+    interleaved with plain rows and markers in one pass; (2) a 'b'
+    binary field skips its bytes and lands as a null item; (3) rows
+    come back in input order across the row kinds."""
     import struct as _s
 
     esc = 'he said "hi"\\\t\x01 café'
     msgs = [
         encode_relation(OID, "t", COLS),
-        encode_insert(OID, [1, esc, 5]),                 # slow path
-        encode_insert(OID, [2, "plain", 6]),             # fast path
+        encode_insert(OID, [1, esc, 5]),
+        encode_insert(OID, [2, "plain", 6]),
         encode_begin(xid=9),
         # binary 'b' field (never produced in text mode, but legal):
         # value bytes skipped, column lands as explicit null
@@ -113,19 +108,17 @@ def test_decode_vectorized_escape_fallback_and_order(spark):
         + _s.pack(">H", 3) + b"t" + _s.pack(">I", 1) + b"3"
         + b"b" + _s.pack(">I", 4) + b"\xde\xad\xbe\xef"
         + b"t" + _s.pack(">I", 1) + b"7",
-        encode_insert(OID, [4, "x€", None]),        # slow (non-ASCII)
+        encode_insert(OID, [4, "x€", None]),             # non-ASCII
         encode_commit(),
     ]
     df = _wal_df(spark, msgs)
     ev = decode_messages(df, relation_cache(df)).collect()
     assert [r.offset for r in ev] == [1, 2, 3, 4, 5, 6]
-    assert ev[0].payload == _json.dumps(
-        {"id": "1", "name": esc, "qty": "5"}, separators=(",", ":"))
-    assert ev[1].payload == '{"id":"2","name":"plain","qty":"6"}'
+    assert ev[0].payload == {"id": "1", "name": esc, "qty": "5"}
+    assert ev[1].payload == {"id": "2", "name": "plain", "qty": "6"}
     assert ev[2].operationType == "BEGIN" and ev[2].txn_id == 9
-    assert ev[3].payload == '{"id":"3","name":null,"qty":"7"}'
-    assert ev[4].payload == _json.dumps(
-        {"id": "4", "name": "x€", "qty": None}, separators=(",", ":"))
+    assert ev[3].payload == {"id": "3", "name": None, "qty": "7"}
+    assert ev[4].payload == {"id": "4", "name": "x€", "qty": None}
     assert ev[5].operationType == "COMMIT"
 
 
@@ -214,8 +207,8 @@ def test_mid_batch_relation_resend_uses_prior_schema(spark, tmp_path):
     decoded = apply._decode_in_offset_order(_wal_df(spark, msgs))
     payloads = {r.offset: r.payload for r in decoded.collect()
                 if r.operationType == "INSERT"}
-    assert payloads[2] == '{"id":"1","name":"a","qty":"5"}'
-    assert payloads[6] == '{"id":"2","name":"b","qty2":"6"}'
+    assert payloads[2] == {"id": "1", "name": "a", "qty": "5"}
+    assert payloads[6] == {"id": "2", "name": "b", "qty2": "6"}
     # and the carried cache ends at the newest version
     assert apply.relcache[OID] == ("t", ["id", "name", "qty2"])
 
@@ -230,8 +223,8 @@ def test_mid_batch_relation_resend_uses_prior_schema(spark, tmp_path):
     ]
     payloads = {r.offset: r.payload
                 for r in decode_wal_stream(_wal_df(spark, msgs)).collect()}
-    assert payloads == {1: '{"id":"1","a":"x","b":"y"}',
-                        3: '{"id":"2","b":"z","a":"w"}'}
+    assert payloads == {1: {"id": "1", "a": "x", "b": "y"},
+                        3: {"id": "2", "b": "z", "a": "w"}}
 
 
 def test_commit_clears_open_xid(spark, tmp_path):

@@ -1,8 +1,10 @@
 """One materialization per WAL batch: every consumer of a batch's
 committed rows reads the sink's one tagged change set, never the lazy
-decode (MapInArrow) or the committed/pending split (Join) again; and the
+decode (MapInArrow) or the committed/pending split (Join) again; the
 decode the sink receives is one pass — no per-span Union, no
-single-partition Window for the transaction ids."""
+single-partition Window for the transaction ids; and it hands over each
+payload as a map, so nothing between the decode and the ES render
+parses JSON."""
 
 from __future__ import annotations
 
@@ -20,7 +22,8 @@ def test_wal_batch_consumers_read_one_materialization(spark, tmp_path,
                                                       monkeypatch):
     from postgres_es_cdc_spark.cdc.txn import TxnUpsertSink
     from postgres_es_cdc_spark.sinks.es_fake import EsStore, serve_store
-    from postgres_es_cdc_spark.sinks.es_rest import EsForwardingTxnSink
+    from postgres_es_cdc_spark.sinks.es_rest import (EsForwardingTxnSink,
+                                                     es_bulk_actions)
     from postgres_es_cdc_spark.sources.pgoutput import WalStreamApply
     from postgres_es_cdc_spark.streaming.pipeline import UpsertSink
 
@@ -38,6 +41,14 @@ def test_wal_batch_consumers_read_one_materialization(spark, tmp_path,
     capture(UpsertSink, "_merge", 3)          # self, spark, name, batch
     capture(EsForwardingTxnSink, "_on_committed", 1)  # self, ready
     capture(TxnUpsertSink, "apply_batch", 1)   # self, batch
+    landed = {}
+    land = TxnUpsertSink.land
+
+    def capture_land(self, frames, batch_id):
+        landed.update(frames)
+        return land(self, frames, batch_id)
+
+    monkeypatch.setattr(TxnUpsertSink, "land", capture_land)
 
     msgs = [encode_relation(OID, "t", COLS),
             encode_begin(xid=1),
@@ -69,5 +80,16 @@ def test_wal_batch_consumers_read_one_materialization(spark, tmp_path,
         else:
             assert "MapInArrow" not in plan, (attr, plan)
             assert "Join" not in plan, (attr, plan)
+
+    def plan(df):             # the JSON form names expression classes
+        return df._jdf.queryExecution().optimizedPlan().toJSON()
+
+    (batch,) = [f for a, f in seen if a == "apply_batch"]
+    assert batch.schema["payload"].dataType.simpleString() == \
+        "map<string,string>"
+    (ready,) = [f for a, f in seen if a == "_on_committed"]
+    assert sorted(landed) == ["_pending_txn", "t", "u"]
+    for name, frame in [*landed.items(), ("es", es_bulk_actions(ready))]:
+        assert "JsonToStructs" not in plan(frame), name
     assert store.indices["t"] == {"1": {"id": "1", "name": "a", "qty": "5"},
                                   "2": {"id": "2", "name": "b", "qty": "6"}}
