@@ -55,25 +55,23 @@ from postgres_es_cdc_spark.cdc.envelope import (
 
 def latest_events(events: DataFrame, key: str = "id",
                   order_col: str = "offset") -> DataFrame:
-    """Per (tableName, key): the single latest event.
+    """Per (tableName, key): the single latest event, its payload in the
+    shape it came in (JSON string or decoded map — ``payload_map`` reads
+    the key from either).
 
     The reference gets this ordering implicitly from single-partition
-    Kafka (utils.go:49); we recover it per-key — and as a max-struct
-    aggregation rather than a row_number window, so the shuffle carries
-    map-side partial maxima instead of every event (same partial-agg
-    shape as apply_changes).
+    Kafka (utils.go:49); we recover it per-key — and as a ``max_by``
+    aggregation on the offset rather than a row_number window, so the
+    shuffle carries map-side partial maxima instead of every event
+    (same partial-agg shape as apply_changes).
     """
-    keyc = F.get_json_object("payload", f"$.{key}").alias("_key")
-    top = F.max(F.struct(
-        F.col(order_col).alias("offset"),
-        F.col("operationType").alias("operationType"),
-        F.col("payload").alias("payload"))).alias("_top")
+    top = F.max_by(F.struct("operationType", "payload"),
+                   order_col).alias("_top")
     return (
-        events.withColumn("_key", keyc)
+        events.withColumn("_key", payload_map(events)[key])
               .groupBy("tableName", "_key")
-              .agg(top)
-              .select("tableName", "_key",
-                      F.col("_top")["offset"].alias("offset"),
+              .agg(F.max(order_col).alias("offset"), top)
+              .select("tableName", "_key", "offset",
                       F.col("_top")["operationType"].alias("operationType"),
                       F.col("_top")["payload"].alias("payload"))
     )

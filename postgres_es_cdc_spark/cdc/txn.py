@@ -10,14 +10,20 @@ that torn state permanently. Here transactions are first-class:
   * events may carry a ``txn_id`` column (null = autocommit, applied
     unconditionally — the reference's only mode);
   * ``COMMIT`` marker events declare a transaction durable;
-  * ``tag_committed`` marks each data event committed or not in one
-    pass; ``committed_events`` keeps the committed ones — the batch
-    building block;
+  * ``tag_committed`` marks each data event committed or not with one
+    left join to the commit ids; ``committed_events`` keeps the
+    committed ones — the batch building block, for inputs whose
+    history (and so whose commit set) is unbounded;
   * ``TxnUpsertSink`` applies a stream at transaction granularity: data
     events of transactions without a COMMIT yet are parked in a pending
     buffer instead of the sink, so after ANY micro-batch boundary (or a
     crash between batches) the materialized state sits exactly at the
     last committed transaction boundary — never inside a transaction.
+    A micro-batch's commit set is bounded by the trigger, so the sink
+    takes it as a driver-side set — from the WAL control plane, which
+    already walked the batch's Begin/Commit messages, or from one
+    collect of an envelope batch's COMMIT markers — and tags rows with
+    an ``IN`` filter instead of a join.
 """
 
 from __future__ import annotations
@@ -46,6 +52,11 @@ def commit_ids(events: DataFrame, txn_col: str = "txn_id") -> DataFrame:
                   .select(txn_col).distinct())
 
 
+def _data(events: DataFrame) -> DataFrame:
+    """The data events: BEGIN/COMMIT markers carry no payload."""
+    return events.filter(~F.col("operationType").isin(*_MARKER_OPS))
+
+
 def tag_committed(events: DataFrame, txn_col: str = "txn_id") -> DataFrame:
     """The data events of ``events`` (BEGIN/COMMIT markers carry no
     payload and are dropped), each with a boolean ``COMMITTED`` column:
@@ -53,9 +64,8 @@ def tag_committed(events: DataFrame, txn_col: str = "txn_id") -> DataFrame:
     whose COMMIT is in ``events``; false for the ones that must wait
     (their COMMIT may arrive in a later micro-batch). One left join to
     the commit ids — a short list, one row per transaction."""
-    data = events.filter(~F.col("operationType").isin(*_MARKER_OPS))
     commits = commit_ids(events, txn_col).withColumn("_commit", F.lit(True))
-    return (data.join(commits, on=txn_col, how="left")
+    return (_data(events).join(commits, on=txn_col, how="left")
                 .select(*events.columns,
                         (F.col(txn_col).isNull()
                          | F.col("_commit").isNotNull()).alias(COMMITTED)))
@@ -90,17 +100,23 @@ def apply_changes_transactional(events: DataFrame,
 class TxnUpsertSink(UpsertSink):
     """UpsertSink that never materializes a partial transaction.
 
-    Per micro-batch: (pending buffer ∪ batch) is tagged committed or
-    pending and materialized ONCE; the committed rows fold into state
-    via the parent's merge and feed ``_on_committed``, the pending ones
-    land as the new buffer — every consumer reads that one
+    Per micro-batch: the data rows of (pending buffer ∪ batch) are
+    tagged committed when autocommit (null txn) or in the batch's
+    commit set, and materialized ONCE; the committed rows fold into
+    state via the parent's merge and feed ``_on_committed``, the
+    pending ones land as the new buffer — every consumer reads that one
     materialization, so the batch is decoded and split once, however
-    many tables and hooks read it. The tables, the buffer, the
-    caller's decode ``context`` and the batch id commit in ONE
-    VersionedStore repoint, so a transaction spanning micro-batches
-    applies atomically in the batch where its COMMIT arrives, and a
-    crash at any point of a batch leaves the sink — buffer and context
-    included — at the prior transaction boundary."""
+    many tables and hooks read it. The commit set is a driver-side set
+    of xids, bounded by the trigger: WalStreamApply hands over the one
+    its control walk collected, and for an envelope batch the sink
+    collects the COMMIT markers' ids itself. The buffer holds only
+    transactions no earlier batch committed, so this batch's set tags
+    it too. The tables, the buffer, the caller's decode ``context`` and
+    the batch id commit in ONE VersionedStore repoint, so a transaction
+    spanning micro-batches applies atomically in the batch where its
+    COMMIT arrives, and a crash at any point of a batch leaves the sink
+    — buffer and context included — at the prior transaction
+    boundary."""
 
     PENDING = "_pending_txn"
 
@@ -111,19 +127,28 @@ class TxnUpsertSink(UpsertSink):
         self.txn_col = txn_col
 
     def apply_batch(self, batch: DataFrame, batch_id: int,
-                    context: dict | None = None) -> None:
+                    context: dict | None = None,
+                    commits: set | None = None) -> None:
         """``context``: what the caller must resume with after a
         restart (WalStreamApply's relation cache and open xid),
-        committed with the batch and read back from ``meta()``."""
+        committed with the batch and read back from ``meta()``.
+        ``commits``: the xids ``batch`` commits; None collects them
+        from its COMMIT markers."""
         if self.applied(batch_id):
             return                      # committed replay: no-op
         spark = batch.sparkSession
+        if commits is None:
+            commits = {r[0] for r in commit_ids(batch, self.txn_col)
+                       .collect()}
         pending_path = self.table_path(self.PENDING)
-        events = batch
+        events = _data(batch)
         if pending_path:
             events = events.unionByName(
                 spark.read.schema(batch.schema).parquet(pending_path))
-        tagged = tag_committed(events, self.txn_col).localCheckpoint()
+        txn = F.col(self.txn_col)
+        tagged = events.withColumn(
+            COMMITTED, txn.isNull() | txn.isin(*sorted(commits - {None}))
+        ).localCheckpoint()
         ready = _committed(tagged, True)
         frames = {name: self._merge(spark, name,
                                     ready.filter(F.col("tableName") == name),

@@ -36,6 +36,15 @@ DEFAULT_CONFS: dict[str, str] = {
     # in local mode the driver IS the executor, so size the cap with
     # the heap. Applied at JVM launch only, like driver.memory.
     "spark.driver.maxResultSize": "8g",
+    # On (PySpark's default), every DataFrame/Column call records its
+    # Python call site for error context over py4j: one F.col costs
+    # ~13 JVM round trips, ~3 with it off (PySpark 4.1). The streaming
+    # sinks build their plans from Column calls every micro-batch: a
+    # 600-message WAL batch through WalStreamApply + TxnUpsertSink made
+    # ~4,500 round trips with it on and ~1,900 off. Errors still name
+    # the failing expression; they lose only the Python line that
+    # built it.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 # local[N] runs the whole engine in the driver JVM; Spark's 1g default

@@ -791,9 +791,12 @@ def decode_with_relation_resends(batch: DataFrame, relcache: dict, *,
     trigger), bounded by the source's maxFilesPerTrigger; in exchange
     the decode is not forced into one partition by a last-Begin window.
 
-    Returns (events, context): context is {"relcache", "last_xid"}, the
-    relation cache and open xid the next batch resumes from (after a
-    COMMIT no transaction is open). Shared by WalStreamApply's
+    Returns (events, context): context is {"relcache", "last_xid",
+    "commits"}, the relation cache and open xid the next batch resumes
+    from (after a COMMIT no transaction is open) and the set of xids
+    the batch commits — each Commit closes the transaction open at it,
+    the last Begin's or, before any Begin, ``last_xid``; a Commit with
+    nothing open adds nothing. Shared by WalStreamApply's
     per-micro-batch path, decode_wal_stream and
     cdc_schema_evolution_fold."""
     control = sorted(
@@ -802,6 +805,7 @@ def decode_with_relation_resends(batch: DataFrame, relcache: dict, *,
              .select("offset", "data").collect())      # 'R', 'B', 'C'
     versions: list = []
     begins: list = []
+    commits: set = set()
     cache, open_xid = dict(relcache), last_xid
     for off, data in control:
         if data[:1] == b"R":
@@ -812,10 +816,12 @@ def decode_with_relation_resends(batch: DataFrame, relcache: dict, *,
             (open_xid,) = struct.unpack_from(">I", data, 17)
             begins.append((off, open_xid))
         else:
+            if open_xid is not None:
+                commits.add(open_xid)
             open_xid = None
     ev = decode_messages(batch, dict(relcache),
                          control=WalControl(versions, begins, last_xid))
-    return ev, {"relcache": cache, "last_xid": open_xid}
+    return ev, {"relcache": cache, "last_xid": open_xid, "commits": commits}
 
 
 class WalStreamApply:
@@ -834,9 +840,13 @@ class WalStreamApply:
     batch — in the sink's one manifest repoint, beside its tables and
     pending buffer — so a checkpoint restart resumes mid-transaction
     decode exactly where the committed state stands, and a batch whose
-    commit was lost replays against the context it first saw. A batch
-    costs one driver collect (its control messages) and one decode
-    pass, which the sink materializes once."""
+    commit was lost replays against the context it first saw.
+
+    A batch costs one driver collect (its control messages) and one
+    decode pass. The collect also yields the xids the batch commits,
+    which ride to the sink as ``commits``: the sink tags the decoded
+    rows from that set, so its one materialization is the only job
+    that runs the decode — no commit-id join reads it a second time."""
 
     def __init__(self, sink):
         self.sink = sink
@@ -852,15 +862,16 @@ class WalStreamApply:
         ev = self._decode_in_offset_order(batch)
         self.sink.apply_batch(ev, batch_id, context={
             "relcache": {str(k): list(v) for k, v in self.relcache.items()},
-            "last_xid": self.last_xid})
+            "last_xid": self.last_xid}, commits=self.commits)
 
     def _decode_in_offset_order(self, batch: DataFrame) -> DataFrame:
         """Decode ``batch`` from the carried context and advance it to
         the batch's end (the relation cache and open xid the next batch
-        starts from)."""
+        starts from, and ``commits``, the xids this batch commits)."""
         ev, ctx = decode_with_relation_resends(batch, self.relcache,
                                                last_xid=self.last_xid)
-        self.relcache, self.last_xid = ctx["relcache"], ctx["last_xid"]
+        self.relcache, self.last_xid, self.commits = (
+            ctx["relcache"], ctx["last_xid"], ctx["commits"])
         return ev
 
     def writer(self):

@@ -254,3 +254,46 @@ def test_schema_evolution_no_new_columns_is_identity(spark):
     b = apply_changes(_events(spark, rows), schema)
     assert a.columns == b.columns
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_latest_events_same_for_decoded_wal_and_json_envelope(spark):
+    """A decoded pgoutput frame (map payloads) and its JSON-envelope
+    twin give the same latest event per key, payload aside from its
+    shape."""
+    import json
+
+    from postgres_es_cdc_spark.sources.pgoutput import (
+        UNCHANGED, decode_wal_stream, encode_delete, encode_insert,
+        encode_relation, encode_update)
+
+    oid, cols = 16384, ["id", "name", "qty"]
+    wal = [encode_relation(oid, "t", cols),
+           encode_insert(oid, [1, "a", 5]),
+           encode_insert(oid, [2, "b", 6]),
+           encode_update(oid, [1, UNCHANGED, None]),
+           encode_insert(oid, [3, "c", 7]),
+           encode_delete(oid, [2, UNCHANGED, UNCHANGED])]
+    decoded = decode_wal_stream(spark.createDataFrame(
+        [(i, bytearray(m)) for i, m in enumerate(wal)],
+        "offset long, data binary"))
+    twin = _events(spark, [
+        (1, "INSERT", '{"id":1,"name":"a","qty":5}'),
+        (2, "INSERT", '{"id":2,"name":"b","qty":6}'),
+        (3, "UPDATE", '{"id":1,"qty":null}'),
+        (4, "INSERT", '{"id":3,"name":"c","qty":7}'),
+        (5, "DELETE", '{"id":2}'),
+    ])
+
+    def latest(ev, as_dict):
+        return sorted((r.tableName, r._key, r.offset, r.operationType,
+                       as_dict(r.payload))
+                      for r in latest_events(ev).collect())
+
+    def json_dict(p):
+        return {k: None if v is None else str(v)
+                for k, v in json.loads(p).items()}
+
+    got = latest(decoded, dict)
+    assert got == latest(twin, json_dict)
+    assert [t[1:4] for t in got] == [("1", 3, "UPDATE"), ("2", 5, "DELETE"),
+                                     ("3", 4, "INSERT")]

@@ -286,15 +286,94 @@ def test_segment_cut_decode_equals_sequential_reference(spark):
         return sorted((tuple(r) for r in ev.collect()), key=lambda t: t[0])
 
     whole = _wal_df(spark, msgs)
-    want = rows(assign_txn_ids(decode_with_relation_resends(whole, {})[0]))
+    ev, ctx = decode_with_relation_resends(whole, {})
+    want = rows(assign_txn_ids(ev))
     assert [t[4] for t in want] == [10] * 4 + [11] * 4 + [12] * 3
+    assert ctx["commits"] == {10, 11}
+    closes = {5: 10, 9: 11}             # Commit offset -> xid it closes
     for cut in range(1, len(msgs)):
         head = whole.filter(F.col("offset") < cut)
         tail = whole.filter(F.col("offset") >= cut)
         ev1, ctx = decode_with_relation_resends(head, {})
-        ev2, _ = decode_with_relation_resends(
+        ev2, ctx2 = decode_with_relation_resends(
             tail, ctx["relcache"], last_xid=ctx["last_xid"])
         assert rows(ev1.unionByName(ev2)) == want, cut
+        # cuts 2-5 leave txn 10's Commit in the tail before any Begin:
+        # it closes the carried xid
+        assert ctx["commits"] == {x for o, x in closes.items()
+                                  if o < cut}, cut
+        assert ctx2["commits"] == {x for o, x in closes.items()
+                                   if o >= cut}, cut
+    # a Commit with no transaction open commits nothing
+    _, ctx = decode_with_relation_resends(_wal_df(spark, [encode_commit()]),
+                                          {})
+    assert ctx["commits"] == set()
+
+
+def test_wal_sink_many_commits_and_a_spanning_txn_match_sequential_model(
+        spark, tmp_path):
+    """Twelve transactions commit in one batch (past the 10-literal
+    point where Spark turns the commit filter's In into an InSet) and
+    one spans into the next batch: after each batch the state holds
+    exactly the committed-only sequential fold, and the pending buffer
+    exactly the open transaction's rows."""
+    from postgres_es_cdc_spark.cdc.txn import TxnUpsertSink
+    from postgres_es_cdc_spark.sources.pgoutput import WalStreamApply
+
+    schema = _parse_datatype_string("id long, name string, qty long")
+    sink = TxnUpsertSink(str(tmp_path / "state"), {"t": schema})
+    apply = WalStreamApply(sink)
+    model: dict = {}
+
+    def fold(ops):
+        for op, vals in ops:
+            if op == "I":
+                model[vals[0]] = list(vals)
+            elif vals[0] in model:
+                model[vals[0]] = [o if v is UNCHANGED else v
+                                  for o, v in zip(model[vals[0]], vals)]
+
+    def txn(xid, ops, commit=True):
+        return ([encode_begin(xid=xid)]
+                + [(encode_insert if op == "I" else encode_update)(OID, v)
+                   for op, v in ops]
+                + ([encode_commit()] if commit else []))
+
+    b0 = [encode_relation(OID, "t", COLS)]
+    for k in range(12):
+        ops = [("I", [k, f"n{k}", k])]
+        if k:
+            ops.append(("U", [k - 1, UNCHANGED, 100 + k]))
+        b0 += txn(100 + k, ops)
+        fold(ops)
+    fold([("I", [99, "auto", 0])])                  # autocommit row
+    b0.append(encode_insert(OID, [99, "auto", 0]))
+    open_ops = [("I", [50, "open", 1]), ("U", [0, "x", UNCHANGED])]
+    b0 += txn(200, open_ops, commit=False)
+    tail_ops = [("U", [50, UNCHANGED, 2])]
+    b1 = [encode_update(OID, v) for _, v in tail_ops] + [encode_commit()]
+    b1 += txn(201, [("I", [60, "late", 3])], commit=False)
+
+    def check(batch_id, pending):
+        state = spark.read.parquet(sink.table_path("t"))
+        assert {r.id: [r.id, r.name, r.qty] for r in state.collect()} == \
+            model, batch_id
+        buf = spark.read.parquet(sink.table_path(TxnUpsertSink.PENDING))
+        assert sorted((r.offset, r.txn_id) for r in buf.collect()) == \
+            pending, batch_id
+
+    base = len(b0) - 3                              # txn 200's rows
+    apply.apply(spark.createDataFrame(
+        [(i, bytearray(m)) for i, m in enumerate(b0)],
+        "offset long, data binary"), 0)
+    assert apply.commits == set(range(100, 112))
+    check(0, [(base + 1, 200), (base + 2, 200)])
+    apply.apply(spark.createDataFrame(
+        [(1000 + i, bytearray(m)) for i, m in enumerate(b1)],
+        "offset long, data binary"), 1)
+    assert apply.commits == {200}
+    fold(open_ops + tail_ops)
+    check(1, [(1003, 201)])
 
 
 def test_wal_stream_pipeline_txn_atomic_across_segments(spark, tmp_path):
